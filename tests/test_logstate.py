@@ -639,3 +639,27 @@ def test_stream_pipeline_log_fresh_checkpoint_fails_loud(
         stream_pipeline_log(
             spark, log_dirs["in"] + "/*", log_dirs["state"], log_dirs["cp2"]
         )
+
+
+def test_read_pipeline_links_missing_version_fails_loud(spark, tiny_pdf, log_dirs):
+    """A links/ dir that lacks the committed batch's version (deleted
+    outside the writer) raises the curated error with its remediation,
+    not a bare path-not-found from the parquet reader."""
+    import shutil
+
+    from transner_spark.streaming.logstate import (
+        _links_version_path,
+        _read_log_current,
+        read_pipeline_links,
+        stream_pipeline_log,
+    )
+
+    _write_batch(spark, tiny_pdf, log_dirs["in"], 0, 3, "b0")
+    stream_pipeline_log(
+        spark, log_dirs["in"] + "/*", log_dirs["state"], log_dirs["cp"]
+    )
+    _, last_applied, _ = _read_log_current(log_dirs["state"])
+    assert read_pipeline_links(spark, log_dirs["state"]).count() > 0
+    shutil.rmtree(_links_version_path(log_dirs["state"], last_applied))
+    with pytest.raises(RuntimeError, match=f"v{last_applied} is missing.*rebuild"):
+        read_pipeline_links(spark, log_dirs["state"])

@@ -1,0 +1,30 @@
+"""Host-sized defaults of the session factory (functions/session.py)."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from transner_spark.functions.session import MAX_DRIVER_HEAP_GIB, default_driver_memory
+
+GIB_KIB = 2**20
+
+
+def test_default_driver_memory_follows_host_ram():
+    # a 15 GiB host no longer asks for a heap larger than its RAM
+    assert default_driver_memory(15 * GIB_KIB + 123_456) == "7g"
+    assert default_driver_memory(64 * GIB_KIB) == f"{MAX_DRIVER_HEAP_GIB}g"
+    assert default_driver_memory(48 * GIB_KIB) == "24g"
+    assert default_driver_memory(GIB_KIB) == "1g"
+    assert default_driver_memory(512 * 1024) == "1g"
+
+
+@pytest.mark.skipif(not os.path.exists("/proc/meminfo"), reason="no /proc/meminfo")
+def test_default_driver_memory_reads_this_host():
+    with open("/proc/meminfo") as fh:
+        kib = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
+    heap = int(default_driver_memory()[:-1])
+    assert 1 <= heap <= MAX_DRIVER_HEAP_GIB
+    assert heap * GIB_KIB <= max(kib // 2, GIB_KIB)
+

@@ -15,6 +15,38 @@ from pyspark.sql import SparkSession
 from transner_spark.config import PipelineConfig
 
 
+# the heap a large host gets; smaller hosts get a share of their RAM
+MAX_DRIVER_HEAP_GIB = 24
+
+
+def default_driver_memory(mem_total_kib: int | None = None) -> str:
+    """Driver heap for local mode: half of the host's MemTotal, at least
+    1g and at most ``MAX_DRIVER_HEAP_GIB``.
+
+    In local mode the one driver JVM holds every "executor's" storage
+    and execution memory, so a small heap at 1.5M-turn bench scale is
+    heap-bound in the shuffle-heavy post-annotate stages. Measured on
+    the local[8] scaling leg, same code and corpus, going from 8g to
+    24g: triples 23.9s → 2.3s, links 27.7s → 6.2s, leg wall 109.7s →
+    77.5s. A fixed 24g, though, overcommits a smaller host (the Python
+    workers need the other half) and gets the JVM OOM-killed on a big
+    leg, so the heap follows the host's RAM up to that cap. It does not
+    vary with the parallelism level: memory is not the variable a
+    scaling run tests.
+    ``mem_total_kib`` defaults to /proc/meminfo's MemTotal; the cap is
+    used where that file is missing."""
+    if mem_total_kib is None:
+        try:
+            with open("/proc/meminfo") as fh:
+                mem_total_kib = next(
+                    int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+                )
+        except (OSError, StopIteration, ValueError):
+            return f"{MAX_DRIVER_HEAP_GIB}g"
+    gib = mem_total_kib // (2 * 2**20)
+    return f"{min(MAX_DRIVER_HEAP_GIB, max(1, gib))}g"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "transner_spark",
@@ -71,18 +103,12 @@ def get_spark(
         # exchanges, exactly AQE's documented intent for the flag.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # 24g default (was 8g): in local mode the ONE driver JVM holds
-        # every "executor's" storage AND execution memory, so an 8g heap
-        # at 1.5M-turn bench scale is heap-bound in the shuffle-heavy
-        # post-annotate stages (cached array columns + concurrent task
-        # execution memory → GC pressure / spill to this host's
-        # ~116 MB/s disk). Measured on the local[8] scaling leg, same
-        # code and corpus: triples 23.9s → 2.3s, links 27.7s → 6.2s,
-        # leg wall 109.7s → 77.5s after the bump. The heap is FIXED
-        # across parallelism levels (memory is not the variable under
-        # test; a real 4N-executor cluster would bring 4x memory, so a
-        # constant heap only understates 4N's advantage).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # SPARK_DRIVER_MEMORY overrides the host-sized default (see
+        # default_driver_memory for why the heap is large)
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

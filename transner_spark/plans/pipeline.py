@@ -1,10 +1,10 @@
-"""Staged KG pipeline with per-stage commit, per-partition lineage metrics,
+"""Staged KG pipeline with per-stage commit, per-write-task lineage rows,
 and resume-from-last-committed-stage.
 
-Stage graph (each stage reads its inputs from the catalog, writes its
-output table, then appends lineage rows — the Spark analogue of the
-reference's JSON-lines request log, /root/reference/logger.py:5-11,
-upgraded to the north rule's checkpoint-table contract):
+Stage graph (each stage consumes its inputs as read once from the
+catalog, writes its output table, then appends lineage rows — the Spark
+analogue of the reference's JSON-lines request log, upgraded to a
+checkpoint-table contract):
 
     transcripts ─→ annotated ─→ mentions
                         │  └──→ triples ─→ links ─→ canonical ─→ edges ─→ serving
@@ -16,6 +16,13 @@ subj_id joins/aggs read it shuffle-free and point lookups bucket-prune
 (BENCH.md bucketed section) — the KG is born co-located, as part of the
 resumable run rather than a separate job.
 
+Commits cost no Spark job beyond the write itself. Lineage is read from
+the parquet footers of the files the write just committed (one row per
+write task, keyed by the ``part-NNNNN`` task number) and appended on the
+driver as one small file; each committed table is read once per run and
+that DataFrame feeds downstream stages, the serving write and the
+returned dict alike.
+
 On rerun, any stage whose output is already committed (``_SUCCESS``
 present — the Parquet stand-in for an Iceberg snapshot) is skipped; a
 mid-run kill therefore resumes exactly after the last committed stage.
@@ -25,11 +32,15 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import time
 import uuid
+from collections.abc import Callable
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from transner_spark.config import PipelineConfig
 from transner_spark.operators.annotate import (
@@ -59,6 +70,38 @@ STAGES = (
 )
 
 
+LINEAGE_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("stage", pa.string()),
+        ("partition_id", pa.int32()),
+        ("rows_out", pa.int64()),
+        ("wall_ms", pa.float64()),
+        # UTC-adjusted micros: Spark reads it as TIMESTAMP, the same type
+        # as the INT96 column of lineage files Spark itself wrote
+        ("committed_at", pa.timestamp("us", tz="UTC")),
+    ]
+)
+_TASK_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+
+
+def _task_row_counts(path: str) -> dict[int, int]:
+    """Rows per write task of the parquet files committed under ``path``,
+    from their footers. The task number is the ``part-NNNNN`` prefix of
+    Spark's file names, so bucket-suffixed files and ``bucket=``
+    directories sum into the task that wrote them."""
+    counts: dict[int, int] = {}
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            m = _TASK_FILE.match(f)
+            if m:
+                task = int(m[1])
+                rows = pq.read_metadata(os.path.join(root, f)).num_rows
+                counts[task] = counts.get(task, 0) + rows
+    return counts
+
+
 class PipelineRun:
     def __init__(
         self,
@@ -82,26 +125,30 @@ class PipelineRun:
 
     # -- lineage ---------------------------------------------------------
     def _lineage(self, stage: str, wall_ms: float) -> None:
-        """Per-partition row counts of the committed output + wall time.
-        Counting happens on the already-written parquet (metadata-cheap),
-        so the stage computation itself is never re-executed."""
-        out = self.catalog.read(stage)
-        per_part = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows_out"))
-            .withColumn("run_id", F.lit(self.run_id))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("wall_ms", F.lit(float(wall_ms)))
-            .withColumn("committed_at", F.current_timestamp())
-            .select(
-                "run_id", "stage", "partition_id", "rows_out", "wall_ms", "committed_at"
-            )
+        """One lineage row per write task of the stage's committed output:
+        its row count from the parquet footers, plus the write's wall
+        time. Runs on the driver and launches no Spark job; a stage that
+        wrote no file gets a single zero row, so every committed stage
+        is on record."""
+        counts = _task_row_counts(self.catalog.path(stage)) or {0: 0}
+        tasks = sorted(counts)
+        n = len(tasks)
+        rows = pa.table(
+            {
+                "run_id": [self.run_id] * n,
+                "stage": [stage] * n,
+                "partition_id": tasks,
+                "rows_out": [counts[t] for t in tasks],
+                "wall_ms": [float(wall_ms)] * n,
+                "committed_at": [datetime.now(timezone.utc)] * n,
+            },
+            schema=LINEAGE_SCHEMA,
         )
-        self.catalog.append(per_part, "_lineage")
+        self.catalog.append_rows(rows, "_lineage")
 
-    def _commit(self, df: DataFrame, stage: str, partition_by: list[str] | None = None) -> None:
+    def _commit(self, stage: str, write: Callable[[], None]) -> None:
         t0 = time.monotonic()
-        self.catalog.write(df, stage, partition_by=partition_by)
+        write()
         self._lineage(stage, (time.monotonic() - t0) * 1000.0)
         self.stages_run.append(stage)
 
@@ -111,53 +158,67 @@ class PipelineRun:
             return True
         return False
 
+    def _stage(
+        self,
+        stage: str,
+        build: Callable[[], DataFrame],
+        partition_by: list[str] | None = None,
+    ) -> DataFrame:
+        """Commit ``stage`` unless it is already committed, then read it
+        back — the one read of this table in the run."""
+        if not self._done(stage):
+            df = build()
+            self._commit(
+                stage, lambda: self.catalog.write(df, stage, partition_by=partition_by)
+            )
+        return self.catalog.read(stage)
+
     # -- stages ----------------------------------------------------------
     def run(self, transcripts: DataFrame) -> dict[str, DataFrame]:
-        cat, cfg = self.catalog, self.cfg
-
-        if not self._done("annotated"):
-            self._commit(annotate_turns(transcripts, cfg), "annotated")
-        if not self._done("quarantine"):
-            _, rejected = split_quarantine(transcripts, cfg)
-            self._commit(rejected, "quarantine")
-
-        annotated = cat.read("annotated")
-        if not self._done("mentions"):
-            self._commit(explode_mentions(annotated), "mentions")
-        if not self._done("triples"):
-            self._commit(explode_triples(annotated), "triples")
-
-        triples = cat.read("triples")
-        if not self._done("links"):
-            self._commit(link_surfaces(self.spark, node_surfaces(triples), cfg), "links")
-        if not self._done("canonical"):
-            self._commit(canonicalize(cat.read("links")), "canonical")
-        if not self._done("edges"):
-            edges = materialize_edges(triples, cat.read("canonical"), cfg)
-            self._commit(edges, "edges", partition_by=["bucket"])
+        cfg = self.cfg
+        out: dict[str, DataFrame] = {}
+        out["annotated"] = self._stage(
+            "annotated", lambda: annotate_turns(transcripts, cfg)
+        )
+        out["quarantine"] = self._stage(
+            "quarantine", lambda: split_quarantine(transcripts, cfg)[1]
+        )
+        out["mentions"] = self._stage(
+            "mentions", lambda: explode_mentions(out["annotated"])
+        )
+        out["triples"] = self._stage(
+            "triples", lambda: explode_triples(out["annotated"])
+        )
+        out["links"] = self._stage(
+            "links",
+            lambda: link_surfaces(self.spark, node_surfaces(out["triples"]), cfg),
+        )
+        out["canonical"] = self._stage(
+            "canonical", lambda: canonicalize(out["links"])
+        )
+        out["edges"] = self._stage(
+            "edges",
+            lambda: materialize_edges(out["triples"], out["canonical"], cfg),
+            partition_by=["bucket"],
+        )
         if not self._done("serving"):
             # bucketed serving twin of the edge table — bypasses
             # catalog.write (the layout IS the point) but keeps the same
             # lineage + commit bookkeeping; the catalog name is
             # workdir-stable, the durable artifact is the path
-            t0 = time.monotonic()
-            write_edges_bucketed(
-                cat.read("edges"),
-                self.serving_table,
-                cat.path("serving"),
-                cfg,
+            self._commit(
+                "serving",
+                lambda: write_edges_bucketed(
+                    out["edges"], self.serving_table, self.catalog.path("serving"), cfg
+                ),
             )
-            self._lineage("serving", (time.monotonic() - t0) * 1000.0)
-            self.stages_run.append("serving")
         else:
             # resumed run / fresh session: the files are committed but
             # the bucket spec is session-catalog metadata — re-attach it
             # so downstream reads keep the zero-Exchange property
             ensure_edges_bucketed_table(
-                self.spark, self.serving_table, cat.path("serving"), cfg
+                self.spark, self.serving_table, self.catalog.path("serving"), cfg
             )
-
-        out = {s: cat.read(s) for s in STAGES if s != "serving"}
         # read through the catalog entry (never the bare path): the
         # bucketed distribution only exists via the table metadata
         out["serving"] = self.spark.table(self.serving_table)

@@ -13,7 +13,10 @@ the north rule, minus Iceberg's atomicity guarantees (documented).
 from __future__ import annotations
 
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -59,8 +62,18 @@ class Catalog:
         else:
             writer.parquet(self.path(table))
 
-    def append(self, df: DataFrame, table: str) -> None:
+    def append_rows(self, rows: pa.Table, table: str) -> None:
+        """Append a small driver-side table. On the Parquet backend this
+        writes one file locally — no Spark job — renamed into place so a
+        concurrent reader never sees it half-written."""
         if self.use_iceberg:  # pragma: no cover
+            df = self.spark.createDataFrame(rows.to_pandas())
             df.write.mode("append").format("iceberg").save(self.path(table))
-        else:
-            df.write.mode("append").parquet(self.path(table))
+            return
+        p = self.path(table)
+        os.makedirs(p, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(p, f".{name}.tmp")
+        pq.write_table(rows, tmp)
+        os.replace(tmp, os.path.join(p, name))
+        open(os.path.join(p, "_SUCCESS"), "a").close()

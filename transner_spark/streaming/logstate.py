@@ -996,7 +996,14 @@ def read_pipeline_links(spark: SparkSession, state_dir: str) -> DataFrame:
     _, last_applied, _ = _read_log_current(state_dir)
     if last_applied < 0:
         raise ValueError(f"no committed pipeline state in {state_dir!r}")
-    _live_link_versions(state_dir, last_applied)  # loud links/ check
+    if last_applied not in _live_link_versions(state_dir, last_applied):
+        raise RuntimeError(
+            f"link version v{last_applied} is missing from {state_dir!r} "
+            f"although the edge log committed batch {last_applied} — the "
+            "link state was deleted outside the writer and cannot be "
+            "recovered from the edge log; rebuild it by rerunning "
+            "stream_pipeline_log into a fresh state and checkpoint dir."
+        )
     return spark.read.parquet(_links_version_path(state_dir, last_applied))
 
 
