@@ -1401,46 +1401,6 @@ def q_stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_stream_edges_batch_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming KG maintenance gate: split the corpus into 4 files, run
-    ``stream_edge_increments`` one-file-per-micro-batch (each batch's
-    edge increment MERGED into the maintained table via the incremental
-    monoid, against the batch-computed canonical map — the two-speed
-    design), and compare the final maintained table to the whole-corpus
-    SQL edge derivation. Proves the streaming path lands on EXACTLY the
-    batch answer regardless of micro-batch boundaries."""
-    import shutil
-    import tempfile
-
-    from transner_spark.operators.canonicalize import canonicalize
-    from transner_spark.sources.transcripts import ensure_transcripts_parquet
-    from transner_spark.streaming.incremental import (
-        current_edge_state,
-        stream_edge_increments,
-    )
-
-    src = ensure_transcripts_parquet(REPO, sf_dir)
-    canon = canonicalize(_links(spark, sf_dir))
-    work = tempfile.mkdtemp(prefix="stream_edges_gate_")
-    try:
-        in_dir = os.path.join(work, "in")
-        spark.read.parquet(src).repartition(4).write.parquet(in_dir)
-        state = os.path.join(work, "edges")
-        stream_edge_increments(
-            spark, in_dir, state, os.path.join(work, "ck"), canon
-        )
-        out = _select_edge_cols(
-            spark.read.parquet(current_edge_state(state)[0])
-        ).toPandas()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        out,
-        "subj_id string, pred string, obj_id string, weight long, "
-        "first_epoch long, last_epoch long",
-    )
-
-
 def _stream_log_gate(
     spark: SparkSession, sf_dir: str, run_stream, read_result, schema: str
 ) -> DataFrame:
@@ -1471,11 +1431,12 @@ def _stream_log_gate(
 
 
 def q_stream_edges_log_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log-structured streaming maintenance gate (streaming/logstate):
-    same 4-file micro-batch split as stream_edges_batch_eq, but each
-    batch APPENDS an increment-sized segment instead of rewriting the
-    maintained table. The merge-on-read state must equal the
-    whole-corpus SQL edge derivation regardless of micro-batch
+    """Streaming KG maintenance gate (streaming/logstate): split the
+    corpus into 4 files and run ``stream_edge_increments_log``
+    one-file-per-micro-batch against the batch-computed canonical map —
+    each batch APPENDS an increment-sized segment, with inline
+    compaction at 3 live segments. The merge-on-read state must equal
+    the whole-corpus SQL edge derivation regardless of micro-batch
     boundaries or compaction points."""
     from transner_spark.streaming.logstate import (
         read_edge_log,
@@ -2147,7 +2108,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_pagerank": q_graph_pagerank,
         "graph_two_hop": q_graph_two_hop,
         "graph_neighbors_topk": q_graph_neighbors_topk,
-        "stream_edges_batch_eq": q_stream_edges_batch_eq,
         "stream_windowed_counts_modes": q_stream_windowed_counts_modes,
         # -- new this round --
         "stream_edges_log_eq": q_stream_edges_log_eq,
@@ -2191,6 +2151,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mentions_ner": q_mentions_ner,
         "mentions_regex": q_mentions_regex,
         "graf_merge": q_graf_merge,
+        "kg_mentions": q_kg_mentions,
         # ---- position 50 ends here; every gate below either has green
         # driver rows in at least two of r01-r03, OR (the consolidation
         # exception, flagged per entry) is a per-method twin whose
@@ -2245,8 +2206,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # pinned via kg_edges_e2e's full-chain SQL and the in-window
         # eval_edges_prf / kg_cooccurrence / edge_provenance gates that
         # all re-derive from the triples golden) rotates out for
-        # edge_provenance ----
-        "kg_mentions": q_kg_mentions,
+        # edge_provenance. Then stream_edges_batch_eq left the registry
+        # with its snapshot-layout operator (stream_edges_log_eq keeps
+        # the same whole-corpus edge oracle in-window), and the freed
+        # slot rotates kg_mentions back in: it headed the tail and its
+        # newest driver row is r03 ----
         "kg_links": q_kg_links,
         "kg_canonical": q_kg_canonical,
         "kg_triples": q_kg_triples,
@@ -2419,18 +2383,16 @@ SELECT 'ivf' AS method, * FROM ({out["ann_recall_ivf"]})
             ensure_alias_dim_parquet(REPO),
         )
     )
-    # streaming maintenance twin of kg_edges: the maintained table must
-    # equal the whole-corpus derivation whatever the micro-batching
+    # streaming maintenance twin of kg_edges: append + compact +
+    # merge-on-read must equal the whole-corpus derivation whatever the
+    # micro-batching
     from transner_spark.oracles import kg_edges_sql
 
-    out["stream_edges_batch_eq"] = kg_edges_sql(
+    out["stream_edges_log_eq"] = kg_edges_sql(
         f"read_parquet('{g('triples')}')",
         f"read_parquet('{g('canonical')}')",
         cache,
     )
-    # log-structured twin: append + compact + merge-on-read must land on
-    # the same whole-corpus derivation
-    out["stream_edges_log_eq"] = out["stream_edges_batch_eq"]
     # time-travel + changelog twin: AS OF batch 2 of the 4 md5-quartile
     # micro-batches ≡ the derivation over the first three quartiles'
     # conversations, and the changelog read (1, 3] ≡ the derivation over

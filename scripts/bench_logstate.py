@@ -1,21 +1,15 @@
 """Write-amplification evidence for the log-structured edge state.
 
-Feeds the sf corpus to the two streaming maintenance layouts one
-micro-batch at a time and measures what each COMMIT physically writes:
-
-- snapshot layout (``stream_edge_increments``): every batch rewrites the
-  whole accumulated table — per-batch bytes grow with the table, total
-  written across k batches is ~k/2 x the final table;
-- log layout (``stream_edge_increments_log``): every batch appends an
-  increment-sized segment — per-batch bytes are O(batch); the total
-  (including each compaction's one-off table-sized rewrite, which this
-  script measures and reports separately) stays a small constant
-  multiple of the final table, versus the snapshot layout's multiple
-  that GROWS with the batch count.
+Feeds the sf corpus to ``stream_edge_increments_log`` one micro-batch at
+a time and measures what each COMMIT physically writes: an
+increment-sized segment, so per-batch bytes are O(batch). The total
+(including the compaction's one-off table-sized rewrite, which this
+script measures and reports separately) is reported as a multiple of
+the final maintained table — the write amplification.
 
 Also times the read path the log layout trades for its cheap writes:
-merge-on-read over k live segments vs after ``compact_edge_log`` vs the
-snapshot table's plain scan — the LSM read-amplification knob, measured.
+merge-on-read over k live segments vs after ``compact_edge_log`` — the
+LSM read-amplification knob, measured.
 
 Results go into a marker-delimited BENCH.md section.
 Usage: python scripts/bench_logstate.py [sf_dir]
@@ -81,10 +75,6 @@ def main() -> None:
         ensure_transcripts_parquet,
         sf_name,
     )
-    from transner_spark.streaming.incremental import (
-        current_edge_state,
-        stream_edge_increments,
-    )
     from transner_spark.streaming.logstate import (
         compact_edge_log,
         log_edge_segments,
@@ -105,96 +95,63 @@ def main() -> None:
         parts = sorted(glob.glob(os.path.join(splits, "part-*.parquet")))
         assert len(parts) == N_BATCHES
 
-        per_batch: dict[str, list[int]] = {"snapshot": [], "log": []}
-        runners = {
-            "snapshot": lambda ind, st, cp: stream_edge_increments(
-                spark, ind, st, cp, canon, max_files_per_trigger=1
-            ),
-            "log": lambda ind, st, cp: stream_edge_increments_log(
-                spark, ind, st, cp, canon, max_files_per_trigger=1
-            ),
-        }
-        for layout, run in runners.items():
-            in_dir = os.path.join(work, layout, "in")
-            state = os.path.join(work, layout, "state")
-            cp = os.path.join(work, layout, "ck")
-            os.makedirs(in_dir)
-            for i, p in enumerate(parts):
-                shutil.copy(p, os.path.join(in_dir, f"b{i:02d}.parquet"))
-                run(in_dir, state, cp)
-                if layout == "snapshot":
-                    live, _ = current_edge_state(state)
-                    per_batch[layout].append(du(live))
-                else:
-                    segs, bid = log_edge_segments(state)
-                    (new_seg,) = [s for s in segs if s.endswith(f"s{bid}")]
-                    per_batch[layout].append(du(new_seg))
+        in_dir = os.path.join(work, "in")
+        state = os.path.join(work, "state")
+        cp = os.path.join(work, "ck")
+        os.makedirs(in_dir)
+        per_batch: list[int] = []
+        for i, p in enumerate(parts):
+            shutil.copy(p, os.path.join(in_dir, f"b{i:02d}.parquet"))
+            stream_edge_increments_log(
+                spark, in_dir, state, cp, canon, max_files_per_trigger=1
+            )
+            segs, bid = log_edge_segments(state)
+            (new_seg,) = [s for s in segs if s.endswith(f"s{bid}")]
+            per_batch.append(du(new_seg))
 
-        snap_state = os.path.join(work, "snapshot", "state")
-        log_state = os.path.join(work, "log", "state")
-        n_live = len(log_edge_segments(log_state)[0])
-        _, r_snap = timed_count(
-            lambda: spark.read.parquet(current_edge_state(snap_state)[0])
-        )
-        n_log, r_log = timed_count(lambda: read_edge_log(spark, log_state))
-        compacted = compact_edge_log(spark, log_state)
-        # the compaction's base-segment rewrite is real write cost —
-        # charge it to the log layout's total (review r4)
-        compact_bytes = du(log_edge_segments(log_state)[0][0])
-        _, r_compact = timed_count(lambda: read_edge_log(spark, log_state))
-
-        tot = {k: sum(v) for k, v in per_batch.items()}
-        tot["log"] += compact_bytes
-        final = du(current_edge_state(snap_state)[0])
+        n_live = len(log_edge_segments(state)[0])
+        n_edges, r_log = timed_count(lambda: read_edge_log(spark, state))
+        compacted = compact_edge_log(spark, state)
+        # the compacted base segment IS the final maintained table; its
+        # rewrite is real write cost, charged to the total
+        final = du(log_edge_segments(state)[0][0])
+        _, r_compact = timed_count(lambda: read_edge_log(spark, state))
+        total = sum(per_batch) + final
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
     mib = lambda b: b / (1024 * 1024)  # noqa: E731
-    rows = [
-        f"| snapshot (`stream_edge_increments`) | {mib(tot['snapshot']):.1f} | "
-        f"{mib(per_batch['snapshot'][0]):.2f} → {mib(per_batch['snapshot'][-1]):.2f} | "
-        f"{tot['snapshot'] / final:.1f}x | {r_snap:.2f} |",
-        f"| log (`stream_edge_increments_log`, incl. one compaction "
-        f"rewrite of {mib(compact_bytes):.2f}) | {mib(tot['log']):.1f} | "
-        f"{mib(per_batch['log'][0]):.2f} → {mib(per_batch['log'][-1]):.2f} | "
-        f"{tot['log'] / final:.1f}x | {r_log:.2f} ({n_live} segs) / "
-        f"{r_compact:.2f} compacted |",
-    ]
     body = "\n".join(
         [
             "## Log-structured edge state: write amplification (measured)",
             "",
-            f"Corpus {sf_name(sf_dir)} fed as {N_BATCHES} micro-batches to both "
-            "streaming maintenance layouts (same canon map, same input "
-            "order). 'bytes written' is what each COMMIT physically wrote "
-            "(the live version dir / the new segment); final maintained "
-            f"table = {mib(final):.1f} MiB, {n_log} edges. Read walls use "
-            "the warm+steady protocol.",
+            f"Corpus {sf_name(sf_dir)} fed as {N_BATCHES} micro-batches to "
+            "`stream_edge_increments_log`, then one `compact_edge_log`. "
+            "'bytes written' is what each COMMIT physically wrote (the new "
+            "segment, plus the compaction's base segment); final "
+            f"maintained table = {mib(final):.2f} MiB, {n_edges} edges. "
+            "Read walls use the warm+steady protocol.",
             "",
-            "| layout | total written (MiB) | per-batch first → last (MiB) "
+            "| total written (MiB) | per-batch first → last (MiB) "
             "| write amp vs final table | read wall (s) |",
-            "| --- | --- | --- | --- | --- |",
-            *rows,
+            "| --- | --- | --- | --- |",
+            f"| {mib(total):.1f} | {mib(per_batch[0]):.2f} → "
+            f"{mib(per_batch[-1]):.2f} | {total / final:.1f}x | "
+            f"{r_log:.2f} ({n_live} segs) / {r_compact:.2f} compacted |",
             "",
-            f"The snapshot layout's per-batch write GROWS with the table "
-            f"(O(table) per commit — "
-            f"{tot['snapshot'] / max(tot['log'], 1):.1f}x the log layout's "
-            f"total here, and unbounded as the corpus accumulates); the log "
-            f"layout writes each increment once (O(batch)) and pays for it "
-            f"on read until compaction folds {compacted} segments into one "
-            f"base. At 10^12-turn scale the maintained KG dwarfs any "
-            f"micro-batch, so O(table)-per-commit is not viable — the log "
-            f"layout + periodic compaction is the Iceberg/Delta "
-            f"merge-on-read pattern, with value-equality to the batch "
-            f"rollup pinned by the stream_edges_log_eq gate and "
-            f"tests/test_logstate.py.",
+            "Each batch writes its increment once (O(batch), flat across "
+            "batches), and the table is rewritten only when compaction "
+            f"folds {compacted} segments into one base; reads pay for the "
+            "live segments until then. Value-equality to the batch rollup "
+            "is pinned by the stream_edges_log_eq gate and "
+            "tests/test_logstate.py.",
         ]
     )
     upsert_section(os.path.join(REPO, "BENCH.md"), body)
     print(
-        f"snapshot: {mib(tot['snapshot']):.1f} MiB written, read {r_snap:.2f}s | "
-        f"log: {mib(tot['log']):.1f} MiB written, read {r_log:.2f}s "
-        f"({n_live} segs) / {r_compact:.2f}s compacted"
+        f"log: {mib(total):.1f} MiB written ({total / final:.1f}x the final "
+        f"table), read {r_log:.2f}s ({n_live} segs) / {r_compact:.2f}s "
+        "compacted"
     )
 
 

@@ -1,7 +1,7 @@
 """Log-structured streaming edge state (streaming/logstate.py):
 O(batch) segment appends, merge-on-read equality with the batch rollup,
-amortized compaction, and the same crash/identity guarantees as the
-snapshot layout."""
+amortized compaction, and the crash/checkpoint-identity guarantees of
+the manifest + CURRENT commit protocol."""
 
 from __future__ import annotations
 
@@ -80,8 +80,8 @@ def test_log_state_merge_on_read_equals_batch(spark, tiny_pdf, tiny_df, log_dirs
     )
 
     # O(batch) writes: two live segments, and their combined stored rows
-    # equal the two increments' rows (the snapshot layout would have
-    # rewritten increment-1's edges a second time inside commit 2)
+    # equal the two increments' rows (a full-table rewrite per commit
+    # would have stored increment-1's edges a second time in commit 2)
     segs, last = log_edge_segments(d["state"])
     assert len(segs) == 2 and last >= 1
     stored = sum(spark.read.parquet(s).count() for s in segs)
@@ -267,9 +267,10 @@ def test_log_substrate_generalizes_to_profile_partials(
 
 
 def test_log_state_checkpoint_identity_guard(spark, tiny_pdf, tiny_df, log_dirs):
-    """Same loud-failure contract as the snapshot layout: a different
-    (or recreated) checkpoint against existing state raises instead of
-    silently dropping batches, and the committed state is untouched."""
+    """A different (or recreated) checkpoint against existing state —
+    or a legacy two-field CURRENT with no recorded identity — raises
+    instead of silently dropping batches, and the committed state is
+    untouched."""
     import shutil
 
     from transner_spark.streaming.logstate import (
@@ -289,6 +290,22 @@ def test_log_state_checkpoint_identity_guard(spark, tiny_pdf, tiny_df, log_dirs)
             spark, d["in"] + "/*", d["state"], d["cp2"], canon
         )
     assert log_edge_segments(d["state"]) == committed
+
+    # a LEGACY two-field CURRENT (no recorded identity) is just as
+    # uncomparable: rewrite the pointer without its identity field and
+    # expect the same loud failure even under the ORIGINAL checkpoint
+    cur = os.path.join(d["state"], "CURRENT")
+    with open(cur) as fh:
+        current_line = fh.read()
+    with open(cur, "w") as fh:
+        fh.write(" ".join(current_line.split()[:2]))
+    with pytest.raises(Exception, match="different checkpoint"):
+        stream_edge_increments_log(
+            spark, d["in"] + "/*", d["state"], d["cp"], canon
+        )
+    assert log_edge_segments(d["state"]) == committed
+    with open(cur, "w") as fh:
+        fh.write(current_line)
 
     # recreated-at-same-path checkpoint: ids restart, identity differs
     shutil.rmtree(d["cp"])
@@ -543,7 +560,7 @@ def test_stream_pipeline_log_equals_batch(spark, tiny_pdf, tiny_df, log_dirs):
     rerun changes nothing."""
     from transner_spark.streaming.logstate import (
         LINKS_DIR,
-        _read_log_current,
+        _read_current,
         read_pipeline_edges,
         read_pipeline_links,
         stream_pipeline_log,
@@ -564,7 +581,7 @@ def test_stream_pipeline_log_equals_batch(spark, tiny_pdf, tiny_df, log_dirs):
         assert got == want, f"prefix {name} diverged"
 
     # link-state hygiene: only the previous + current versions survive
-    _, last_applied, _ = _read_log_current(log_dirs["state"])
+    _, last_applied, _ = _read_current(log_dirs["state"])
     live = sorted(os.listdir(os.path.join(log_dirs["state"], LINKS_DIR)))
     assert live == [f"v{last_applied - 1}", f"v{last_applied}"]
     # the maintained link table equals the full recompute (values)
@@ -649,7 +666,7 @@ def test_read_pipeline_links_missing_version_fails_loud(spark, tiny_pdf, log_dir
 
     from transner_spark.streaming.logstate import (
         _links_version_path,
-        _read_log_current,
+        _read_current,
         read_pipeline_links,
         stream_pipeline_log,
     )
@@ -658,7 +675,7 @@ def test_read_pipeline_links_missing_version_fails_loud(spark, tiny_pdf, log_dir
     stream_pipeline_log(
         spark, log_dirs["in"] + "/*", log_dirs["state"], log_dirs["cp"]
     )
-    _, last_applied, _ = _read_log_current(log_dirs["state"])
+    _, last_applied, _ = _read_current(log_dirs["state"])
     assert read_pipeline_links(spark, log_dirs["state"]).count() > 0
     shutil.rmtree(_links_version_path(log_dirs["state"], last_applied))
     with pytest.raises(RuntimeError, match=f"v{last_applied} is missing.*rebuild"):

@@ -52,12 +52,12 @@ from transner_spark.streaming.logstate import (
     _commit,
     _manifest_seq,
     _persist_retention,
+    _read_current,
     _read_manifest,
     _resolve_asof,
     _state_retention,
     expire_snapshots,
 )
-from transner_spark.streaming.incremental import _read_current
 
 CK = "model-ck"
 

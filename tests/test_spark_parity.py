@@ -104,20 +104,6 @@ def test_mention_invariants(annotated):
         assert 0.0 <= r.confidence <= 1.0
 
 
-def test_lsh_linking_subset(spark, annotated):
-    """The MinHash-LSH scale path: every pair it links must agree with the
-    deterministic path on entity_key (recall may be lower, never precision)."""
-    from transner_spark.operators.linking import link_surfaces_lsh
-
-    surfaces = node_surfaces(explode_triples(annotated))
-    det = link_surfaces(spark, surfaces).where(F.col("method") != "none").toPandas()
-    lsh = link_surfaces_lsh(spark, surfaces).toPandas()
-    det_map = dict(zip(det["norm_key"], det["entity_key"]))
-    assert len(lsh) > 0
-    for r in lsh.itertuples(index=False):
-        assert det_map.get(r.norm_key) == r.entity_key
-
-
 def test_merge_edge_increments_identity(spark):
     """The monoid identity behind incremental maintenance: merging
     per-batch edge tables equals materializing the whole triple stream

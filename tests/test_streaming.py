@@ -212,93 +212,3 @@ def test_append_mode_drops_late_data(spark, tmp_path):
     ).awaitTermination()
     final = {tuple(r) for r in spark.read.parquet(out_dir).collect()}
     assert final == before  # nothing re-emitted, nothing updated
-
-
-def test_stream_edge_increments_maintenance(spark, tiny_pdf, tiny_df, stream_dirs):
-    """The maintained edge table equals the batch rollup after each
-    arrival; a rerun with no new files is a no-op (exactly-once per
-    input file), and a new file merges only its increment."""
-    import pyspark.sql.functions as F
-
-    from transner_spark.operators.annotate import annotate_turns, explode_triples
-    from transner_spark.operators.canonicalize import canonicalize
-    from transner_spark.operators.linking import link_surfaces, node_surfaces
-    from transner_spark.operators.materialize import materialize_edges
-    from transner_spark.streaming.incremental import (
-        current_edge_state,
-        stream_edge_increments,
-    )
-
-    d = stream_dirs
-    state = d["out"] + "_edges"
-    t_all = explode_triples(annotate_turns(tiny_df))
-    canon = canonicalize(link_surfaces(spark, node_surfaces(t_all)))
-
-    def batch_edges(lo, hi):
-        part = tiny_df.where(
-            (F.col("turn_idx") >= lo) & (F.col("turn_idx") < hi)
-        )
-        return materialize_edges(explode_triples(annotate_turns(part)), canon)
-
-    def snap(df):
-        cols = ["subj_id", "pred", "obj_id", "weight", "first_ts", "last_ts"]
-        return sorted(map(tuple, df.select(cols).collect()))
-
-    def state_df():
-        return spark.read.parquet(current_edge_state(state)[0])
-
-    _write_batch(spark, tiny_pdf, d["in"], 0, 3, "b0")
-    stream_edge_increments(spark, d["in"] + "/*", state, d["cp"], canon)
-    assert snap(state_df()) == snap(batch_edges(0, 3))
-
-    # rerun, nothing new → identical state (no double-merge)
-    before = snap(state_df())
-    stream_edge_increments(spark, d["in"] + "/*", state, d["cp"], canon)
-    assert snap(state_df()) == before
-
-    # new file → maintained table becomes the whole-corpus rollup
-    _write_batch(spark, tiny_pdf, d["in"], 3, 5, "b1")
-    stream_edge_increments(spark, d["in"] + "/*", state, d["cp"], canon)
-    assert snap(state_df()) == snap(batch_edges(0, 5))
-
-    # a re-delivered batch id is a committed no-op: CURRENT carries the
-    # last applied id in the same atomic pointer as the data
-    path, last = current_edge_state(state)
-    assert last >= 0 and path.endswith(f"v{last}")
-
-    # pointing a DIFFERENT checkpoint at the same state dir fails loud:
-    # its batch ids restart at 0, so the last-applied guard would
-    # silently drop new batches (ADVICE r3) — the identity recorded in
-    # CURRENT must match the running query's checkpoint
-    _write_batch(spark, tiny_pdf, d["in"], 5, 7, "b2")
-    with pytest.raises(Exception, match="different checkpoint"):
-        stream_edge_increments(spark, d["in"] + "/*", state, d["cp2"], canon)
-    # and the committed state is untouched by the refused run
-    assert current_edge_state(state) == (path, last)
-
-    # a LEGACY two-field CURRENT (no recorded identity) is just as
-    # uncomparable — the guard must not silently bypass it (review r4):
-    # rewrite the pointer without the identity field and expect the
-    # same loud failure even under the ORIGINAL checkpoint
-    with open(os.path.join(state, "CURRENT")) as fh:
-        current_line = fh.read()
-    vname_cur, last_s = current_line.split()[:2]
-    with open(os.path.join(state, "CURRENT"), "w") as fh:
-        fh.write(f"{vname_cur} {last_s}")
-    with pytest.raises(Exception, match="different checkpoint"):
-        stream_edge_increments(spark, d["in"] + "/*", state, d["cp"], canon)
-
-    # a checkpoint DELETED AND RECREATED AT THE SAME PATH restarts batch
-    # ids at 0 under a fresh query id — the identity must come from the
-    # checkpoint's metadata, not its path, for the guard to see this
-    # (review r4): restore the full pointer, nuke the checkpoint, expect
-    # the same loud failure instead of silent batch drops
-    import shutil as _shutil
-
-    with open(os.path.join(state, "CURRENT"), "w") as fh:
-        fh.write(current_line)
-    _shutil.rmtree(d["cp"])
-    _write_batch(spark, tiny_pdf, d["in"], 7, 9, "b3")
-    with pytest.raises(Exception, match="different checkpoint"):
-        stream_edge_increments(spark, d["in"] + "/*", state, d["cp"], canon)
-    assert current_edge_state(state) == (path, last)

@@ -31,9 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from transner_spark.config import PipelineConfig
-from transner_spark.data.aliases import build_alias_rows
 from transner_spark.kernels.oracle import STRUCTURAL_TYPES
-from transner_spark.kernels.triples import normalize_surface
 
 
 def node_surfaces(triples: DataFrame) -> DataFrame:
@@ -47,8 +45,8 @@ def node_surfaces(triples: DataFrame) -> DataFrame:
     # nulls/empties are stripped INSIDE the array expression (not by a
     # row filter after the explode): a plan-level filter can be
     # reordered around downstream deterministic UDF projections by the
-    # optimizer (observed: MinHashLSH's HashingTF NPEing on a null key
-    # in the join plan), while an expression-level filter guarantees no
+    # optimizer (observed: a pyspark.ml HashingTF NPEing on a null key
+    # in a join plan), while an expression-level filter guarantees no
     # stage ever materializes a null norm_key
     keys = F.filter(
         F.array(
@@ -271,62 +269,6 @@ def link_surfaces(
         exact.where(F.col("method") == "exact")
         .unionByName(fuzzy)
         .unionByName(unmatched)
-    )
-
-
-def link_surfaces_lsh(
-    spark: SparkSession,
-    surfaces: DataFrame,
-    cfg: PipelineConfig | None = None,
-    num_hash_tables: int = 8,
-) -> DataFrame:
-    """MinHash-LSH candidate generation (pyspark.ml) — the scale path for
-    alias dictionaries too large for a broadcast gram index.
-
-    approxSimilarityJoin prunes candidate pairs probabilistically; the
-    survivors are re-scored with the SAME exact n-gram Jaccard as the
-    deterministic path, so precision is identical and only recall is
-    probabilistic. Used by the benchmark; correctness tests pin the
-    deterministic path.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    cfg = cfg or PipelineConfig()
-    n = cfg.link_ngram
-
-    alias_rows = [
-        (i, ek, al, normalize_surface(al))
-        for i, (ek, al, _ty) in enumerate(build_alias_rows())
-    ]
-    aliases = spark.createDataFrame(
-        alias_rows, "alias_id long, entity_key string, alias string, norm string"
-    )
-    a = with_grams(aliases, "norm", n)
-    m = with_grams(surfaces, "norm_key", n)
-
-    tf = HashingTF(inputCol="grams", outputCol="features", numFeatures=1 << 18)
-    a_feat = tf.transform(a).where(F.size("grams") > 0)
-    m_feat = tf.transform(m).where(F.size("grams") > 0)
-
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes",
-                     numHashTables=num_hash_tables, seed=42)
-    model = lsh.fit(a_feat)
-    pairs = model.approxSimilarityJoin(
-        m_feat, a_feat, 1.0 - cfg.link_jaccard_threshold, distCol="jaccard_dist"
-    )
-    scored = pairs.select(
-        F.col("datasetA.norm_key").alias("norm_key"),
-        F.col("datasetB.entity_key").alias("entity_key"),
-        F.col("datasetB.alias").alias("alias"),
-        (F.lit(1.0) - F.col("jaccard_dist")).alias("score"),
-    ).where(F.col("score") >= cfg.link_jaccard_threshold)
-    w = Window.partitionBy("norm_key").orderBy(
-        F.col("score").desc(), F.col("entity_key").asc(), F.col("alias").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("norm_key", "entity_key", "score", F.lit("lsh").alias("method"))
     )
 
 

@@ -1,13 +1,9 @@
 """Log-structured streaming edge state: O(batch) writes, merge-on-read,
 amortized compaction.
 
-``stream_edge_increments`` (streaming/incremental.py) maintains the edge
-table as a full snapshot per micro-batch — simple and atomic, but every
-commit REWRITES the whole accumulated table, so per-batch write cost is
-O(table). At 10^12-turn scale that is the wrong asymptote: a maintained
-KG's steady state is tiny increments against a huge table, and the
-production pattern (Iceberg/Delta merge-on-read, LSM trees, Kafka
-compacted topics) is the opposite split:
+A maintained KG's steady state is tiny increments against a huge table,
+so the state is kept in the production pattern for that split
+(Iceberg/Delta merge-on-read, LSM trees, Kafka compacted topics):
 
 - **append**: each micro-batch writes ONLY its increment-sized edge
   segment (``segments/s{batch_id}``) — per-batch write cost is O(batch),
@@ -18,11 +14,10 @@ compacted topics) is the opposite split:
   hash aggregate whose input is the segment rows;
 - **compaction**: when the live-segment count passes a threshold (or on
   an explicit ``compact_edge_log`` call) the segments are rolled up once
-  into a single base segment, restoring O(1)-segment reads — the
-  amortized rewrite the snapshot layout pays on EVERY batch.
+  into a single base segment, restoring O(1)-segment reads — a
+  table-sized rewrite paid once per compaction, never once per batch.
 
-Commit protocol (same family as stream_edge_increments, extended with a
-manifest level — the filesystem mirror of a table format's snapshot +
+Commit protocol (the filesystem mirror of a table format's snapshot +
 manifest-list):
 
 - segment dirs are named by batch id and written with
@@ -31,7 +26,7 @@ manifest-list):
 - each commit writes an immutable ``MANIFEST.{n}`` (one live segment
   path per line, tmp + ``os.replace``), then atomically swings
   ``CURRENT`` — which records the manifest name, the last applied batch
-  id, and the CHECKPOINT IDENTITY (see stream_edge_increments: batch
+  id, and the CHECKPOINT IDENTITY (see ``_checkpoint_identity``: batch
   ids are only monotone within one checkpoint's sequence, so a
   fresh/recreated checkpoint against existing state fails loud instead
   of silently dropping batches);
@@ -94,14 +89,53 @@ from pyspark.sql import DataFrame, SparkSession
 
 from transner_spark.config import PipelineConfig
 from transner_spark.operators.annotate import annotate_turns
-from transner_spark.streaming.incremental import (
-    TRANSCRIPT_SCHEMA,
-    _checkpoint_identity,
-    _read_current as _read_log_current,  # same CURRENT format (3 fields)
-)
+from transner_spark.streaming.incremental import TRANSCRIPT_SCHEMA
 
 SEGMENTS_DIR = "segments"
 MANIFEST_PREFIX = "MANIFEST."
+
+
+def _checkpoint_identity(checkpoint_dir: str) -> str:
+    """Stable identity of a streaming checkpoint: the query id Spark
+    records in ``<checkpoint>/metadata`` at stream start.
+
+    ``CURRENT`` records it next to the last applied batch id because
+    batch ids are only monotone within one checkpoint's id sequence:
+    pointing a fresh, relocated or recreated checkpoint (whose ids
+    restart at 0) at an existing state dir would make the
+    ``batch_id <= last_applied`` re-delivery skip silently drop
+    genuinely new batches. A writer whose identity differs from the
+    committed one — or that finds a legacy two-field ``CURRENT`` with
+    no recorded identity, which is just as uncomparable — fails loud
+    instead.
+
+    A path digest is NOT enough: a checkpoint deleted and recreated at
+    the SAME path restarts batch ids at 0 but keeps its digest, so the
+    guard would silently drop new batches — exactly the failure it
+    exists to make loud. The metadata query id is regenerated with the
+    checkpoint, so recreation is detected. Callers resolve this from
+    INSIDE foreachBatch (StreamExecution writes the file at query
+    start, before the first batch); a missing/unreadable metadata there
+    is itself an error worth raising. The uuid is whitespace-free —
+    safe inside the CURRENT line."""
+    import json as _json
+
+    with open(os.path.join(checkpoint_dir, "metadata")) as fh:
+        return str(_json.load(fh)["id"])
+
+
+def _read_current(state_dir: str) -> tuple[str | None, int, str | None]:
+    """(manifest name, last applied batch id, checkpoint identity) from
+    the CURRENT pointer; (None, -1, None) if nothing committed. A legacy
+    two-field pointer yields identity None."""
+    cur = os.path.join(state_dir, "CURRENT")
+    if not os.path.exists(cur):
+        return None, -1, None
+    with open(cur) as fh:
+        fields = fh.read().split()
+    vname, bid = fields[0], int(fields[1])
+    ck_id = fields[2] if len(fields) > 2 else None
+    return vname, bid, ck_id
 
 
 @contextlib.contextmanager
@@ -173,7 +207,7 @@ def log_segments(state_dir: str) -> tuple[list[str], int]:
     layout): (absolute segment paths, last applied batch id), or
     ([], -1) if no commit yet. Readers go through this instead of
     assuming a layout."""
-    manifest, bid, _ = _read_log_current(state_dir)
+    manifest, bid, _ = _read_current(state_dir)
     if manifest is None:
         return [], -1
     rels = _read_manifest(state_dir, manifest)
@@ -198,9 +232,8 @@ def read_edge_log(
     spark: SparkSession, state_dir: str, cfg: PipelineConfig | None = None
 ) -> DataFrame | None:
     """Merge-on-read over an edge-state dir via the edge monoid. The
-    result is value-identical to the snapshot layout's maintained
-    table — the stream_edges_log_eq gate checks it against the
-    whole-corpus SQL derivation."""
+    result is the whole maintained edge table — the stream_edges_log_eq
+    gate checks it against the whole-corpus SQL derivation."""
     from transner_spark.operators.materialize import merge_edge_increments
 
     return _read_log(
@@ -230,7 +263,7 @@ def _resolve_asof(state_dir: str, batch_id: int) -> str:
     silently answering from a different snapshot."""
     import json as _json
 
-    cur_manifest, cur_bid, _ = _read_log_current(state_dir)
+    cur_manifest, cur_bid, _ = _read_current(state_dir)
     if cur_manifest is None:
         raise RuntimeError(f"state dir {state_dir!r} has no committed snapshot")
     if batch_id >= cur_bid:
@@ -333,7 +366,7 @@ def _changes_segments(
     (same segment name, set-deduped)."""
     import json as _json
 
-    _, cur_bid, _ = _read_log_current(state_dir)
+    _, cur_bid, _ = _read_current(state_dir)
     if cur_bid < 0:
         raise RuntimeError(f"state dir {state_dir!r} has no committed snapshot")
     until = cur_bid if until_batch is None else until_batch
@@ -643,7 +676,7 @@ def _compact_log(
     can commit between its CURRENT read and its swing, so a concurrent
     batch can never be pruned away."""
     with _writer_lock(state_dir, blocking=False):
-        manifest, bid, ck = _read_log_current(state_dir)
+        manifest, bid, ck = _read_current(state_dir)
         if manifest is None:
             return 0
         rels = _read_manifest(state_dir, manifest)
@@ -656,7 +689,7 @@ def _compact_log(
         # does not honor the lock (older module version, or a filesystem
         # where flock is advisory-only across hosts) would otherwise have
         # its batch silently pruned — re-check CURRENT and fail loud.
-        manifest2, bid2, _ = _read_log_current(state_dir)
+        manifest2, bid2, _ = _read_current(state_dir)
         if (manifest2, bid2) != (manifest, bid):
             raise RuntimeError(
                 f"compaction on {state_dir!r} lost a race despite the "
@@ -706,7 +739,7 @@ def expire_snapshots(state_dir: str, keep: int) -> int:
         raise ValueError("expire_snapshots needs keep >= 1")
     with _writer_lock(state_dir, blocking=False):
         _persist_retention(state_dir, keep)  # policy even when empty
-        manifest, _, _ = _read_log_current(state_dir)
+        manifest, _, _ = _read_current(state_dir)
         if manifest is None:
             return 0
         return _prune(state_dir, keep, supersede=True)
@@ -774,7 +807,7 @@ def _stream_log_maintenance(
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
         ck_identity = _checkpoint_identity(checkpoint_dir)
         with _writer_lock(state_dir):
-            manifest, last_applied, state_ck = _read_log_current(state_dir)
+            manifest, last_applied, state_ck = _read_current(state_dir)
             if manifest is not None and state_ck != ck_identity:
                 raise RuntimeError(
                     f"{op_name}: state dir {state_dir!r} "
@@ -881,15 +914,21 @@ def stream_edge_increments_log(
     compact_every: int | None = None,
     retain_snapshots: int = 1,
 ):
-    """Log-structured twin of ``stream_edge_increments``: each
-    micro-batch of new transcripts is annotated, rolled up to an edge
-    increment (operators/materialize), and APPENDED as a segment —
-    per-batch write cost is the increment, never the accumulated table.
+    """Streaming KG maintenance: each micro-batch of new transcripts is
+    annotated, rolled up to an edge increment (operators/materialize),
+    and APPENDED as a segment — per-batch write cost is the increment,
+    never the accumulated table; ``read_edge_log`` merges the segments
+    with the ``merge_edge_increments`` monoid the batch gate proves.
     ``compact_every=k`` compacts inline whenever the live-segment count
     would reach k (the LSM flush knob; None = never, compaction is then
-    an offline ``compact_edge_log`` call). Canon-map cadence and the
-    checkpoint-identity guard are identical to the snapshot twin — see
-    its docstring for the two-speed design and the guard rationale."""
+    an offline ``compact_edge_log`` call).
+
+    The canonical map is a parameter: it refreshes on a slower cadence
+    than the edge increments (the two-speed design documented on
+    ``merge_edge_increments``); a canon refresh triggers a one-off batch
+    re-resolution, not a streaming change. A state dir is bound to the
+    checkpoint that built it — see ``_checkpoint_identity`` for the
+    guard."""
     from transner_spark.operators.annotate import explode_triples
     from transner_spark.operators.materialize import (
         materialize_edges,
@@ -993,7 +1032,7 @@ def read_pipeline_links(spark: SparkSession, state_dir: str) -> DataFrame:
     from the edge log's CURRENT pointer — the link snapshot and the edge
     commit advance together, so an uncommitted crash remnant is never
     served)."""
-    _, last_applied, _ = _read_log_current(state_dir)
+    _, last_applied, _ = _read_current(state_dir)
     if last_applied < 0:
         raise ValueError(f"no committed pipeline state in {state_dir!r}")
     if last_applied not in _live_link_versions(state_dir, last_applied):
@@ -1036,7 +1075,7 @@ def read_pipeline_links_asof(
     snapshot resolution). Fails loud when the version has been pruned by
     the retention window, never answers from a different batch's
     vocabulary."""
-    _, last_applied, _ = _read_log_current(state_dir)
+    _, last_applied, _ = _read_current(state_dir)
     if last_applied < 0:
         raise RuntimeError(f"no committed pipeline state in {state_dir!r}")
     live = _live_link_versions(state_dir, last_applied)
@@ -1124,7 +1163,7 @@ def stream_pipeline_log(
 
     def make_increment(batch_df: DataFrame, batch_id: int) -> DataFrame:
         sess = batch_df.sparkSession
-        _, last_applied, _ = _read_log_current(state_dir)
+        _, last_applied, _ = _read_current(state_dir)
         # triples feed both the linking residual and the edge rollup —
         # pin them so the NER stage runs once per batch, not twice
         triples = explode_triples(batch_df).localCheckpoint()
