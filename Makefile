@@ -10,7 +10,9 @@ zf = zipfile.ZipFile('dist/transner_spark.zip', 'w', zipfile.ZIP_DEFLATED); \
 zf.close(); print('dist/transner_spark.zip')"
 
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+	python -m pytest perfbench/tests -q
 
 bench:
 	python bench.py

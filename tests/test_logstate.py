@@ -55,7 +55,7 @@ def test_log_state_merge_on_read_equals_batch(spark, tiny_pdf, tiny_df, log_dirs
     per-batch write is increment-sized — the live segments' TOTAL row
     count equals the sum of the increments, not batches x table."""
     from transner_spark.streaming.logstate import (
-        log_edge_segments,
+        log_segments,
         read_edge_log,
         stream_edge_increments_log,
     )
@@ -82,7 +82,7 @@ def test_log_state_merge_on_read_equals_batch(spark, tiny_pdf, tiny_df, log_dirs
     # O(batch) writes: two live segments, and their combined stored rows
     # equal the two increments' rows (a full-table rewrite per commit
     # would have stored increment-1's edges a second time in commit 2)
-    segs, last = log_edge_segments(d["state"])
+    segs, last = log_segments(d["state"])
     assert len(segs) == 2 and last >= 1
     stored = sum(spark.read.parquet(s).count() for s in segs)
     want = (
@@ -100,7 +100,7 @@ def test_log_state_compaction_offline_and_inline(
     same rollup inline inside the batch commit."""
     from transner_spark.streaming.logstate import (
         compact_edge_log,
-        log_edge_segments,
+        log_segments,
         read_edge_log,
         stream_edge_increments_log,
     )
@@ -110,12 +110,12 @@ def test_log_state_compaction_offline_and_inline(
     _write_batch(spark, tiny_pdf, d["in"], 0, 3, "b0")
     _write_batch(spark, tiny_pdf, d["in"], 3, 5, "b1")
     stream_edge_increments_log(spark, d["in"] + "/*", d["state"], d["cp"], canon)
-    segs, last = log_edge_segments(d["state"])
+    segs, last = log_segments(d["state"])
     assert len(segs) == 2
     before = _snap(read_edge_log(spark, d["state"]))
 
     assert compact_edge_log(spark, d["state"]) == 2
-    segs2, last2 = log_edge_segments(d["state"])
+    segs2, last2 = log_segments(d["state"])
     assert len(segs2) == 1 and os.path.basename(segs2[0]).startswith("base-")
     assert last2 == last  # compaction never moves the batch cursor
     assert _snap(read_edge_log(spark, d["state"])) == before
@@ -155,7 +155,7 @@ def test_log_state_compaction_offline_and_inline(
     stream_edge_increments_log(
         spark, d["in"] + "/*", state2, d["cp2"], canon, compact_every=2
     )
-    segs3, _ = log_edge_segments(state2)
+    segs3, _ = log_segments(state2)
     assert len(segs3) == 1 and os.path.basename(segs3[0]).startswith("base-")
     assert _snap(read_edge_log(spark, state2)) == before
 
@@ -233,7 +233,7 @@ def test_log_substrate_generalizes_to_profile_partials(
     )
     from transner_spark.streaming.logstate import (
         compact_profile_partials_log,
-        log_edge_segments,
+        log_segments,
         read_profile_partials_log,
         stream_profile_partials_log,
     )
@@ -245,7 +245,7 @@ def test_log_substrate_generalizes_to_profile_partials(
     stream_profile_partials_log(
         spark, d["in"] + "/*", d["state"], d["cp"], canon
     )
-    assert len(log_edge_segments(d["state"])[0]) == 2
+    assert len(log_segments(d["state"])[0]) == 2
 
     def view_snap(df):
         cols = [
@@ -274,7 +274,7 @@ def test_log_state_checkpoint_identity_guard(spark, tiny_pdf, tiny_df, log_dirs)
     import shutil
 
     from transner_spark.streaming.logstate import (
-        log_edge_segments,
+        log_segments,
         stream_edge_increments_log,
     )
 
@@ -282,14 +282,14 @@ def test_log_state_checkpoint_identity_guard(spark, tiny_pdf, tiny_df, log_dirs)
     canon = _canon(spark, tiny_df)
     _write_batch(spark, tiny_pdf, d["in"], 0, 3, "b0")
     stream_edge_increments_log(spark, d["in"] + "/*", d["state"], d["cp"], canon)
-    committed = log_edge_segments(d["state"])
+    committed = log_segments(d["state"])
 
     _write_batch(spark, tiny_pdf, d["in"], 3, 5, "b1")
     with pytest.raises(Exception, match="different checkpoint"):
         stream_edge_increments_log(
             spark, d["in"] + "/*", d["state"], d["cp2"], canon
         )
-    assert log_edge_segments(d["state"]) == committed
+    assert log_segments(d["state"]) == committed
 
     # a LEGACY two-field CURRENT (no recorded identity) is just as
     # uncomparable: rewrite the pointer without its identity field and
@@ -303,7 +303,7 @@ def test_log_state_checkpoint_identity_guard(spark, tiny_pdf, tiny_df, log_dirs)
         stream_edge_increments_log(
             spark, d["in"] + "/*", d["state"], d["cp"], canon
         )
-    assert log_edge_segments(d["state"]) == committed
+    assert log_segments(d["state"]) == committed
     with open(cur, "w") as fh:
         fh.write(current_line)
 
@@ -313,7 +313,7 @@ def test_log_state_checkpoint_identity_guard(spark, tiny_pdf, tiny_df, log_dirs)
         stream_edge_increments_log(
             spark, d["in"] + "/*", d["state"], d["cp"], canon
         )
-    assert log_edge_segments(d["state"]) == committed
+    assert log_segments(d["state"]) == committed
 
 
 def test_log_state_time_travel(spark, tiny_pdf, tiny_df, log_dirs):
@@ -680,3 +680,54 @@ def test_read_pipeline_links_missing_version_fails_loud(spark, tiny_pdf, log_dir
     shutil.rmtree(_links_version_path(log_dirs["state"], last_applied))
     with pytest.raises(RuntimeError, match=f"v{last_applied} is missing.*rebuild"):
         read_pipeline_links(spark, log_dirs["state"])
+
+
+def test_stream_pipeline_log_crash_between_link_write_and_edge_commit(
+    spark, tiny_pdf, tiny_df, log_dirs, monkeypatch
+):
+    """Lockstep crash: batch 1's edge commit raises after ``links/v1`` is
+    written. The committed state stays at batch 0 — the edge log's last
+    applied batch is 0 and ``read_pipeline_links`` serves ``v0``, never
+    the uncommitted ``v1`` — and re-delivering batch 1 through the same
+    checkpoint converges to the one-shot batch derivation."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from transner_spark.streaming import logstate
+
+    state, cp, src = log_dirs["state"], log_dirs["cp"], log_dirs["in"] + "/*"
+
+    def links(df):
+        return sorted(
+            map(tuple, df.select("norm_key", "entity_key", "method").collect())
+        )
+
+    _write_batch(spark, tiny_pdf, log_dirs["in"], 0, 2, "b0")
+    logstate.stream_pipeline_log(spark, src, state, cp)
+    links_v0 = links(logstate.read_pipeline_links(spark, state))
+
+    real_commit = logstate._commit
+
+    def crash_on_batch_1(state_dir, segment_rels, batch_id, *args, **kwargs):
+        if batch_id == 1:
+            raise RuntimeError("injected crash before the edge commit")
+        return real_commit(state_dir, segment_rels, batch_id, *args, **kwargs)
+
+    monkeypatch.setattr(logstate, "_commit", crash_on_batch_1)
+    _write_batch(spark, tiny_pdf, log_dirs["in"], 2, 4, "b1")
+    with pytest.raises(
+        (RuntimeError, StreamingQueryException), match="injected crash"
+    ):
+        logstate.stream_pipeline_log(spark, src, state, cp)
+
+    v1 = logstate._links_version_path(state, 1)
+    assert os.path.isdir(v1)  # the link write happened before the crash
+    assert links(spark.read.parquet(v1)) != links_v0  # batch 1 adds vocabulary
+    assert logstate._read_current(state)[1] == 0
+    assert links(logstate.read_pipeline_links(spark, state)) == links_v0
+
+    monkeypatch.setattr(logstate, "_commit", real_commit)
+    logstate.stream_pipeline_log(spark, src, state, cp)
+    assert logstate._read_current(state)[1] == 1
+    canon = _canon(spark, tiny_df.where(F.col("turn_idx") < 4))
+    want = _snap(_batch_edges(tiny_df, canon, 0, 4))
+    assert _snap(logstate.read_pipeline_edges(spark, state)) == want

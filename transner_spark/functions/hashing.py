@@ -50,7 +50,3 @@ def h60_sql(expr: str) -> str:
     """DuckDB rendering of :func:`h60` over a SQL expression string."""
     return H60_SQL.format(expr=expr)
 
-
-def h60_seeded_sql(seed_expr: str, expr: str) -> str:
-    """DuckDB rendering of :func:`h60_seeded`."""
-    return h60_sql(f"({seed_expr} || ':' || {expr})")

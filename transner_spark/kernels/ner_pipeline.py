@@ -4,7 +4,7 @@ BIO-decode → offset-remap → regex → gazetteers.
 This is the faithful composition of the reference's ``Transner.ner``
 (/root/reference/transner/transner/ner.py:168-209) as a pure function:
 it is called per Arrow batch inside the Spark ``mapInPandas`` operator
-(transner_spark/operators/mentions.py) AND per list-of-strings by the
+(transner_spark/operators/annotate.py) AND per list-of-strings by the
 single-node oracle (kernels/oracle.py) — identical code path, parity by
 construction.
 """

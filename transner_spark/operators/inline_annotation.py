@@ -188,12 +188,3 @@ def concat_corpus(conll: DataFrame, docs: DataFrame) -> DataFrame:
     )
     return conll.unionByName(sep)
 
-
-def write_corpus(corpus: DataFrame, path: str) -> None:
-    """Reference writer shape (driver-side; at scale: per-partition
-    shards ordered by the same key + cat)."""
-    rows = (
-        corpus.orderBy("doc_id", "src_line", "out_idx").select("line").collect()
-    )
-    with open(path, "w", encoding="utf-8") as f:
-        f.write("\n".join(r["line"] for r in rows) + "\n")

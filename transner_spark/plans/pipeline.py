@@ -224,12 +224,3 @@ class PipelineRun:
         out["serving"] = self.spark.table(self.serving_table)
         return out
 
-
-def run_pipeline(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    workdir: str,
-    cfg: PipelineConfig | None = None,
-    run_id: str | None = None,
-) -> dict[str, DataFrame]:
-    return PipelineRun(spark, workdir, cfg, run_id).run(transcripts)

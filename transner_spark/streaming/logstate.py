@@ -49,8 +49,9 @@ manifest-list):
 Read path at scale: segments share one schema, so the reader is a
 single multi-path parquet scan → one hash aggregate on the edge key
 (map-side partials bound hot edges). Read amplification grows with the
-live-segment count — exactly the measured LSM trade
-(scripts/bench_logstate.py, BENCH.md) — and compaction is the knob.
+live-segment count — exactly the LSM trade perfbench's traced
+``logstate`` leg measures (write amp, segments live, commit/read
+time) — and compaction is the knob.
 
 Snapshot retention + time travel: ``retain_snapshots=k`` keeps the
 snapshots of the last k DISTINCT applied batches (and every segment
@@ -58,24 +59,24 @@ they reference) through the prune — batch units, so an inline fold's
 two same-batch commits cost one slot and never silently shrink
 time-travel depth; the writer persists the window into the state dir
 (RETENTION) so offline compaction honors it by default — and
-``read_edge_log_asof`` / ``read_profile_partials_log_asof`` answer
-"the table as of batch b" by resolving b through the state's snapshot
-history (METRICS.jsonl records the manifest per commit — the Iceberg
-metadata-log / ``VERSION AS OF`` pattern; retention is the
-``expireSnapshots`` knob). Resolution is newest-snapshot-≤-b; reads of
-expired snapshots fail loud. Since manifests and segments are
-immutable, an as-of read is value-identical to what the live read
-returned when that snapshot committed — pinned by the
-stream_edges_log_travel gate against a corpus-prefix SQL derivation.
+``read_edge_log_asof`` answers "the table as of batch b" by resolving
+b through the state's snapshot history (METRICS.jsonl records the
+manifest per commit — the Iceberg metadata-log / ``VERSION AS OF``
+pattern; retention is the ``expireSnapshots`` knob). Resolution is
+newest-snapshot-≤-b; reads of expired snapshots fail loud. Since
+manifests and segments are immutable, an as-of read is value-identical
+to what the live read returned when that snapshot committed — pinned
+by the stream_edges_log_travel gate against a corpus-prefix SQL
+derivation.
 
-Changelog (incremental) reads: ``read_edge_log_changes`` /
-``read_profile_partials_log_changes`` hand a downstream incremental
-consumer (ANN index maintainer, serving-view refresher, replication)
-the monoid DELTA of batches ``(since, until]`` — the union-rollup of
-just those raw increment segments, never a table-sized diff — the
-Iceberg incremental-read verb. Reads that would need raw segments the
-retention window already expired fail loud (consume more often or
-retain deeper), never return a silently partial delta.
+Changelog (incremental) reads: ``read_edge_log_changes`` hands a
+downstream incremental consumer (ANN index maintainer, serving-view
+refresher, replication) the monoid DELTA of batches ``(since,
+until]`` — the union-rollup of just those raw increment segments,
+never a table-sized diff — the Iceberg incremental-read verb. Reads
+that would need raw segments the retention window already expired fail
+loud (consume more often or retain deeper), never return a silently
+partial delta.
 """
 
 from __future__ import annotations
@@ -214,10 +215,6 @@ def log_segments(state_dir: str) -> tuple[list[str], int]:
     return [_abs_seg(state_dir, r) for r in rels], bid
 
 
-# historical name from when the substrate only held edge state
-log_edge_segments = log_segments
-
-
 def _read_log(spark: SparkSession, state_dir: str, rollup) -> DataFrame | None:
     """Merge-on-read: union the live segments and apply the state's
     rollup monoid (one multi-path scan + one hash aggregate). Returns
@@ -332,17 +329,6 @@ def read_edge_log_asof(
     return _read_log_asof(
         spark, state_dir, lambda df: merge_edge_increments(df, cfg=cfg), batch_id
     )
-
-
-def read_profile_partials_log_asof(
-    spark: SparkSession, state_dir: str, batch_id: int
-) -> DataFrame:
-    """Time-travel read of a profile-partials state via the partial
-    monoid; feed to ``profiles_from_partials`` for the as-of serving
-    view."""
-    from transner_spark.operators.materialize import merge_profile_partials
-
-    return _read_log_asof(spark, state_dir, merge_profile_partials, batch_id)
 
 
 def _changes_segments(
@@ -462,22 +448,6 @@ def read_edge_log_changes(
         lambda df: merge_edge_increments(df, cfg=cfg),
         since_batch,
         until_batch,
-    )
-
-
-def read_profile_partials_log_changes(
-    spark: SparkSession,
-    state_dir: str,
-    since_batch: int,
-    until_batch: int | None = None,
-) -> DataFrame | None:
-    """Changelog read of a profile-partials state: the partials delta
-    for ``(since, until]`` — mergeable into any downstream partials copy
-    with ``merge_profile_partials``."""
-    from transner_spark.operators.materialize import merge_profile_partials
-
-    return _read_log_changes(
-        spark, state_dir, merge_profile_partials, since_batch, until_batch
     )
 
 
