@@ -6,6 +6,8 @@ execution — cheap.)"""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -142,6 +144,28 @@ def test_bucketed_edges_point_lookup_prunes_buckets(spark, bucketed_edges):
         )
     assert "SelectedBucketsCount: 1 out of 8" in pb, pb
     assert "SelectedBucketsCount" not in pp  # plain layout cannot prune
+
+
+def test_link_surfaces_fuzzy_pass_runs_once_in_one_stage(spark):
+    """link_surfaces' fuzzy pass: the gram-index join appears ONCE (the
+    matched and unmatched residual are resolved from one evaluation),
+    and the only shuffle is the residual's norm_key repartition into
+    defaultParallelism partitions — explode, gram join, pair count,
+    rank and resolve follow it with no further Exchange."""
+    from transner_spark.operators.linking import link_surfaces
+
+    surfaces = spark.createDataFrame(
+        [("mario rossi",), ("mario rosi",), ("zzqq xxvv",)], "norm_key string"
+    )
+    p = _plan(link_surfaces(spark, surfaces))
+    assert p.count("BroadcastHashJoin [gram") == 1, p
+    shuffles = [
+        line for line in p.splitlines()
+        if "Exchange" in line and "BroadcastExchange" not in line
+    ]
+    dp = spark.sparkContext.defaultParallelism
+    repartition = rf"hashpartitioning\(norm_key#\d+, {dp}\), REPARTITION_BY_NUM"
+    assert shuffles and all(re.search(repartition, s) for s in shuffles), p
 
 
 def test_neighbors_topk_window_is_partitioned(spark):

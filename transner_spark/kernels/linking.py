@@ -11,9 +11,9 @@ the oracle and the default Spark operator) is:
 3. keep score ≥ threshold; pick the best per mention with a total
    deterministic order (score desc, entity_key asc, alias asc).
 
-MinHash-LSH (pyspark.ml) is the scale path for very large alias
-dictionaries — same candidate semantics, probabilistic recall — exposed by
-the Spark operator behind a flag; the oracle models the deterministic path.
+The Spark operator (operators/linking.link_surfaces) runs this same
+deterministic algorithm and has no probabilistic (MinHash-LSH) variant;
+its Jaccard size filter is exact, so ``link_one`` is its reference.
 """
 
 from __future__ import annotations

@@ -11,6 +11,12 @@ Scale design:
   is itself the skew mitigation for this stage;
 - mention-side n-gram generation is pure Catalyst (``sequence`` +
   ``substr`` inside ``transform``) — no Python in this stage;
+- the residual (surfaces with no exact match) is dim-sized, yet each
+  row still expands ×(grams × postings) in the gram join, so its width
+  is set before the expansion: hash-partitioned on norm_key into
+  defaultParallelism partitions, and the whole fuzzy pass (gram join,
+  pair count, top-1, resolve) runs once, in that one stage; a Jaccard
+  size filter on the gram counts prunes pairs before the count;
 - normalization of alias surfaces (accent strip etc.) happens driver-side
   with the SAME kernel function mentions were normalized with
   (kernels/triples.normalize_surface), so keys agree bit-for-bit;
@@ -210,66 +216,58 @@ def link_surfaces(
     # staging table write between the two linking passes.
     exact = exact.localCheckpoint()
 
-    # Width of the fuzzy pass: the residual is DIM-sized (distinct
-    # unmatched surfaces). When the session coalesces shuffles by SIZE
-    # (AQE parallelismFirst=false — set by this repo's session factory),
-    # every exchange in the gram pipeline auto-coalesces to
-    # advisory-sized partitions and no explicit fan-in is needed, while
-    # a huge surface table still gets thousands of advisory-sized
-    # partitions. Under an EXTERNAL session without that flag (the
-    # driver contract hands queries() an arbitrary SparkSession), fall
-    # back to the r2 count()-driven size-aware coalesce — otherwise the
-    # dim-sized pipeline schedules defaultParallelism near-empty tasks
-    # per stage.
-    residual = exact.where(F.col("method") == "none").select("norm_key")
-    pf = spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"
+    # Width is set BEFORE the ×(grams × postings) expansion: hash on
+    # norm_key into defaultParallelism partitions (fan_out's rule), so
+    # explode, gram join, pair count, rank and resolve run as one stage
+    # with no further Exchange. The repartition follows the checkpoint:
+    # a localCheckpoint does not keep hash partitioning.
+    residual = (
+        exact.where(F.col("method") == "none")
+        .select("norm_key")
+        .repartition(spark.sparkContext.defaultParallelism, "norm_key")
     )
-    aqe = spark.conf.get("spark.sql.adaptive.enabled", "false")
-    if not (str(aqe).lower() == "true" and str(pf).lower() == "false"):
-        n_residual = residual.count()  # cheap: reads the checkpoint
-        fuzzy_parts = max(1, min(
-            spark.sparkContext.defaultParallelism, n_residual // 50_000 + 1
-        ))
-        residual = residual.coalesce(fuzzy_parts)
-    n = cfg.link_ngram
+    n, t = cfg.link_ngram, cfg.link_jaccard_threshold
 
     mention_grams = with_grams(residual, "norm_key", n).select(
         "norm_key",
         F.col("n_grams").alias("m_n"),
         F.explode("grams").alias("gram"),
     )
+    # Size filter, pushed into the join: inter <= min(m_n, a_n), so
+    # J >= t implies a_n >= t*m_n and m_n >= t*a_n. The slack lets it
+    # keep extra pairs only, never drop one the score filter keeps.
     pair_scores = (
         mention_grams.join(_dim_hint(alias_gram_dim(spark, n, alias_dim)), "gram")
+        .where(
+            (F.col("a_n") >= t * F.col("m_n") - 1e-9)
+            & (F.col("m_n") >= t * F.col("a_n") - 1e-9)
+        )
         .groupBy("norm_key", "alias_id", "entity_key", "alias", "m_n", "a_n")
         .agg(F.count(F.lit(1)).alias("inter"))
         .withColumn(
             "score",
             F.col("inter") / (F.col("m_n") + F.col("a_n") - F.col("inter")),
         )
-        .where(F.col("score") >= cfg.link_jaccard_threshold)
+        .where(F.col("score") >= t)
     )
     w = Window.partitionBy("norm_key").orderBy(
         F.col("score").desc(), F.col("entity_key").asc(), F.col("alias").asc()
     )
-    fuzzy = (
+    best = (
         pair_scores.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select("norm_key", "entity_key", "score", F.lit("fuzzy").alias("method"))
+        .select("norm_key", "entity_key", "score")
     )
-    unmatched = residual.join(
-        fuzzy.select("norm_key"), "norm_key", "left_anti"
-    ).select(
+    # a surface with no pair at the threshold resolves to (NULL, 0.0, none)
+    fuzzy = residual.join(best, "norm_key", "left").select(
         "norm_key",
-        F.lit(None).cast("string").alias("entity_key"),
-        F.lit(0.0).alias("score"),
-        F.lit("none").alias("method"),
+        "entity_key",
+        F.coalesce("score", F.lit(0.0)).alias("score"),
+        F.when(F.col("score").isNotNull(), F.lit("fuzzy"))
+        .otherwise(F.lit("none"))
+        .alias("method"),
     )
-    return (
-        exact.where(F.col("method") == "exact")
-        .unionByName(fuzzy)
-        .unionByName(unmatched)
-    )
+    return exact.where(F.col("method") == "exact").unionByName(fuzzy)
 
 
 def link_surfaces_incremental(
