@@ -72,6 +72,6 @@ def test_shuffle_path_plan_shape(spark, surfaces, no_auto_broadcast):
     p_s = _plan(spark, surfaces, PipelineConfig(link_broadcast_dims=False))
     assert "BroadcastHashJoin" not in p_s
     assert ("SortMergeJoin" in p_s) or ("ShuffledHashJoin" in p_s)
-    # the left join that resolves unmatched surfaces is part of the
-    # same plan: it must also have left the broadcast family
+    # the gram join is a left join (it keeps unmatched surfaces): it
+    # must also have left the broadcast family
     assert "BroadcastNestedLoopJoin" not in p_s

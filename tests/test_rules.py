@@ -5,11 +5,10 @@ from __future__ import annotations
 
 import pytest
 
-from transner_spark.data.gazetteers import load_cities_set, load_religions_set
+from transner_spark.data.gazetteers import load_religions_set
 from transner_spark.kernels.rules import (
     check_opening_time,
     find_from_regex,
-    find_nested_loc,
     find_overlap,
     find_religions,
 )
@@ -72,16 +71,6 @@ def test_religion_multiword_never_matches():
     s = f"discussing {multi[0]} today"
     values = [h["value"].lower() for h in find_religions(s, rels)]
     assert multi[0] not in values
-
-
-def test_nested_loc_intent():
-    cities = load_cities_set()
-    ents = [{"type": "MISCELLANEOUS", "value": "Expo Milan", "offset": 10,
-             "confidence": 0.9}]
-    hits = find_nested_loc(ents, cities)
-    assert hits == [
-        {"type": "LOCATION", "value": "Milan", "confidence": 0.9, "offset": 15}
-    ]
 
 
 @pytest.mark.parametrize(

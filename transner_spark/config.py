@@ -1,14 +1,15 @@
 """Pipeline configuration.
 
-Mirrors the reference service's knobs (confidence threshold, rule flags —
-/root/reference/api.py:59,121, /root/reference/transner/transner/ner.py:77)
-plus Spark-scale knobs (salting, bucketing, batch sizes) that have no
-reference counterpart.
+Mirrors the reference service's confidence threshold (reference
+api.py:121) plus the options a caller of this pipeline sets: the optional
+date rule, the gazetteer file, the linking parameters and the Spark-scale
+knobs (salting, bucketing, batch sizes) that have no reference
+counterpart.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 # The reference service rejects sentences longer than 150 whitespace words
@@ -49,38 +50,24 @@ SUPPORTED_TYPES = (
 class PipelineConfig:
     """End-to-end pipeline configuration.
 
-    ``strict_reference_parity`` keeps reference quirks on (first-occurrence
-    gazetteer offsets, adjacency-as-overlap, confidence string truncation,
-    disabled nested-LOC rule — the reference's nested-LOC path crashes on a
-    str round, /root/reference/transner/transner/ner.py:266, so it never
-    emits anything).
+    The NER kernel keeps the reference's quirks unconditionally
+    (first-occurrence gazetteer offsets, adjacency-as-overlap, confidence
+    string truncation) and has no nested-LOC rule: the reference's
+    raises on its first hit (reference ner.py:266), so it never emits
+    anything.
     """
 
     threshold: float = SERVICE_THRESHOLD
-    apply_regex: bool = True
-    apply_gazetteers: bool = True
-    # Nested LOC-in-MISC gazetteer rule: the reference's implementation is
-    # dead code (TypeError on first hit); enabling this runs the evident
-    # intent (type LOCATION, confidence 0.9). Default off for parity.
-    apply_nested_loc: bool = False
     # R4 date detection (reference ner.py:272-309): an optional path the
     # service never calls (api.py:59) — deterministic regex port, default
     # off for parity; see kernels/rules.find_dates.
     apply_dates: bool = False
-    max_turn_words: int = MAX_TURN_WORDS
     lowercase: bool = True
-    # Gazetteer data files (None → the committed fixtures). Point these
-    # at the reference's worldcities.csv / religions.txt to run with the
-    # full 15k-city sets (ner.py:117-126 takes the same two files).
-    cities_path: str | None = None
+    # Religion gazetteer file (None → the committed fixture). Point it at
+    # the reference's religions.txt to run with the full set (ner.py:117-126).
     religions_path: str | None = None
 
-    # Triple extraction
-    emit_tool_triples: bool = True
-    emit_role_mention_triples: bool = False
-
     # Linking
-    link_exact_only: bool = False
     link_jaccard_threshold: float = 0.5
     link_ngram: int = 3
     # False = drop the broadcast hints on the alias-dim joins and let
@@ -100,6 +87,3 @@ class PipelineConfig:
     # mapInPandas should LOWER this — batch bytes scale with row size
     # and this knob is Spark-session-global, not per-operator.
     arrow_batch_rows: int = 4096
-
-    # Rule R3 strict flag is derived
-    extra: dict = field(default_factory=dict)

@@ -61,10 +61,7 @@ def alias_index(ngram: int = 3):
 
 
 def link_one(
-    value: str,
-    threshold: float = 0.5,
-    ngram: int = 3,
-    exact_only: bool = False,
+    value: str, threshold: float = 0.5, ngram: int = 3
 ) -> tuple[str | None, float, str]:
     """Link one mention surface → (entity_key | None, score, method)."""
     norm = normalize_surface(value)
@@ -72,7 +69,7 @@ def link_one(
     hit = exact.get(norm)
     if hit is not None:
         return hit[0], 1.0, "exact"
-    if exact_only or not norm:
+    if not norm:
         return None, 0.0, "none"
     g = char_ngrams(norm, ngram)
     cand_ids: set[int] = set()

@@ -12,7 +12,7 @@ construction.
 from __future__ import annotations
 
 from transner_spark.config import PipelineConfig
-from transner_spark.data.gazetteers import load_cities_set, load_religions_set
+from transner_spark.data.gazetteers import load_religions_set
 from transner_spark.kernels import preprocess, rules
 from transner_spark.kernels.classifier import TokenClassifier, default_classifier
 from transner_spark.kernels.decode import decode_bio, softmax_max
@@ -62,31 +62,19 @@ def ner_batch(
             e["source"] = "model"
 
         # R1 — regex PII over the ORIGINAL sentence
-        if cfg.apply_regex:
-            for e in rules.find_from_regex(s_orig):
-                e["source"] = "regex"
-                entities.append(e)
+        for e in rules.find_from_regex(s_orig):
+            e["source"] = "regex"
+            entities.append(e)
 
-        # R2 — religion gazetteer (cfg paths override the fixtures)
-        if cfg.apply_gazetteers:
-            religions = (
-                load_religions_set(cfg.religions_path)
-                if cfg.religions_path
-                else load_religions_set()
-            )
-            for e in rules.find_religions(s_orig, religions):
-                e["source"] = "gazetteer"
-                entities.append(e)
-            # R3 — nested LOC in MISC (dead code in the reference; flag-gated)
-            if cfg.apply_nested_loc:
-                cities = (
-                    load_cities_set(cfg.cities_path)
-                    if cfg.cities_path
-                    else load_cities_set()
-                )
-                for e in rules.find_nested_loc(entities, cities):
-                    e["source"] = "gazetteer"
-                    entities.append(e)
+        # R2 — religion gazetteer (cfg.religions_path overrides the fixture)
+        religions = (
+            load_religions_set(cfg.religions_path)
+            if cfg.religions_path
+            else load_religions_set()
+        )
+        for e in rules.find_religions(s_orig, religions):
+            e["source"] = "gazetteer"
+            entities.append(e)
 
         # R4 — optional deterministic date detection (service-default off)
         if cfg.apply_dates:

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from transner_spark.config import PipelineConfig
+from transner_spark.config import MAX_TURN_WORDS, PipelineConfig
 from transner_spark.kernels import canonical, linking
 from transner_spark.kernels.ner_pipeline import ner_batch
 from transner_spark.kernels.triples import extract_triples_turn
@@ -39,9 +39,7 @@ def _mention_dtypes(df: pd.DataFrame) -> pd.DataFrame:
 def oracle_mentions(transcripts: pd.DataFrame, cfg: PipelineConfig | None = None) -> pd.DataFrame:
     """turns → mentions (one row per entity, append order per turn)."""
     cfg = cfg or PipelineConfig()
-    kept = transcripts[
-        transcripts["text"].str.split().str.len() <= cfg.max_turn_words
-    ]
+    kept = transcripts[transcripts["text"].str.split().str.len() <= MAX_TURN_WORDS]
     results = ner_batch(kept["text"].tolist(), cfg=cfg)
     rows = []
     for (_, turn), res in zip(kept.iterrows(), results):
@@ -57,12 +55,7 @@ def oracle_mentions(transcripts: pd.DataFrame, cfg: PipelineConfig | None = None
     return _mention_dtypes(out)
 
 
-def oracle_triples(
-    transcripts: pd.DataFrame,
-    mentions: pd.DataFrame,
-    cfg: PipelineConfig | None = None,
-) -> pd.DataFrame:
-    cfg = cfg or PipelineConfig()
+def oracle_triples(transcripts: pd.DataFrame, mentions: pd.DataFrame) -> pd.DataFrame:
     by_turn: dict[tuple, list[dict]] = {}
     for r in mentions.itertuples(index=False):
         by_turn.setdefault((r.conv_id, r.turn_idx), []).append(
@@ -72,7 +65,7 @@ def oracle_triples(
     rows = []
     for t in transcripts.itertuples(index=False):
         ms = by_turn.get((t.conv_id, t.turn_idx), [])
-        for tr in extract_triples_turn(t.text, ms, t.role, t.tool, cfg):
+        for tr in extract_triples_turn(t.text, ms, t.role, t.tool):
             rows.append(
                 (t.conv_id, t.turn_idx, tr["subj_value"], tr["subj_type"],
                  tr["subj_norm"], tr["pred"], tr["obj_value"], tr["obj_type"],
@@ -101,10 +94,7 @@ def oracle_links(triples: pd.DataFrame, cfg: PipelineConfig | None = None) -> pd
     rows = []
     for norm in _node_surfaces(triples)["norm_key"]:
         entity_key, score, method = linking.link_one(
-            norm,
-            threshold=cfg.link_jaccard_threshold,
-            ngram=cfg.link_ngram,
-            exact_only=cfg.link_exact_only,
+            norm, threshold=cfg.link_jaccard_threshold, ngram=cfg.link_ngram
         )
         rows.append((norm, entity_key, score, method))
     out = pd.DataFrame(rows, columns=LINK_COLUMNS)
@@ -168,7 +158,7 @@ def run_oracle_pipeline(
 ) -> dict[str, pd.DataFrame]:
     cfg = cfg or PipelineConfig()
     mentions = oracle_mentions(transcripts, cfg)
-    triples = oracle_triples(transcripts, mentions, cfg)
+    triples = oracle_triples(transcripts, mentions)
     links = oracle_links(triples, cfg)
     canon = oracle_canonical(links)
     edges = oracle_edges(transcripts, triples, canon)

@@ -99,41 +99,6 @@ def find_religions(sentence: str, religions_set: frozenset[str]) -> list[dict]:
     return out
 
 
-def find_nested_loc(entities: list[dict], cities_set: frozenset[str]) -> list[dict]:
-    """Nested LOC inside MISCELLANEOUS spans (ner.py:253-267).
-
-    The reference implementation is dead code: it calls
-    ``round('0.9000', 2)`` and raises TypeError on the first hit
-    (ner.py:266), and would emit the short type name 'LOC' (ner.py:264).
-    This implements the evident intent (type LOCATION, confidence 0.9);
-    callers gate it behind ``PipelineConfig.apply_nested_loc`` (default
-    off = strict parity, i.e. no output, matching what the reference
-    actually produces).
-    """
-    out: list[dict] = []
-    for entity in entities:
-        if entity["type"] == "MISCELLANEOUS":
-            words_list = entity["value"].lower().split()
-            substrings = [
-                words_list[i:j]
-                for i in range(len(words_list))
-                for j in range(i + 1, len(words_list) + 1)
-            ]
-            for substring in substrings:
-                curr_str = " ".join(substring)
-                if curr_str in cities_set:
-                    offset = entity["value"].lower().index(curr_str)
-                    out.append(
-                        {
-                            "type": "LOCATION",
-                            "value": entity["value"][offset : offset + len(curr_str)],
-                            "confidence": RULE_BASED_SCORE,
-                            "offset": offset + entity["offset"],
-                        }
-                    )
-    return out
-
-
 def find_overlap(entities: list[dict], candidate_start: int, candidate_end: int) -> bool:
     """Interval-overlap predicate (ner.py:312-350) — counts containment,
     identity, partial overlap AND touching endpoints (adjacency) as overlap
@@ -169,7 +134,7 @@ def check_opening_time(entities: list[dict]) -> str:
 
 # ---------------------------------------------------------------- dates (R4)
 # The reference's find_dates (ner.py:272-309) is an OPTIONAL path the
-# service never invokes (api.py:59 passes only apply_regex/apply_gazetteers)
+# service never invokes (api.py:59 passes only the regex and gazetteer flags)
 # and it depends on fasttext lang-id + dateparser — neither deterministic
 # nor available here. This port keeps the reference's *mechanics* (left-to-
 # right relocation of each found date string, overlap skip against existing

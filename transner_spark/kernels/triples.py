@@ -54,14 +54,13 @@ def extract_triples_turn(
        predicate-lexicon phrase occurs word-bounded in the lowercased text
        strictly between the two spans, emit (i, pred, i+1) — or reversed
        for passive phrases;
-    2. if ``tool`` is set, emit (agent:<role>, used_tool, tool:<tool>);
-    3. optionally (flag) a (speaker:<role>, mentions, entity) triple per
-       node mention.
+    2. if ``tool`` is set, emit (agent:<role>, used_tool, tool:<tool>).
 
     Confidence = min of the participating mention confidences (rule 1),
-    1.0 for structural triples (rules 2-3).
+    1.0 for the structural tool triple (rule 2). ``cfg`` is accepted so
+    callers can pass the pipeline config through; no field of it changes
+    the triples.
     """
-    cfg = cfg or PipelineConfig()
     out: list[dict] = []
     lowered = text.lower()
 
@@ -92,7 +91,7 @@ def extract_triples_turn(
                 )
                 break
 
-    if cfg.emit_tool_triples and tool:
+    if tool:
         subj = f"agent:{role or 'unknown'}"
         obj = f"tool:{tool}"
         out.append(
@@ -108,19 +107,4 @@ def extract_triples_turn(
             }
         )
 
-    if cfg.emit_role_mention_triples:
-        speaker = f"speaker:{role or 'unknown'}"
-        for m in nodes:
-            out.append(
-                {
-                    "subj_value": speaker,
-                    "subj_type": "SPEAKER",
-                    "subj_norm": speaker,
-                    "pred": "mentions",
-                    "obj_value": m["value"],
-                    "obj_type": m["type"],
-                    "obj_norm": normalize_surface(m["value"]),
-                    "confidence": m["confidence"],
-                }
-            )
     return out

@@ -40,7 +40,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from transner_spark.config import PipelineConfig
+from transner_spark.config import MAX_TURN_WORDS, PipelineConfig
 
 MENTION_STRUCT = StructType(
     [
@@ -107,21 +107,12 @@ def _make_annotate_fn(cfg: PipelineConfig, classifier_factory=None):
             for text, role, tool, res in zip(
                 pdf["text"], pdf["role"], pdf["tool"], results
             ):
-                ments = [
-                    {
-                        "mention_id": mid,
-                        "type": e["type"],
-                        "value": e["value"],
-                        "offset": e["offset"],
-                        "confidence": e["confidence"],
-                        "source": e["source"],
-                    }
-                    for mid, e in enumerate(res["entities"])
-                ]
-                mentions_col.append(ments)
-                triples_col.append(
-                    extract_triples_turn(text, res["entities"], role, tool, cfg)
-                )
+                # the entity dicts carry MENTION_STRUCT's other five keys
+                ents = res["entities"]
+                for mid, e in enumerate(ents):
+                    e["mention_id"] = mid
+                mentions_col.append(ents)
+                triples_col.append(extract_triples_turn(text, ents, role, tool))
             out = pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]].copy()
             out["mentions"] = mentions_col
             out["triples"] = triples_col
@@ -130,17 +121,14 @@ def _make_annotate_fn(cfg: PipelineConfig, classifier_factory=None):
     return annotate
 
 
-def split_quarantine(
-    transcripts: DataFrame, cfg: PipelineConfig | None = None
-) -> tuple[DataFrame, DataFrame]:
+def split_quarantine(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Length guard (reference api.py:27,53-55): returns (kept, quarantined).
     Expressed as a native filter so it is pushed into the scan."""
-    cfg = cfg or PipelineConfig()
     # whitespace-collapsing count, matching Python str.split() semantics
     # (the reference counts len(s.split()), api.py:54)
     n_words = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    kept = transcripts.where(n_words <= cfg.max_turn_words)
-    rejected = transcripts.where(n_words > cfg.max_turn_words)
+    kept = transcripts.where(n_words <= MAX_TURN_WORDS)
+    rejected = transcripts.where(n_words > MAX_TURN_WORDS)
     return kept, rejected
 
 
@@ -157,7 +145,7 @@ def annotate_turns(
     from transner_spark.functions.partitioning import fan_out
 
     cfg = cfg or PipelineConfig()
-    kept, _ = split_quarantine(transcripts, cfg)
+    kept, _ = split_quarantine(transcripts)
     # fan_out: the NER pass is embarrassingly parallel — never let a
     # single-split local input serialize it (no-op on cluster scans)
     return fan_out(
@@ -220,7 +208,7 @@ def preprocessed_turns(
     from transner_spark.kernels.preprocess import preprocess_one
 
     cfg = cfg or PipelineConfig()
-    kept, _ = split_quarantine(transcripts, cfg)
+    kept, _ = split_quarantine(transcripts)
 
     def run(batches):
         for pdf in batches:

@@ -1,26 +1,25 @@
 """Canonicalization: connected components of the link graph.
 
-Two paths, same result (every node labeled with the lexicographically
-smallest member of its component, matching
-kernels/canonical.connected_components):
+Every node is labeled with the lexicographically smallest member of its
+component, matching kernels/canonical.connected_components.
 
-- ``canonicalize_star`` (default): the link graph is a star forest BY
-  CONSTRUCTION — ``link_surfaces`` keeps exactly one top-1 entity per
+- ``canonicalize``: the pipeline's path. The link graph is a star forest
+  BY CONSTRUCTION — ``link_surfaces`` keeps exactly one top-1 entity per
   distinct surface (operators/linking.py row_number() == 1), so every
   component is one entity plus its linked surfaces (or a singleton
   surface). The closed form is ``canon_id = min(entity_key, min linked
   surface)``: ONE tiny groupBy on entity_key plus one join back — no
-  driver loop, no localCheckpoints. This removed a ~3s fixed driver
-  floor per run at sf0.1 (VERDICT r1 item 1b) and at 100 TB it is two
-  shuffles on dim-sized keys instead of O(rounds) shuffle+checkpoint
-  barriers.
-- ``connected_components``: the general-graph fallback — iterative
+  driver loop. This removed a ~3s fixed driver floor per run at sf0.1
+  (VERDICT r1 item 1b) and at 100 TB it is two shuffles on dim-sized
+  keys instead of O(rounds) shuffle+checkpoint barriers.
+- ``connected_components``: the general-graph algorithm — iterative
   min-label propagation, bounded at O(diameter) rounds, localCheckpoint
-  per round to cut lineage. Kept for non-star edge sets (and as the
-  differential-test twin of the closed form).
+  per round to cut lineage. Used for non-star edge sets (graph
+  components, dedup clusters) and as the differential-test twin of the
+  closed form (the differential tests compare the two).
 
 Catalyst cannot express a loop (SURVEY.md §4), hence the driver
-iteration in the fallback.
+iteration in ``connected_components``.
 """
 
 from __future__ import annotations
@@ -92,30 +91,29 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
     return labels.select("node_id", F.col("label").alias("canon_id"))
 
 
-def canonicalize_star(links: DataFrame, eager: bool = True) -> DataFrame:
+def canonicalize(links: DataFrame) -> DataFrame:
     """Closed-form canonicalization for the star-forest link graph.
 
-    Precondition (guaranteed by link_surfaces): at most one row — hence
-    at most one entity — per norm_key. Output rows cover exactly the
-    nodes the iterative CC would label: every surface node and every
-    linked entity node.
+    Precondition (guaranteed by link_surfaces, guarded in-plan): at most
+    one row — hence at most one entity — per norm_key. Output rows cover
+    exactly the nodes the iterative CC would label: every surface node
+    and every linked entity node.
 
-    ``eager=True`` localCheckpoints the result (like the iterative path
-    does per round): downstream consumers broadcast this map twice
-    (materialize_edges subj/obj resolve), and a cached-but-lazy plan
-    containing a nested BroadcastExchange is NOT matched by the cache
-    manager under those broadcast collects — measured 6.2s → 0.6s for
-    the edges aggregate at sf0.01. At warehouse scale this
-    materialization is the canonical-map table write.
+    The result is localCheckpointed: downstream consumers broadcast this
+    map twice (materialize_edges subj/obj resolve), and a
+    cached-but-lazy plan containing a nested BroadcastExchange is NOT
+    matched by the cache manager under those broadcast collects —
+    measured 6.2s → 0.6s for the edges aggregate at sf0.01. At warehouse
+    scale this materialization is the canonical-map table write.
     """
     from pyspark.sql import Window
 
     surface = F.concat(F.lit("surface:"), F.col("norm_key"))
     # In-plan precondition guard: a links table with >1 row per norm_key
     # is NOT a star forest and the closed form would silently mislabel —
-    # fail loud at execution time instead (the iterative
-    # connected_components is the correct path for such graphs). One
-    # count window over the (small, distinct-surface-sized) links table.
+    # fail loud at execution time instead (connected_components is the
+    # correct algorithm for such graphs). One count window over the
+    # (small, distinct-surface-sized) links table.
     dup = F.count(F.lit(1)).over(Window.partitionBy("norm_key"))
     links = links.withColumn("_nk_rows", dup).where(
         F.when(
@@ -123,7 +121,7 @@ def canonicalize_star(links: DataFrame, eager: bool = True) -> DataFrame:
             F.raise_error(
                 F.concat(
                     F.lit(
-                        "canonicalize_star: more than one link row for "
+                        "canonicalize: more than one link row for "
                         "norm_key (not a star forest) — use "
                         "connected_components(links_to_edges(links)); key="
                     ),
@@ -153,22 +151,4 @@ def canonicalize_star(links: DataFrame, eager: bool = True) -> DataFrame:
     singletons = links.where(F.col("entity_key").isNull()).select(
         surface.alias("node_id"), surface.alias("canon_id")
     )
-    out = surf_rows.unionByName(ent_rows).unionByName(singletons)
-    return out.localCheckpoint() if eager else out
-
-
-def canonicalize(
-    links: DataFrame, max_iterations: int = 25, method: str = "star"
-) -> DataFrame:
-    """Canonicalize a links table. ``method='star'`` (default) uses the
-    closed form — valid because link_surfaces emits exactly one row per
-    norm_key (runtime-guarded inside canonicalize_star); ``'iterative'``
-    routes to the general connected-components loop (bounded by
-    ``max_iterations``), required for non-star link graphs. Both must
-    produce identical output on star forests — pinned by
-    tests/test_canonicalize_star.py."""
-    if method == "iterative":
-        return connected_components(links_to_edges(links), max_iterations)
-    if method != "star":
-        raise ValueError(f"unknown canonicalize method: {method!r}")
-    return canonicalize_star(links)
+    return surf_rows.unionByName(ent_rows).unionByName(singletons).localCheckpoint()

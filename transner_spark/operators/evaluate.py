@@ -134,8 +134,8 @@ def conversation_entities(triples: DataFrame, canon: DataFrame) -> DataFrame:
     its own right (conversation -> entity bipartite graph)."""
     from transner_spark.operators.materialize import _resolve
 
-    t = _resolve(triples, canon, "subj", broadcast_canon=True)
-    t = _resolve(t, canon, "obj", broadcast_canon=True)
+    t = _resolve(triples, canon, "subj")
+    t = _resolve(t, canon, "obj")
     return (
         t.select("conv_id", F.col("subj_id").alias("node"))
         .unionByName(t.select("conv_id", F.col("obj_id").alias("node")))

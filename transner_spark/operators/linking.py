@@ -202,9 +202,6 @@ def link_surfaces(
         .alias("method"),
     )
 
-    if cfg.link_exact_only:
-        return exact
-
     # Materialization barrier: the residual (fuzzy input) AND the final
     # union both read `exact` — without it the whole upstream plan
     # (triples → distinct surfaces → broadcast join) executes twice
@@ -233,14 +230,20 @@ def link_surfaces(
         F.col("n_grams").alias("m_n"),
         F.explode("grams").alias("gram"),
     )
-    # Size filter, pushed into the join: inter <= min(m_n, a_n), so
+    gram_dim = alias_gram_dim(spark, n, alias_dim).withColumnRenamed("gram", "a_gram")
+    # Size filter, in the join condition: inter <= min(m_n, a_n), so
     # J >= t implies a_n >= t*m_n and m_n >= t*a_n. The slack lets it
-    # keep extra pairs only, never drop one the score filter keeps.
+    # keep extra pairs only, never drop one the score filter keeps. The
+    # join is a LEFT join so that every residual surface keeps a row:
+    # the fuzzy pass resolves from this one branch, and the residual's
+    # Exchange has one consumer.
     pair_scores = (
-        mention_grams.join(_dim_hint(alias_gram_dim(spark, n, alias_dim)), "gram")
-        .where(
-            (F.col("a_n") >= t * F.col("m_n") - 1e-9)
-            & (F.col("m_n") >= t * F.col("a_n") - 1e-9)
+        mention_grams.join(
+            _dim_hint(gram_dim),
+            (F.col("gram") == F.col("a_gram"))
+            & (F.col("a_n") >= t * F.col("m_n") - 1e-9)
+            & (F.col("m_n") >= t * F.col("a_n") - 1e-9),
+            "left",
         )
         .groupBy("norm_key", "alias_id", "entity_key", "alias", "m_n", "a_n")
         .agg(F.count(F.lit(1)).alias("inter"))
@@ -248,24 +251,30 @@ def link_surfaces(
             "score",
             F.col("inter") / (F.col("m_n") + F.col("a_n") - F.col("inter")),
         )
-        .where(F.col("score") >= t)
     )
+    # Pairs below the threshold, and a surface's grams with no pair,
+    # collapse into one (NULL, NULL, NULL) row per surface; it ranks
+    # last, so a surface with no pair at the threshold resolves to
+    # (NULL, 0.0, none).
+    hit = F.col("score") >= t
+    candidates = pair_scores.select(
+        "norm_key",
+        *[F.when(hit, F.col(c)).alias(c) for c in ("entity_key", "alias", "score")],
+    ).distinct()
     w = Window.partitionBy("norm_key").orderBy(
         F.col("score").desc(), F.col("entity_key").asc(), F.col("alias").asc()
     )
-    best = (
-        pair_scores.withColumn("rn", F.row_number().over(w))
+    fuzzy = (
+        candidates.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select("norm_key", "entity_key", "score")
-    )
-    # a surface with no pair at the threshold resolves to (NULL, 0.0, none)
-    fuzzy = residual.join(best, "norm_key", "left").select(
-        "norm_key",
-        "entity_key",
-        F.coalesce("score", F.lit(0.0)).alias("score"),
-        F.when(F.col("score").isNotNull(), F.lit("fuzzy"))
-        .otherwise(F.lit("none"))
-        .alias("method"),
+        .select(
+            "norm_key",
+            "entity_key",
+            F.coalesce("score", F.lit(0.0)).alias("score"),
+            F.when(F.col("score").isNotNull(), F.lit("fuzzy"))
+            .otherwise(F.lit("none"))
+            .alias("method"),
+        )
     )
     return exact.where(F.col("method") == "exact").unionByName(fuzzy)
 

@@ -2,10 +2,9 @@
 aggregate to a weighted edge table partitioned by subject-hash bucket.
 
 Skew strategy (north rule: "partitioned by subject-hash with salting"):
-- the canon map is joined with ``broadcast()`` when it is dim-sized (the
-  common case — it holds DISTINCT surfaces, not mentions); for huge maps
-  pass ``broadcast_canon=False`` to get a shuffled join, where AQE's skew
-  join splitting handles the hot canonical ids;
+- the canon map is joined with ``broadcast()``: it is dim-sized (it holds
+  DISTINCT surfaces, not mentions), so the triple stream never shuffles
+  for the resolve;
 - the aggregation itself is protected by an explicit two-phase salted
   aggregate: partial (subj, pred, obj, salt) groups first — bounding any
   single reducer's share of a hot edge to 1/salt — then the tiny partial
@@ -28,9 +27,7 @@ from transner_spark.config import PipelineConfig
 from transner_spark.kernels.oracle import STRUCTURAL_TYPES
 
 
-def _resolve(
-    triples: DataFrame, canon: DataFrame, side: str, broadcast_canon: bool
-) -> DataFrame:
+def _resolve(triples: DataFrame, canon: DataFrame, side: str) -> DataFrame:
     """Resolve one side (subj/obj) through the canon map. Structural nodes
     (AGENT/TOOL/SPEAKER) are their own canonical ids."""
     structural = list(STRUCTURAL_TYPES)
@@ -41,22 +38,18 @@ def _resolve(
         F.col("node_id").alias(f"{side}_node"),
         F.col("canon_id").alias(f"{side}_canon"),
     )
-    if broadcast_canon:
-        c = F.broadcast(c)
-    t = t.join(c, f"{side}_node", "left")
+    t = t.join(F.broadcast(c), f"{side}_node", "left")
     return t.withColumn(
         f"{side}_id", F.coalesce(F.col(f"{side}_canon"), F.col(f"{side}_node"))
     ).drop(f"{side}_node", f"{side}_canon")
 
 
-def _resolved_for_rollup(
-    triples: DataFrame, canon: DataFrame, broadcast_canon: bool = True
-) -> DataFrame:
+def _resolved_for_rollup(triples: DataFrame, canon: DataFrame) -> DataFrame:
     """Both triple sides resolved through the canon map, projected to
     the edge-rollup columns — shared by the one-shot rollup and the
     auto-salt path (which profiles this exact frame first)."""
-    resolved = _resolve(triples, canon, "subj", broadcast_canon)
-    resolved = _resolve(resolved, canon, "obj", broadcast_canon)
+    resolved = _resolve(triples, canon, "subj")
+    resolved = _resolve(resolved, canon, "obj")
     return resolved.select("subj_id", "pred", "obj_id", "ts")
 
 
@@ -98,22 +91,18 @@ def materialize_edges(
     triples: DataFrame,
     canon: DataFrame,
     cfg: PipelineConfig | None = None,
-    broadcast_canon: bool = True,
     salted: bool = True,
 ) -> DataFrame:
     """triples + canon → edges(subj_id, pred, obj_id, weight, first_ts,
     last_ts, bucket)."""
     cfg = cfg or PipelineConfig()
-    return _edge_rollup(
-        _resolved_for_rollup(triples, canon, broadcast_canon), cfg, salted
-    )
+    return _edge_rollup(_resolved_for_rollup(triples, canon), cfg, salted)
 
 
 def materialize_edges_auto_salt(
     triples: DataFrame,
     canon: DataFrame,
     cfg: PipelineConfig | None = None,
-    broadcast_canon: bool = True,
     rows_per_task: int = 1_000_000,
 ) -> tuple[DataFrame, int]:
     """Self-tuning edge rollup — the skew loop closed: profile the
@@ -139,9 +128,7 @@ def materialize_edges_auto_salt(
     from transner_spark.operators.skew import key_stats
 
     cfg = cfg or PipelineConfig()
-    resolved = _resolved_for_rollup(
-        triples, canon, broadcast_canon
-    ).localCheckpoint()
+    resolved = _resolved_for_rollup(triples, canon).localCheckpoint()
     row = key_stats(resolved, ["subj_id", "pred", "obj_id"]).collect()[0]
     salt = max(1, math.ceil((row["max_cnt"] or 0) / rows_per_task))
     tuned = replace(cfg, salt_partitions=salt)
@@ -185,7 +172,6 @@ def reresolve_edges(
     edges: DataFrame,
     canon_new: DataFrame,
     cfg: PipelineConfig | None = None,
-    broadcast_canon: bool = True,
 ) -> DataFrame:
     """Canon-refresh re-merge — the second speed of the two-speed
     maintenance design (merge_edge_increments docstring): edge
@@ -218,10 +204,8 @@ def reresolve_edges(
             F.col("node_id").alias(f"{side}_id"),
             F.col("canon_id").alias(f"_{side}_new"),
         )
-        if broadcast_canon:
-            c = F.broadcast(c)
         out = (
-            out.join(c, f"{side}_id", "left")
+            out.join(F.broadcast(c), f"{side}_id", "left")
             .withColumn(
                 f"{side}_id",
                 F.coalesce(F.col(f"_{side}_new"), F.col(f"{side}_id")),
@@ -236,7 +220,6 @@ def edges_asof(
     canon: DataFrame,
     asof_epoch: int | None = None,
     cfg: PipelineConfig | None = None,
-    broadcast_canon: bool = True,
 ) -> DataFrame:
     """Temporal KG snapshot: the edge table as it stood at ``asof_epoch``
     (unix seconds) — triples with ``ts`` past the cutoff never enter the
@@ -263,9 +246,7 @@ def edges_asof(
         )
     else:
         filtered = triples.where(ts_epoch <= F.lit(int(asof_epoch)))
-    return materialize_edges(
-        filtered, canon, cfg=cfg, broadcast_canon=broadcast_canon
-    )
+    return materialize_edges(filtered, canon, cfg=cfg)
 
 
 def edges_diff(edges_old: DataFrame, edges_new: DataFrame) -> DataFrame:
@@ -401,11 +382,7 @@ def ensure_edges_bucketed_table(
     )
 
 
-def entity_profiles(
-    triples: DataFrame,
-    canon: DataFrame,
-    broadcast_canon: bool = True,
-) -> DataFrame:
+def entity_profiles(triples: DataFrame, canon: DataFrame) -> DataFrame:
     """Per-canonical-entity serving view — the "entity card" a KG
     consumer asks for first: how active is this entity (as subject /
     object), across how many distinct predicates, over what time span,
@@ -420,7 +397,7 @@ def entity_profiles(
     tiebreak (count desc, surface asc) so the gate hash is stable."""
     from pyspark.sql import Window
 
-    sides = _profile_sides(triples, canon, broadcast_canon)
+    sides = _profile_sides(triples, canon)
     per_pred = sides.groupBy("entity_id", "pred").agg(
         F.sum("is_subj").alias("n_subj"),
         F.sum(1 - F.col("is_subj")).alias("n_obj"),
@@ -451,12 +428,12 @@ def entity_profiles(
     return stats.join(top, "entity_id")
 
 
-def _profile_sides(triples: DataFrame, canon: DataFrame, broadcast_canon: bool) -> DataFrame:
+def _profile_sides(triples: DataFrame, canon: DataFrame) -> DataFrame:
     """Both triple sides resolved and unioned into (entity_id, surface,
     pred, ts, is_subj) rows — shared by the one-shot serving view and
     the incremental partials."""
-    resolved = _resolve(triples, canon, "subj", broadcast_canon)
-    resolved = _resolve(resolved, canon, "obj", broadcast_canon)
+    resolved = _resolve(triples, canon, "subj")
+    resolved = _resolve(resolved, canon, "obj")
     return resolved.select(
         F.col("subj_id").alias("entity_id"),
         F.col("subj_value").alias("surface"),
@@ -474,11 +451,7 @@ def _profile_sides(triples: DataFrame, canon: DataFrame, broadcast_canon: bool) 
     )
 
 
-def entity_profile_partials(
-    triples: DataFrame,
-    canon: DataFrame,
-    broadcast_canon: bool = True,
-) -> DataFrame:
+def entity_profile_partials(triples: DataFrame, canon: DataFrame) -> DataFrame:
     """Incremental-view-maintenance partials for ``entity_profiles``:
     one row per (entity_id, pred, surface) with the MERGEABLE statistics
     (n_subj/n_obj sums, first/last ts bounds, occurrence count). The
@@ -496,7 +469,7 @@ def entity_profile_partials(
     Shape at scale: broadcast canon resolve + ONE hash aggregate on the
     partial key (map-side partials bound hot entities)."""
     return (
-        _profile_sides(triples, canon, broadcast_canon)
+        _profile_sides(triples, canon)
         .groupBy("entity_id", "pred", "surface")
         .agg(
             F.sum("is_subj").cast("long").alias("n_subj"),
@@ -574,7 +547,6 @@ def edge_provenance(
     canon: DataFrame,
     k: int = PROVENANCE_K,
     n_salts: int = PROVENANCE_SALTS,
-    broadcast_canon: bool = True,
 ) -> DataFrame:
     """(subj_id, pred, obj_id, conv_id, turn_idx, rank): up to ``k``
     supporting turns per materialized edge — the evidence/citation table
@@ -600,8 +572,8 @@ def edge_provenance(
 
     from transner_spark.functions.hashing import h60
 
-    resolved = _resolve(triples, canon, "subj", broadcast_canon)
-    resolved = _resolve(resolved, canon, "obj", broadcast_canon)
+    resolved = _resolve(triples, canon, "subj")
+    resolved = _resolve(resolved, canon, "obj")
     base = (
         resolved.select("subj_id", "pred", "obj_id", "conv_id", "turn_idx")
         .distinct()  # one citation per supporting turn

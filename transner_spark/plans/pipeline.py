@@ -181,7 +181,7 @@ class PipelineRun:
             "annotated", lambda: annotate_turns(transcripts, cfg)
         )
         out["quarantine"] = self._stage(
-            "quarantine", lambda: split_quarantine(transcripts, cfg)[1]
+            "quarantine", lambda: split_quarantine(transcripts)[1]
         )
         out["mentions"] = self._stage(
             "mentions", lambda: explode_mentions(out["annotated"])
