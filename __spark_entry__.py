@@ -1290,22 +1290,21 @@ def q_pipeline_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from transner_spark.plans.pipeline import PipelineRun
-    from transner_spark.sources.catalog import Catalog
 
     workdir = tempfile.mkdtemp(prefix="lineage_gate_")
     run = PipelineRun(spark, workdir)
     try:
         run.run(_transcripts(spark, sf_dir))
-        lineage = Catalog(spark, workdir).read("_lineage")
+        lineage = run.catalog.read("_lineage")
         out = (
             lineage.groupBy("stage")
             .agg(F.sum("rows_out").cast("long").alias("rows_out"))
             .toPandas()
         )
     finally:
-        # the serving table's catalog entry points into the tempdir —
+        # the edge table's catalog entry points into the tempdir —
         # drop it with the files so no dangling entry outlives the gate
-        spark.sql(f"DROP TABLE IF EXISTS {run.serving_table}")
+        spark.sql(f"DROP TABLE IF EXISTS {run.edges_table}")
         shutil.rmtree(workdir, ignore_errors=True)
     return spark.createDataFrame(out, "stage string, rows_out long")
 
@@ -1973,7 +1972,6 @@ def _lineage_chain_sql(cache: str, phrases: str, names: str) -> str:
         UNION ALL SELECT 'links', CAST(COUNT(*) AS BIGINT) FROM lnk
         UNION ALL SELECT 'canonical', CAST(COUNT(*) AS BIGINT) FROM can
         UNION ALL SELECT 'edges', CAST(COUNT(*) AS BIGINT) FROM edg
-        UNION ALL SELECT 'serving', CAST(COUNT(*) AS BIGINT) FROM edg
     """
 
 

@@ -34,19 +34,16 @@ def test_pipeline_commits_and_resume(spark, tiny_df, tmp_path):
     # simulate a mid-run kill: wipe the trailing stages, rerun
     shutil.rmtree(run1.catalog.path("canonical"))
     shutil.rmtree(run1.catalog.path("edges"))
-    shutil.rmtree(run1.catalog.path("serving"))
     run2 = PipelineRun(spark, workdir, run_id="run2")
     out2 = run2.run(tiny_df)
-    assert set(run2.stages_run) == {"canonical", "edges", "serving"}
-    assert set(run2.stages_skipped) == set(STAGES) - {
-        "canonical", "edges", "serving",
-    }
+    assert set(run2.stages_run) == {"canonical", "edges"}
+    assert set(run2.stages_skipped) == set(STAGES) - {"canonical", "edges"}
 
     # run2 logs only the stages it committed; run1's rows are intact
     lineage2 = run2.catalog.read("_lineage").toPandas()
     assert set(lineage2["run_id"]) == {"run1", "run2"}
     assert _stage_rows(lineage2, "run2") == {
-        s: out2[s].count() for s in ("canonical", "edges", "serving")
+        s: out2[s].count() for s in ("canonical", "edges")
     }
     key = ["run_id", "stage", "partition_id"]
     old = lineage2[lineage2["run_id"] == "run1"]

@@ -43,7 +43,8 @@ def test_dedup_incremental_no_cartesian(spark):
 
 def test_edges_rollup_is_salted_two_phase(spark, tiny_df):
     """materialize_edges' salted path: the pre-aggregate must include
-    the salt column so the hot-key rollup happens in two phases."""
+    the salt column so the hot-key rollup happens in two phases, and the
+    bucket clustering of the final phase must add no third shuffle."""
     from transner_spark.operators.annotate import annotate_turns, explode_triples
     from transner_spark.operators.canonicalize import canonicalize
     from transner_spark.operators.linking import link_surfaces, node_surfaces
@@ -54,6 +55,7 @@ def test_edges_rollup_is_salted_two_phase(spark, tiny_df):
     p = _plan(materialize_edges(t, canon))
     assert "salt" in p
     assert "CartesianProduct" not in p
+    assert p.count("Exchange hashpartitioning") == 2, p
 
 
 @pytest.fixture()
@@ -95,7 +97,7 @@ def _no_broadcast(spark):
 
 
 def test_bucketed_edges_self_join_skips_shuffle(spark, bucketed_edges):
-    """The serving layout's whole point: an equi-join on subj_id over
+    """The bucketed layout's whole point: an equi-join on subj_id over
     the bucketed edge table must read both sides pre-distributed — zero
     shuffle Exchanges — while the identical plain-parquet join shuffles
     both sides. (two-hop / edge-diff / incremental-merge all join on
@@ -207,7 +209,7 @@ def test_communities_rank_window_is_partitioned(spark):
 
 
 def test_bucketed_reattach_after_catalog_loss(spark, tmp_path):
-    """A resumed run / fresh session has the serving FILES but no
+    """A resumed run / fresh session has the edge FILES but no
     catalog entry (the bucket spec is session metadata):
     ensure_edges_bucketed_table re-binds the CLUSTERED BY spec over the
     existing directory — values identical, zero-Exchange self-join
@@ -231,26 +233,26 @@ def test_bucketed_reattach_after_catalog_loss(spark, tmp_path):
         "subj_id string, pred string, obj_id string, weight long, "
         "first_ts timestamp, last_ts timestamp, bucket int",
     )
-    path = str(tmp_path / "serving")
-    spark.sql("DROP TABLE IF EXISTS serving_reattach_t")
-    write_edges_bucketed(edges, "serving_reattach_t", path, cfg)
-    vals = sorted(map(tuple, spark.table("serving_reattach_t").collect()))
+    path = str(tmp_path / "edges")
+    spark.sql("DROP TABLE IF EXISTS edges_reattach_t")
+    write_edges_bucketed(edges, "edges_reattach_t", path, cfg)
+    vals = sorted(map(tuple, spark.table("edges_reattach_t").collect()))
 
     # simulate the fresh session: catalog entry gone, files remain
     # (saveAsTable with an explicit path is EXTERNAL — drop keeps files)
-    spark.sql("DROP TABLE serving_reattach_t")
-    ensure_edges_bucketed_table(spark, "serving_reattach_t", path, cfg)
-    t = spark.table("serving_reattach_t")
+    spark.sql("DROP TABLE edges_reattach_t")
+    ensure_edges_bucketed_table(spark, "edges_reattach_t", path, cfg)
+    t = spark.table("edges_reattach_t")
     assert sorted(map(tuple, t.collect())) == vals
     with _no_broadcast(spark):
         pb = _plan(t.alias("a").join(t.alias("b"), "subj_id"))
     assert "Exchange hashpartitioning" not in pb, pb
 
-    ensure_edges_bucketed_table(spark, "serving_reattach_t", path, cfg)
+    ensure_edges_bucketed_table(spark, "edges_reattach_t", path, cfg)
     assert sorted(
-        map(tuple, spark.table("serving_reattach_t").collect())
+        map(tuple, spark.table("edges_reattach_t").collect())
     ) == vals
-    spark.sql("DROP TABLE IF EXISTS serving_reattach_t")
+    spark.sql("DROP TABLE IF EXISTS edges_reattach_t")
 
 
 def test_training_shard_write_plan_has_no_join(spark):

@@ -31,7 +31,7 @@ def provenance_reference(triples, canon, k):
     """Python twin: resolve via 'surface:'||norm (structural types are
     their own ids), distinct (edge, conv, turn), rank per edge by
     (h60('pv:'||conv||':'||turn), conv, turn), keep <= k."""
-    structural = {"AGENT", "SPEAKER", "TOOL"}
+    structural = {"AGENT", "TOOL"}
 
     def rid(norm, typ):
         node = norm if typ in structural else f"surface:{norm}"

@@ -23,7 +23,7 @@ TRIPLE_COLUMNS = [
     "conv_id", "turn_idx", "subj_value", "subj_type", "subj_norm", "pred",
     "obj_value", "obj_type", "obj_norm", "confidence",
 ]
-STRUCTURAL_TYPES = ("AGENT", "SPEAKER", "TOOL")
+STRUCTURAL_TYPES = ("AGENT", "TOOL")
 LINK_COLUMNS = ["norm_key", "entity_key", "score", "method"]
 CANON_COLUMNS = ["node_id", "canon_id"]
 EDGE_COLUMNS = ["subj_id", "pred", "obj_id", "weight", "first_ts", "last_ts"]

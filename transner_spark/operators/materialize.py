@@ -1,19 +1,19 @@
 """Edge materialization: resolve triples through canonical ids and
-aggregate to a weighted edge table partitioned by subject-hash bucket.
+aggregate to a weighted edge table bucketed by subject hash.
 
 Skew strategy (north rule: "partitioned by subject-hash with salting"):
 - the canon map is joined with ``broadcast()``: it is dim-sized (it holds
   DISTINCT surfaces, not mentions), so the triple stream never shuffles
   for the resolve;
-- the aggregation itself is protected by an explicit two-phase salted
-  aggregate: partial (subj, pred, obj, salt) groups first — bounding any
-  single reducer's share of a hot edge to 1/salt — then the tiny partial
-  set re-aggregates. Spark's map-side partial aggregation already makes
-  plain count/min/max skew-tolerant, so salting is a flag (default on,
-  cost is one extra narrow agg over partials);
-- output written ``partitionBy(bucket)`` where
-  ``bucket = pmod(hash(subj_id), edge_buckets)`` — readers that filter on
-  subject hit exactly one partition (partition pruning).
+- the aggregation is an explicit two-phase salted aggregate: partial
+  (subj, pred, obj, salt) groups first — bounding any single reducer's
+  share of a hot edge to 1/salt — then the tiny partial set
+  re-aggregates (salting is a flag, default on);
+- the final phase is hash-partitioned on
+  ``bucket = pmod(hash(subj_id), edge_buckets)`` — Spark's own bucket id
+  for ``bucketBy(edge_buckets, subj_id)`` — so each bucket lands in one
+  task and ``write_edges_bucketed`` writes one file per bucket with no
+  Exchange of its own. Readers that filter on subject read one bucket.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from transner_spark.kernels.oracle import STRUCTURAL_TYPES
 
 def _resolve(triples: DataFrame, canon: DataFrame, side: str) -> DataFrame:
     """Resolve one side (subj/obj) through the canon map. Structural nodes
-    (AGENT/TOOL/SPEAKER) are their own canonical ids."""
+    (AGENT/TOOL) are their own canonical ids."""
     structural = list(STRUCTURAL_TYPES)
     surface = F.concat(F.lit("surface:"), F.col(f"{side}_norm"))
     node = F.when(F.col(f"{side}_type").isin(structural), F.col(f"{side}_norm")).otherwise(surface)
@@ -57,33 +57,35 @@ def _edge_rollup(
     resolved: DataFrame, cfg: PipelineConfig, salted: bool
 ) -> DataFrame:
     """The edge aggregate over a resolved frame: two-phase salted (hot
-    edges bounded per task) or plain one-shuffle."""
+    edges bounded per task) or plain one-shuffle (the resolved rows
+    shuffle uncombined). The final phase's shuffle is on ``bucket`` alone
+    with no partition count, so AQE may still coalesce: it satisfies the
+    (bucket, edge key) grouping, and every bucket lands in exactly one
+    task for any task count."""
+    rollup = (
+        F.count(F.lit(1)).alias("weight"),
+        F.min("ts").alias("first_ts"),
+        F.max("ts").alias("last_ts"),
+    )
+    rows, aggs = resolved, rollup
     if salted:
-        partial = (
-            resolved.withColumn(
-                "salt", F.pmod(F.hash("subj_id", "obj_id", "ts"), F.lit(cfg.salt_partitions))
-            )
+        salt = F.pmod(F.hash("subj_id", "obj_id", "ts"), F.lit(cfg.salt_partitions))
+        rows = (
+            resolved.withColumn("salt", salt)
             .groupBy("subj_id", "pred", "obj_id", "salt")
-            .agg(
-                F.count(F.lit(1)).alias("weight"),
-                F.min("ts").alias("first_ts"),
-                F.max("ts").alias("last_ts"),
-            )
+            .agg(*rollup)
         )
-        edges = partial.groupBy("subj_id", "pred", "obj_id").agg(
+        aggs = (
             F.sum("weight").alias("weight"),
             F.min("first_ts").alias("first_ts"),
             F.max("last_ts").alias("last_ts"),
         )
-    else:
-        edges = resolved.groupBy("subj_id", "pred", "obj_id").agg(
-            F.count(F.lit(1)).alias("weight"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-
-    return edges.withColumn(
-        "bucket", F.pmod(F.hash("subj_id"), F.lit(cfg.edge_buckets))
+    return (
+        rows.withColumn("bucket", F.pmod(F.hash("subj_id"), F.lit(cfg.edge_buckets)))
+        .repartition("bucket")
+        .groupBy("bucket", "subj_id", "pred", "obj_id")
+        .agg(*aggs)
+        .select("subj_id", "pred", "obj_id", "weight", "first_ts", "last_ts", "bucket")
     )
 
 
@@ -287,58 +289,27 @@ def edges_diff(edges_old: DataFrame, edges_new: DataFrame) -> DataFrame:
     )
 
 
-def write_edges(edges: DataFrame, path: str, cfg: PipelineConfig | None = None) -> None:
-    """Write partitioned by subject-hash bucket (Iceberg would use
-    ``bucket(N, subj_id)`` partition transform; Parquet fallback keeps the
-    identical layout via an explicit bucket column, SURVEY.md §1.2).
-
-    The repartition CLUSTERS rows by bucket before the partitioned write:
-    without it every upstream task writes a file into every bucket
-    directory (tasks × buckets small files — measured 2048 files / 11s
-    vs 64 files / 0.8s at sf0.1, and catastrophic at warehouse scale).
-    Write parallelism equals ``cfg.edge_buckets``, the same knob that
-    sizes the subject-hash layout — raise both together as the corpus
-    grows."""
-    cfg = cfg or PipelineConfig()
-    (
-        edges.repartition(cfg.edge_buckets, F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-
-
 def write_edges_bucketed(
     edges: DataFrame,
     table: str,
     path: str,
     cfg: PipelineConfig | None = None,
 ) -> None:
-    """Serving-layout twin of ``write_edges``: a Spark-native BUCKETED
-    table (``bucketBy(edge_buckets, subj_id)`` + ``sortBy``) registered
-    in the session catalog at ``path``.
+    """Write the one edge layout: a Spark-native BUCKETED table
+    (``bucketBy(edge_buckets, subj_id)`` + ``sortBy``) registered in the
+    session catalog at ``path``.
 
-    Why it exists: a plain parquet directory carries no partitioning
-    metadata, so EVERY downstream consumer that joins or aggregates on
-    ``subj_id`` — the graph stage's self-joins (two-hop), per-node rank
-    windows (neighbors top-k), entity rollups, edge-diff audits — pays a
-    fresh shuffle of the whole edge table. A bucketed table persists the
-    hash distribution in the catalog: scans come back already
-    hash-partitioned on ``subj_id``, and Catalyst drops the Exchange on
-    that side of any equi-join/agg keyed by it (pinned by
-    tests/test_plan_shapes.py::test_bucketed_edges_*). One write-time
-    shuffle is amortized across every read — at 100 TB the difference
-    between "each analytics query re-shuffles the KG" and "the KG is
-    born co-located". On Iceberg the same layout is the
-    ``bucket(N, subj_id)`` partition transform read under
-    storage-partitioned joins (SURVEY.md §1.2 toggle; no jar in this
-    sandbox, so the exercised branch is the session-catalog parquet
-    bucketed table — semantics and plan shape identical).
-
-    Bucket count = ``cfg.edge_buckets``, the same knob as the
-    subject-hash layout in ``write_edges`` — raise both with corpus
-    size. ``sortBy(subj_id)`` additionally lets single-file buckets skip
-    the join's Sort."""
+    A plain parquet directory carries no partitioning metadata, so every
+    consumer that joins or aggregates on ``subj_id`` (two-hop self-joins,
+    top-k neighbor windows, entity rollups, edge-diff audits) would
+    re-shuffle the whole table. The bucketed table's scans come back
+    hash-partitioned on ``subj_id``: Catalyst drops that Exchange, and a
+    point lookup reads one bucket (tests/test_plan_shapes.py pins both).
+    On Iceberg the same layout is the ``bucket(N, subj_id)`` partition
+    transform (SURVEY.md §1.2). ``materialize_edges`` already partitions
+    its final phase on the bucket id, so the write adds no shuffle and
+    produces one file per bucket. ``sortBy(subj_id)`` lets single-file
+    buckets skip the join's Sort."""
     cfg = cfg or PipelineConfig()
     (
         edges.write.mode("overwrite")
@@ -356,10 +327,10 @@ def ensure_edges_bucketed_table(
     path: str,
     cfg: PipelineConfig | None = None,
 ) -> None:
-    """Idempotently (re)register the bucketed serving table over an
-    ALREADY-WRITTEN serving path. The bucket spec is catalog METADATA
+    """Idempotently (re)register the bucketed edge table over an
+    ALREADY-WRITTEN edge path. The bucket spec is catalog METADATA
     while the files are durable: a resumed run or a fresh session that
-    skips the serving write would otherwise read the path as plain
+    skips the edge write would otherwise read the path as plain
     parquet and silently lose the zero-Exchange property the layout
     exists for. Spark's bucketed writer encodes each file's bucket id
     in its name, so an external ``CLUSTERED BY`` table declared over

@@ -50,6 +50,10 @@ def _in_list(words) -> str:
     return "(" + ", ".join(f"'{w}'" for w in words) + ")"
 
 
+# node types that are their own canonical ids (spelled out here, not
+# imported, so the oracle stays independent of the kernel)
+_STRUCTURAL = "('AGENT', 'TOOL')"
+
 _TOKS = (
     "CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[]) "
     "ELSE regexp_split_to_array(trim(text), '[ \\t\\n\\v\\f\\r]+') END"
@@ -1213,7 +1217,6 @@ def kg_links_sql(
     surfaces -> exact join + 3-gram inverted-index Jaccard + tie-breaks
     against the alias_dim parquet (shared data; the linking LOGIC is all
     SQL)."""
-    structural = "('AGENT', 'SPEAKER', 'TOOL')"
     grams3 = """
     CASE WHEN length(p) < 3 THEN [p]
          ELSE list_distinct([substr(p, i, 3)
@@ -1222,9 +1225,9 @@ def kg_links_sql(
 WITH t AS (SELECT * FROM {triples_src}),
 surf AS (
   SELECT DISTINCT norm_key FROM (
-    SELECT subj_norm AS norm_key FROM t WHERE subj_type NOT IN {structural}
+    SELECT subj_norm AS norm_key FROM t WHERE subj_type NOT IN {_STRUCTURAL}
     UNION ALL
-    SELECT obj_norm FROM t WHERE obj_type NOT IN {structural}
+    SELECT obj_norm FROM t WHERE obj_type NOT IN {_STRUCTURAL}
   ) WHERE norm_key <> ''
 ),
 a AS (SELECT alias_id, entity_key, alias, norm FROM read_parquet('{alias_dim}')),
@@ -1316,7 +1319,6 @@ def kg_edges_sql(
     unix_timestamp(): DuckDB's epoch() is fractional, and with
     subsecond timestamps the snapshot membership at the cutoff would
     otherwise disagree between operator and oracle (ADVICE r3)."""
-    structural = "('AGENT', 'SPEAKER', 'TOOL')"
     asof = (
         """,
 t AS (
@@ -1340,10 +1342,10 @@ WITH t0 AS (
 c AS (SELECT * FROM {canonical_src}),
 nodes AS (
   SELECT
-    CASE WHEN subj_type IN {structural} THEN subj_norm
+    CASE WHEN subj_type IN {_STRUCTURAL} THEN subj_norm
          ELSE 'surface:' || subj_norm END AS subj_node,
     pred,
-    CASE WHEN obj_type IN {structural} THEN obj_norm
+    CASE WHEN obj_type IN {_STRUCTURAL} THEN obj_norm
          ELSE 'surface:' || obj_norm END AS obj_node,
     ts
   FROM t
@@ -1376,15 +1378,14 @@ def edge_provenance_sql(
 
     if k is None:
         k = PROVENANCE_K
-    structural = "('AGENT', 'SPEAKER', 'TOOL')"
     h = _h60("('pv:' || conv_id || ':' || CAST(turn_idx AS VARCHAR))")
     return f"""
 WITH nodes AS (
   SELECT
-    CASE WHEN subj_type IN {structural} THEN subj_norm
+    CASE WHEN subj_type IN {_STRUCTURAL} THEN subj_norm
          ELSE 'surface:' || subj_norm END AS subj_node,
     pred,
-    CASE WHEN obj_type IN {structural} THEN obj_norm
+    CASE WHEN obj_type IN {_STRUCTURAL} THEN obj_norm
          ELSE 'surface:' || obj_norm END AS obj_node,
     conv_id, turn_idx
   FROM {triples_src}
@@ -1449,9 +1450,8 @@ def entity_profiles_sql(
     through the canon map, union, aggregate counts/pred-distinct/time
     bounds, and pick the modal surface with the same deterministic
     (count desc, surface asc) tiebreak."""
-    structural = "('AGENT', 'SPEAKER', 'TOOL')"
-    sn = f"CASE WHEN subj_type IN {structural} THEN subj_norm ELSE 'surface:' || subj_norm END"
-    on = f"CASE WHEN obj_type IN {structural} THEN obj_norm ELSE 'surface:' || obj_norm END"
+    sn = f"CASE WHEN subj_type IN {_STRUCTURAL} THEN subj_norm ELSE 'surface:' || subj_norm END"
+    on = f"CASE WHEN obj_type IN {_STRUCTURAL} THEN obj_norm ELSE 'surface:' || obj_norm END"
     return f"""
 WITH t AS (
   SELECT tr.*, tc.ts
@@ -2078,7 +2078,6 @@ def entity_cooccurrence_sql(
 
     if min_pair_count is None:
         min_pair_count = COOC_MIN_PAIR_COUNT
-    structural = "('AGENT', 'SPEAKER', 'TOOL')"
     lift = (
         "(CAST(n_pair AS DOUBLE) * (SELECT n_convs FROM nn))"
         " / (CAST(ma.n_node AS DOUBLE) * CAST(mb.n_node AS DOUBLE))"
@@ -2086,12 +2085,12 @@ def entity_cooccurrence_sql(
     return f"""
 WITH tn AS (
   SELECT conv_id,
-         CASE WHEN subj_type IN {structural} THEN subj_norm
+         CASE WHEN subj_type IN {_STRUCTURAL} THEN subj_norm
               ELSE 'surface:' || subj_norm END AS node
   FROM {triples_src}
   UNION ALL
   SELECT conv_id,
-         CASE WHEN obj_type IN {structural} THEN obj_norm
+         CASE WHEN obj_type IN {_STRUCTURAL} THEN obj_norm
               ELSE 'surface:' || obj_norm END
   FROM {triples_src}
 ),

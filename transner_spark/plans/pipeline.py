@@ -7,21 +7,20 @@ analogue of the reference's JSON-lines request log, upgraded to a
 checkpoint-table contract):
 
     transcripts ─→ annotated ─→ mentions
-                        │  └──→ triples ─→ links ─→ canonical ─→ edges ─→ serving
+                        │  └──→ triples ─→ links ─→ canonical ─→ edges
                         └─────→ quarantine
 
-The final ``serving`` stage re-publishes the committed edge table as the
-bucketed layout (operators/materialize.write_edges_bucketed): downstream
-subj_id joins/aggs read it shuffle-free and point lookups bucket-prune
-(BENCH.md bucketed section) — the KG is born co-located, as part of the
-resumable run rather than a separate job.
+The ``edges`` stage commits the one edge table as the bucketed layout
+(operators/materialize.write_edges_bucketed): downstream subj_id
+joins/aggs read it shuffle-free and point lookups bucket-prune (BENCH.md
+bucketed section) — the KG is born co-located, as part of the resumable
+run rather than a separate job.
 
 Commits cost no Spark job beyond the write itself. Lineage is read from
 the parquet footers of the files the write just committed (one row per
 write task, keyed by the ``part-NNNNN`` task number) and appended on the
 driver as one small file; each committed table is read once per run and
-that DataFrame feeds downstream stages, the serving write and the
-returned dict alike.
+that DataFrame feeds downstream stages and the returned dict alike.
 
 On rerun, any stage whose output is already committed (``_SUCCESS``
 present — the Parquet stand-in for an Iceberg snapshot) is skipped; a
@@ -66,7 +65,6 @@ STAGES = (
     "links",
     "canonical",
     "edges",
-    "serving",
 )
 
 
@@ -119,7 +117,7 @@ class PipelineRun:
         digest = hashlib.md5(
             os.path.abspath(workdir).encode("utf-8")
         ).hexdigest()[:10]
-        self.serving_table = f"edges_serving_{digest}"
+        self.edges_table = f"edges_{digest}"
         self.stages_run: list[str] = []
         self.stages_skipped: list[str] = []
 
@@ -158,19 +156,12 @@ class PipelineRun:
             return True
         return False
 
-    def _stage(
-        self,
-        stage: str,
-        build: Callable[[], DataFrame],
-        partition_by: list[str] | None = None,
-    ) -> DataFrame:
+    def _stage(self, stage: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Commit ``stage`` unless it is already committed, then read it
         back — the one read of this table in the run."""
         if not self._done(stage):
             df = build()
-            self._commit(
-                stage, lambda: self.catalog.write(df, stage, partition_by=partition_by)
-            )
+            self._commit(stage, lambda: self.catalog.write(df, stage))
         return self.catalog.read(stage)
 
     # -- stages ----------------------------------------------------------
@@ -196,31 +187,20 @@ class PipelineRun:
         out["canonical"] = self._stage(
             "canonical", lambda: canonicalize(out["links"])
         )
-        out["edges"] = self._stage(
-            "edges",
-            lambda: materialize_edges(out["triples"], out["canonical"], cfg),
-            partition_by=["bucket"],
-        )
-        if not self._done("serving"):
-            # bucketed serving twin of the edge table — bypasses
-            # catalog.write (the layout IS the point) but keeps the same
-            # lineage + commit bookkeeping; the catalog name is
-            # workdir-stable, the durable artifact is the path
+        # the bucketed layout bypasses catalog.write; the durable
+        # artifact is the path, the bucket spec is catalog metadata
+        edges_path = self.catalog.path("edges")
+        if not self._done("edges"):
+            edges = materialize_edges(out["triples"], out["canonical"], cfg)
             self._commit(
-                "serving",
-                lambda: write_edges_bucketed(
-                    out["edges"], self.serving_table, self.catalog.path("serving"), cfg
-                ),
+                "edges",
+                lambda: write_edges_bucketed(edges, self.edges_table, edges_path, cfg),
             )
         else:
-            # resumed run / fresh session: the files are committed but
-            # the bucket spec is session-catalog metadata — re-attach it
-            # so downstream reads keep the zero-Exchange property
-            ensure_edges_bucketed_table(
-                self.spark, self.serving_table, self.catalog.path("serving"), cfg
-            )
-        # read through the catalog entry (never the bare path): the
-        # bucketed distribution only exists via the table metadata
-        out["serving"] = self.spark.table(self.serving_table)
+            # resumed run / fresh session: re-attach the bucket spec so
+            # downstream reads keep the zero-Exchange property
+            ensure_edges_bucketed_table(self.spark, self.edges_table, edges_path, cfg)
+        # read through the catalog entry, never the bare path
+        out["edges"] = self.spark.table(self.edges_table)
         return out
 
