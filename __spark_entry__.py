@@ -56,18 +56,6 @@ def _links(spark: SparkSession, sf_dir: str) -> DataFrame:
     return link_surfaces(spark, node_surfaces(_triples(spark, sf_dir)))
 
 
-def _golden(sf_dir: str, table: str) -> str:
-    from transner_spark.sources.transcripts import sf_name
-
-    return os.path.join(REPO, "data", "golden", sf_name(sf_dir), f"{table}.parquet")
-
-
-def _cache(sf_dir: str) -> str:
-    from transner_spark.sources.transcripts import sf_name
-
-    return os.path.join(REPO, "data", "cache", sf_name(sf_dir), "transcripts.parquet")
-
-
 # ---------------------------------------------------------------- queries
 def q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from transner_spark.operators.annotate import explode_mentions

@@ -1,10 +1,15 @@
-"""Benchmark: full KG pipeline at $SPARK_GRAFT_SF_DIR (default sf0.1,
-~200k turns) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark: the KG pipeline users launch (``PipelineRun``) at
+$SPARK_GRAFT_SF_DIR (default sf0.1, ~200k turns) on
+local[$SPARK_GRAFT_CPUS] (default: the host's cores).
 
 Prints ONE JSON line:
   {"metric": "kg_pipeline_wall", "value": <total sec>, "unit": "sec",
    "queries": {stage: sec, ...}, "sf": ..., "turns": N, "triples": N,
    "triples_per_sec": ..., "turns_per_sec": ...}
+
+Each stage's wall time and row count come from the ``_lineage`` rows the
+run writes (``run_pipeline_pass``); the trainops ops run in their own
+JVM, timed by ``measure``.
 
 ``--scaling`` additionally runs the same job at the two SCALING_LEVELS
 parallelism levels on the same (larger) input and writes BENCH.md with
@@ -94,16 +99,6 @@ class RssSampler:
         return max(self.samples)
 
 
-@contextmanager
-def stage(name: str, timings: dict[str, float], rss: dict[str, float]):
-    """Time a bench stage and record its peak process-tree RSS."""
-    sampler = RssSampler()
-    t0 = time.monotonic()
-    with sampler:
-        yield
-    timings[name] = time.monotonic() - t0
-    rss[name] = sampler.peak
-
 # N vs 4N proxy pairs. The headline pair (2, 8) sits inside this host's
 # unsaturated region (see the rationale block written into BENCH.md);
 # the (8, 32) pair is reported alongside for transparency — it measures
@@ -151,144 +146,69 @@ def ensure_scaling_corpus(turns: int = 1_600_000) -> str:
     return out
 
 
-def warm_up(spark, transcripts, workdir: str) -> None:
-    """Run the WHOLE pipeline on a 1% sample before the clock starts:
-    spawns every python worker, loads per-worker singletons, compiles
-    the whole-stage-codegen plans of every stage, and materializes the
-    session dim tables (alias exact/gram index). Same steady-state
-    policy the trainops runner already applies per-op — measured: the
-    links stage's first execution carries ~3.3s of one-time codegen +
-    dim + checkpoint cost at sf0.1 that vanishes on re-run. We benchmark
-    steady-state throughput, not JIT/interpreter start-up (documented in
-    BENCH.md)."""
-    from transner_spark.operators.annotate import (
-        annotate_turns, explode_mentions, explode_triples,
-    )
-    from transner_spark.operators.canonicalize import canonicalize
-    from transner_spark.operators.linking import link_surfaces, node_surfaces
-    from transner_spark.operators.materialize import (
-        materialize_edges, write_edges_bucketed,
-    )
+def run_pipeline_pass(spark, transcripts, workdir: str) -> dict:
+    """One ``PipelineRun`` over ``transcripts`` into ``workdir``, under one
+    process-tree RSS sampler. Each stage's wall time is its lineage
+    ``wall_ms`` (plan build + write) and its rows are its summed
+    ``rows_out``: the run's own record, so no count and no extra Spark
+    job. Returns ``{"timings": {stage: s}, "rows": {stage: n}, "rss":
+    peak MiB}``, in stage order."""
+    import pyarrow.parquet as pq
 
-    # sample() keeps the input partitioning, so tasks land on every core
-    # and all python workers spawn (limit() would collapse partitions)
-    sample = annotate_turns(transcripts.sample(0.01, seed=7)).persist()
-    sample.count()
-    explode_mentions(sample).count()
-    triples = explode_triples(sample).persist()
-    links = link_surfaces(spark, node_surfaces(triples)).persist()
-    canon = canonicalize(links)
-    write_edges_bucketed(
-        materialize_edges(triples, canon),
-        "bench_warmup_edges",
-        os.path.join(workdir, "warmup_edges"),
-    )
-    spark.sql("DROP TABLE bench_warmup_edges")
-    sample.unpersist()
-    triples.unpersist()
-    links.unpersist()
+    from transner_spark.plans.pipeline import STAGES, PipelineRun
 
-
-def run_pipeline_timed(
-    spark,
-    sf_dir: str,
-    workdir: str,
-    transcripts_path: str | None = None,
-    measure_kernel: bool = False,
-) -> dict:
-    from transner_spark.operators.annotate import (
-        annotate_turns, explode_mentions, explode_triples,
-    )
-    from transner_spark.operators.canonicalize import canonicalize
-    from transner_spark.operators.linking import link_surfaces, node_surfaces
-    from transner_spark.operators.materialize import (
-        materialize_edges, write_edges_bucketed,
-    )
-    from transner_spark.sources.transcripts import ensure_transcripts_parquet
-
-    from pyspark import StorageLevel
-
-    path = transcripts_path or ensure_transcripts_parquet(REPO, sf_dir)
-    transcripts = spark.read.parquet(path)
-    warm_up(spark, transcripts, workdir)
-
-    # serialized caching: the deserialized default balloons the 1.5M-turn
-    # array columns past the local JVM heap and GC-thrashes the small
-    # downstream stages; a big heap instead slows every small task
-    # (first-touch faults + huge young gen). Serialized fits comfortably.
-    CACHE = StorageLevel.MEMORY_AND_DISK
-
+    run = PipelineRun(spark, workdir)
+    with RssSampler() as sampler:
+        run.run(transcripts)
+    spark.sql(f"DROP TABLE IF EXISTS {run.edges_table}")
+    lineage = pq.read_table(
+        run.catalog.path("_lineage"), columns=["run_id", "stage", "rows_out", "wall_ms"]
+    ).to_pylist()
     timings: dict[str, float] = {}
-    rss: dict[str, float] = {}
-    extras: dict[str, float] = {}
-    extras_spread: dict[str, list[float]] = {}
+    rows: dict[str, int] = {}
+    for stage in STAGES:
+        mine = [r for r in lineage if r["run_id"] == run.run_id and r["stage"] == stage]
+        # the record keeps the key earlier BENCH records used
+        key = "annotate" if stage == "annotated" else stage
+        timings[key] = mine[0]["wall_ms"] / 1000.0
+        rows[key] = sum(r["rows_out"] for r in mine)
+    return {"timings": timings, "rows": rows, "rss": sampler.peak}
 
-    if measure_kernel:
-        # Kernel-only instrumentation passes (plain .count(), no
-        # persist): separates NER-kernel time from cache-write cost in
-        # the "annotate" stage below. MIN-OF-3 with recorded spread
-        # (VERDICT r4): rep 1 still absorbs the one-time first-full-pass
-        # JVM ramp (~0.7s at sf0.1: heap growth + full-batch JIT the
-        # sampled warm-up can't reach) so the downstream stages stay
-        # steady-state, but the RECORDED number is now the min of three
-        # — a ramp can no longer masquerade as a kernel regression.
-        # Reported as "annotate_kernel" in the queries map; excluded
-        # from the wall total — a production run executes annotate once.
-        durs: list[float] = []
-        peak = 0.0
-        for _ in range(3):
-            ek: dict[str, float] = {}
-            ek_rss: dict[str, float] = {}
-            with stage("annotate_kernel", ek, ek_rss):
-                annotate_turns(transcripts).count()
-            durs.append(ek["annotate_kernel"])
-            peak = max(peak, ek_rss["annotate_kernel"])
-        rss["annotate_kernel"] = peak
-        extras["annotate_kernel"] = min(durs)
-        extras_spread["annotate_kernel"] = [round(d, 3) for d in sorted(durs)]
 
-    with stage("annotate", timings, rss):
-        annotated = annotate_turns(transcripts).persist(CACHE)
-        n_turns = annotated.count()
+def run_pipeline_bench(spark, transcripts, workdir: str, passes: int) -> dict:
+    """Steady-state timing of ``PipelineRun``: one untimed pass over a 1%
+    sample first, then ``passes`` timed passes, each into its own workdir
+    under ``workdir``; per-stage MINIMUM with the sorted spread.
 
-    with stage("mentions", timings, rss):
-        n_mentions = explode_mentions(annotated).count()
-
-    with stage("triples", timings, rss):
-        triples = explode_triples(annotated).persist(CACHE)
-        n_triples = triples.count()
-
-    with stage("links", timings, rss):
-        links = link_surfaces(spark, node_surfaces(triples)).persist(CACHE)
-        links.count()
-
-    with stage("canonical", timings, rss):
-        # canonicalize localCheckpoints internally (the canonical-map
-        # materialization) — no extra persist needed
-        canon = canonicalize(links)
-        canon.count()
-
-    with stage("edges", timings, rss):
-        edges = materialize_edges(triples, canon)
-        write_edges_bucketed(edges, "bench_edges", os.path.join(workdir, "edges"))
-    spark.sql("DROP TABLE bench_edges")
-
-    annotated.unpersist()
-    triples.unpersist()
-    links.unpersist()
-
+    The sample pass spawns every python worker, loads the per-worker
+    singletons, compiles each stage's codegen and materializes the
+    session dims (alias exact/gram index) — measured: the links stage's
+    first execution carries ~3.3s of such one-time cost at sf0.1 that
+    vanishes on re-run. ``sample()`` keeps the input partitioning, so
+    its tasks land on every core (``limit()`` would collapse them). The
+    minimum follows ``measure``'s one-sided-noise rationale."""
+    run_pipeline_pass(
+        spark, transcripts.sample(0.01, seed=7), os.path.join(workdir, "warm")
+    )
+    runs = [
+        run_pipeline_pass(spark, transcripts, os.path.join(workdir, f"r{i}"))
+        for i in range(passes)
+    ]
+    timings = {k: min(r["timings"][k] for r in runs) for k in runs[0]["timings"]}
     total = sum(timings.values())
+    rows = runs[0]["rows"]
     return {
         "timings": timings,
-        "extras": extras,
-        "extras_spread": extras_spread,
-        "rss": rss,
+        "spread": {
+            k: sorted(round(r["timings"][k], 3) for r in runs) for k in timings
+        },
+        "rss": max(r["rss"] for r in runs),
         "total": total,
-        "turns": n_turns,
-        "mentions": n_mentions,
-        "triples": n_triples,
-        "turns_per_sec": n_turns / total,
-        "triples_per_sec": n_triples / total,
+        "turns": rows["annotate"],
+        "mentions": rows["mentions"],
+        "triples": rows["triples"],
+        "turns_per_sec": rows["annotate"] / total,
+        "triples_per_sec": rows["triples"] / total,
     }
 
 
@@ -491,7 +411,7 @@ def run_scaling_level(n: int) -> None:
     workdir = tempfile.mkdtemp(prefix=f"transner_lvl{n}_")
     try:
         spark = build_session(f"local[{n}]", n)
-        r = run_pipeline_timed(spark, "", workdir, transcripts_path=corpus)
+        r = run_pipeline_bench(spark, spark.read.parquet(corpus), workdir, passes=1)
         spark.stop()
         print(json.dumps(r))
     finally:
@@ -935,8 +855,10 @@ def main() -> None:
     import shutil
     import tempfile
 
+    from transner_spark.functions.session import default_cpus
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     scaling = "--scaling" in sys.argv
     if "--level" in sys.argv:
         run_scaling_level(int(sys.argv[sys.argv.index("--level") + 1]))
@@ -948,79 +870,51 @@ def main() -> None:
         run_sections(sf_dir, cpus)
         return
 
+    from transner_spark.sources.transcripts import ensure_transcripts_parquet, sf_name
+
     workdir = tempfile.mkdtemp(prefix="transner_bench_")
     try:
         spark = build_session(f"local[{cpus}]", cpus)
-        # THREE full pipeline passes, per-stage MIN (same one-sided-noise
-        # rationale as the trainops reps — run_trainops_timed docstring;
-        # the first pass also absorbs any ramp the sampled warm-up
-        # missed). Two passes proved too thin against this host's bursty
-        # stalls — the r2→r4 driver-record wall "drift" (19.62→21.64s on
-        # an unchanged chain) sat inside the per-stage rep spread; a
-        # third rep tightens the min (round-5 drift investigation,
-        # BENCH.md). Per-stage sorted [r1, r2, r3] spread goes in the
-        # record.
-        runs = [run_pipeline_timed(spark, sf_dir, workdir, measure_kernel=True)]
-        for i in (2, 3):
-            runs.append(
-                run_pipeline_timed(
-                    spark, sf_dir, os.path.join(workdir, f"r{i}"),
-                    measure_kernel=False,
-                )
-            )
-        res = runs[0]
-        res["pipeline_spread_s"] = {
-            k: sorted(round(r["timings"][k], 3) for r in runs)
-            for k in res["timings"]
-        }
-        res["timings"] = {
-            k: min(r["timings"][k] for r in runs) for k in res["timings"]
-        }
-        # runs[0]'s rss also holds the kernel-only pass (absent later)
-        res["rss"] = {
-            k: max(r["rss"].get(k, res["rss"][k]) for r in runs)
-            for k in res["rss"]
-        }
-        res["total"] = sum(res["timings"].values())
-        res["turns_per_sec"] = res["turns"] / res["total"]
-        res["triples_per_sec"] = res["triples"] / res["total"]
+        # THREE timed passes, per-stage MIN. Two passes proved too thin
+        # against this host's bursty stalls: the r2→r4 recorded wall
+        # "drift" (19.62→21.64s on an unchanged chain) sat inside the
+        # per-stage rep spread (round-5 drift investigation, BENCH.md).
+        res = run_pipeline_bench(
+            spark,
+            spark.read.parquet(ensure_transcripts_parquet(REPO, sf_dir)),
+            workdir,
+            passes=3,
+        )
         spark.stop()
         # trainops in its own cold-JVM subprocess + min-of-reps per op —
         # see run_trainops_leg / run_trainops_timed
         tops = _run_trainops_subprocess(sf_dir, cpus)
 
-        from transner_spark.sources.transcripts import sf_name
-
-        stage_rss = {**res["rss"], **tops["rss"]}
-        peaks = list(stage_rss.values())
+        peaks = {"pipeline": res["rss"], **tops["rss"]}
         out = {
             "metric": "kg_pipeline_wall",
             "value": round(res["total"], 3),
             "unit": "sec",
             "queries": {
-                **{k: round(v, 3) for k, v in res["extras"].items()},
                 **{k: round(v, 3) for k, v in res["timings"].items()},
                 **{k: round(v, 3) for k, v in tops["timings"].items()},
             },
             "trainops_counts": tops["counts"],
             # per-op [min, median, max] over TRAINOPS_REPS cold-cache
-            # reps in the isolated trainops JVM, per-stage [run1, run2]
-            # over the two pipeline passes, and min-of-3 sorted reps for
-            # annotate_kernel — the noise floor is in the record, not in
-            # out-of-band reruns; NO single-shot timing anywhere
+            # reps in the isolated trainops JVM, and per-stage sorted
+            # walls over the three pipeline passes — the noise floor is
+            # in the record, not in out-of-band reruns
             "trainops_spread_s": tops["spread"],
-            "pipeline_spread_s": {
-                **res.get("extras_spread", {}),
-                **res["pipeline_spread_s"],
-            },
+            "pipeline_spread_s": res["spread"],
             # reference bench protocol's memory axis (benchmarks.py:59-79
             # reports max/min/avg MiB over per-run memory_usage samples):
-            # per-stage peak process-tree RSS + the same three aggregates
+            # peak process-tree RSS of the pipeline passes and of each
+            # trainops op + the same three aggregates
             "rss_mib": {
-                **{k: round(v, 1) for k, v in stage_rss.items()},
-                "max": round(max(peaks), 1),
-                "min": round(min(peaks), 1),
-                "avg": round(sum(peaks) / len(peaks), 1),
+                **{k: round(v, 1) for k, v in peaks.items()},
+                "max": round(max(peaks.values()), 1),
+                "min": round(min(peaks.values()), 1),
+                "avg": round(sum(peaks.values()) / len(peaks), 1),
             },
             "sf": sf_name(sf_dir),
             "turns": res["turns"],
@@ -1091,8 +985,9 @@ def _write_bench_md(
         "leg runs in its own subprocess (cold JVM — sharing one process "
         "lets heap/GC state from earlier legs contaminate later ones; "
         "measured: the in-process local[32] leg ran 2x slower than the "
-        "isolated one) and is preceded by a full-pipeline warm-up pass, "
-        "so the metric is steady-state pipeline throughput.",
+        "isolated one) and times one `PipelineRun` pass after an untimed "
+        "pass over a 1% sample, so the metric is steady-state throughput "
+        "of the pipeline users launch.",
         "",
         f"Headline pair local[{lo}] vs local[{hi}]: in local mode every "
         "'executor core' costs ~2 host threads (a JVM task thread plus an "
@@ -1105,14 +1000,18 @@ def _write_bench_md(
         "saturated local[8]v[32] figure is reported alongside for "
         "transparency about the proxy's sensitivity to level choice.",
         "",
-        "| parallelism | wall (s) | turns/s | triples/s |",
-        "| --- | --- | --- | --- |",
+        "Peak RSS is over the whole process tree (driver + JVM + Arrow "
+        "workers; the sandbox mirror of the reference bench protocol's "
+        "memory axis, benchmarks.py:59-79).",
+        "",
+        "| parallelism | wall (s) | turns/s | triples/s | peak RSS (MiB) |",
+        "| --- | --- | --- | --- | --- |",
     ]
     for n in SCALING_LEVELS:
         r = levels[n]
         lines.append(
             f"| local[{n}] | {r['total']:.2f} | {r['turns_per_sec']:.1f} | "
-            f"{r['triples_per_sec']:.1f} |"
+            f"{r['triples_per_sec']:.1f} | {r['rss']:.0f} |"
         )
     lines.append("")
     if leg_spread:
@@ -1144,25 +1043,15 @@ def _write_bench_md(
         "",
         "Target ≥ 0.8 on the headline pair (BASELINE.json north rule).",
         "",
-        "Per-stage timings and peak process-tree RSS (driver + JVM + "
-        "Arrow workers; the sandbox mirror of the reference bench "
-        "protocol's max/min/avg-MiB memory axis, benchmarks.py:59-79):",
+        "Per-stage wall (s), from each leg's lineage `wall_ms`:",
         "",
-        "| stage | "
-        + " | ".join(f"local[{n}] s" for n in SCALING_LEVELS)
-        + " | "
-        + " | ".join(f"local[{n}] MiB" for n in SCALING_LEVELS)
-        + " |",
-        "| --- |" + " --- |" * (2 * len(SCALING_LEVELS)),
+        "| stage | " + " | ".join(f"local[{n}]" for n in SCALING_LEVELS) + " |",
+        "| --- |" + " --- |" * len(SCALING_LEVELS),
     ]
     for k in levels[lo]["timings"]:
         lines.append(
             f"| {k} | "
             + " | ".join(f"{levels[n]['timings'][k]:.2f}" for n in SCALING_LEVELS)
-            + " | "
-            + " | ".join(
-                f"{levels[n]['rss'][k]:.0f}" for n in SCALING_LEVELS
-            )
             + " |"
         )
     # preserve EVERY marker-delimited section other writers maintain

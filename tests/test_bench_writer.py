@@ -63,7 +63,7 @@ def test_scaling_report_keeps_upserted_block_verbatim(bench):
         "turns_per_sec": 10.0,
         "triples_per_sec": 5.0,
         "timings": {"annotate": 1.0},
-        "rss": {"annotate": 100.0},
+        "rss": 100.0,
     }
     levels = {n: level for n in bench.SCALING_LEVELS}
     effs = {pair: 1.0 for pair in bench.SCALING_PAIRS}

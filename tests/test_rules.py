@@ -26,6 +26,8 @@ def _one(sentence, type_):
         ("bsn 123456789 daar", "NL_CITIZEN_SERVICE_NUMBER", "123456789"),
         ("nino AB123456C here", "UK_NATIONAL_ID_NUMBER", "AB123456C"),
         ("call 0865989886 now", "EU_PHONE_NUMBER", "0865989886"),
+        # ([\.0-9]+){10} needs no digit: a digit-only prefilter would drop it
+        ("wait .......... ok", "EU_PHONE_NUMBER", ".........."),
         ("mail a.b@example.com x", "EMAIL_ADDRESS", "a.b@example.com"),
         ("ip 192.168.0.1. x", "IPV4_ADDRESS", "192.168.0.1."),
         ("vedi [URL_3] ora", "URI", "[URL_3]"),

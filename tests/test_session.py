@@ -6,7 +6,11 @@ import os
 
 import pytest
 
-from transner_spark.functions.session import MAX_DRIVER_HEAP_GIB, default_driver_memory
+from transner_spark.functions.session import (
+    MAX_DRIVER_HEAP_GIB,
+    default_cpus,
+    default_driver_memory,
+)
 
 GIB_KIB = 2**20
 
@@ -28,3 +32,13 @@ def test_default_driver_memory_reads_this_host():
     assert 1 <= heap <= MAX_DRIVER_HEAP_GIB
     assert heap * GIB_KIB <= max(kib // 2, GIB_KIB)
 
+
+def test_default_cpus_follows_host_unless_set(monkeypatch):
+    # no env: the cores this process may run on, not a fixed 32
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    # the env override is a deployment setting and wins
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3

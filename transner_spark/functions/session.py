@@ -47,6 +47,13 @@ def default_driver_memory(mem_total_kib: int | None = None) -> str:
     return f"{min(MAX_DRIVER_HEAP_GIB, max(1, gib))}g"
 
 
+def default_cpus() -> int:
+    """Local-mode core count: ``SPARK_GRAFT_CPUS`` when set (a deployment
+    setting), otherwise the cores this process may run on, so a default
+    run never oversubscribes the host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "transner_spark",
@@ -62,8 +69,7 @@ def get_spark(
         from pyspark import SparkConf
 
         if SparkConf().get("spark.master", None) is None:
-            cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-            master = f"local[{cpus}]"
+            master = f"local[{default_cpus()}]"
     if shuffle_partitions is None and master is not None and (
         master == "local" or master.startswith("local[")
     ):

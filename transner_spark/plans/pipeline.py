@@ -19,8 +19,9 @@ run rather than a separate job.
 Commits cost no Spark job beyond the write itself. Lineage is read from
 the parquet footers of the files the write just committed (one row per
 write task, keyed by the ``part-NNNNN`` task number) and appended on the
-driver as one small file; each committed table is read once per run and
-that DataFrame feeds downstream stages and the returned dict alike.
+driver as one small file; each committed table is read once per run, with
+the schema it was just written with (no schema-inference job), and that
+DataFrame feeds downstream stages and the returned dict alike.
 
 On rerun, any stage whose output is already committed (``_SUCCESS``
 present — the Parquet stand-in for an Iceberg snapshot) is skipped; a
@@ -124,10 +125,10 @@ class PipelineRun:
     # -- lineage ---------------------------------------------------------
     def _lineage(self, stage: str, wall_ms: float) -> None:
         """One lineage row per write task of the stage's committed output:
-        its row count from the parquet footers, plus the write's wall
-        time. Runs on the driver and launches no Spark job; a stage that
-        wrote no file gets a single zero row, so every committed stage
-        is on record."""
+        its row count from the parquet footers, plus the stage's wall
+        time (plan build + write). Runs on the driver and launches no
+        Spark job; a stage that wrote no file gets a single zero row, so
+        every committed stage is on record."""
         counts = _task_row_counts(self.catalog.path(stage)) or {0: 0}
         tasks = sorted(counts)
         n = len(tasks)
@@ -144,9 +145,10 @@ class PipelineRun:
         )
         self.catalog.append_rows(rows, "_lineage")
 
-    def _commit(self, stage: str, write: Callable[[], None]) -> None:
-        t0 = time.monotonic()
-        write()
+    def _commit(self, stage: str, t0: float) -> None:
+        """Record ``stage`` as committed. Its wall runs from ``t0``, taken
+        before the stage's plan is built: building can checkpoint
+        eagerly (links, canonical), and that work belongs to the stage."""
         self._lineage(stage, (time.monotonic() - t0) * 1000.0)
         self.stages_run.append(stage)
 
@@ -158,11 +160,16 @@ class PipelineRun:
 
     def _stage(self, stage: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Commit ``stage`` unless it is already committed, then read it
-        back — the one read of this table in the run."""
-        if not self._done(stage):
-            df = build()
-            self._commit(stage, lambda: self.catalog.write(df, stage))
-        return self.catalog.read(stage)
+        back — the one read of this table in the run. A fresh commit is
+        read with the schema it was written with, so the read infers
+        nothing; a resumed stage infers it from the files."""
+        if self._done(stage):
+            return self.catalog.read(stage)
+        t0 = time.monotonic()
+        df = build()
+        self.catalog.write(df, stage)
+        self._commit(stage, t0)
+        return self.catalog.read(stage, schema=df.schema)
 
     # -- stages ----------------------------------------------------------
     def run(self, transcripts: DataFrame) -> dict[str, DataFrame]:
@@ -191,11 +198,10 @@ class PipelineRun:
         # artifact is the path, the bucket spec is catalog metadata
         edges_path = self.catalog.path("edges")
         if not self._done("edges"):
+            t0 = time.monotonic()
             edges = materialize_edges(out["triples"], out["canonical"], cfg)
-            self._commit(
-                "edges",
-                lambda: write_edges_bucketed(edges, self.edges_table, edges_path, cfg),
-            )
+            write_edges_bucketed(edges, self.edges_table, edges_path, cfg)
+            self._commit("edges", t0)
         else:
             # resumed run / fresh session: re-attach the bucket spec so
             # downstream reads keep the zero-Exchange property

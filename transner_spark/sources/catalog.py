@@ -18,6 +18,7 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -45,13 +46,16 @@ class Catalog:
         p = self.path(table)
         return os.path.exists(os.path.join(p, "_SUCCESS"))
 
-    def read(self, table: str) -> DataFrame:
+    def read(self, table: str, schema: StructType | None = None) -> DataFrame:
+        """Read ``table``; a known ``schema`` skips the Spark job that
+        infers it from the files."""
         if self.use_iceberg:  # pragma: no cover - no jar in sandbox
             return self.spark.read.format("iceberg").load(self.path(table))
         # a rerun may have replaced files under this path within the same
         # session — drop any cached file listing before reading
         self.spark.catalog.refreshByPath(self.path(table))
-        return self.spark.read.parquet(self.path(table))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(table))
 
     def write(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
         writer = df.write.mode("overwrite")
