@@ -1268,27 +1268,23 @@ def q_mention_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 as a first-class query surface: run the staged pipeline into a
-    scratch warehouse and aggregate its lineage (request-log) table to
-    per-stage output row counts. The oracle re-derives every stage's
-    count independently (length-guard SQL over the transcripts cache for
-    annotated/quarantine; the frozen goldens for the KG stages), so this
-    checks both that the lineage log is faithful and that a fresh
-    end-to-end run reproduces the recorded corpus exactly."""
+    scratch warehouse and read each stage's output row count from its
+    commit record (the run's METRICS.jsonl request log). The oracle
+    re-derives every stage's count independently (the golden-free
+    chained SQL derivation), so this checks both that the commit log is
+    faithful and that a fresh end-to-end run reproduces the corpus
+    exactly."""
     import shutil
     import tempfile
 
     from transner_spark.plans.pipeline import PipelineRun
+    from transner_spark.sources.catalog import read_records
 
     workdir = tempfile.mkdtemp(prefix="lineage_gate_")
     run = PipelineRun(spark, workdir)
     try:
         run.run(_transcripts(spark, sf_dir))
-        lineage = run.catalog.read("_lineage")
-        out = (
-            lineage.groupBy("stage")
-            .agg(F.sum("rows_out").cast("long").alias("rows_out"))
-            .toPandas()
-        )
+        out = [(r["stage"], r["rows_written"]) for r in read_records(workdir)]
     finally:
         # the edge table's catalog entry points into the tempdir —
         # drop it with the files so no dangling entry outlives the gate

@@ -7,9 +7,9 @@ Prints ONE JSON line:
    "queries": {stage: sec, ...}, "sf": ..., "turns": N, "triples": N,
    "triples_per_sec": ..., "turns_per_sec": ...}
 
-Each stage's wall time and row count come from the ``_lineage`` rows the
-run writes (``run_pipeline_pass``); the trainops ops run in their own
-JVM, timed by ``measure``.
+Each stage's wall time and row count come from the commit records the
+run appends to its workdir's METRICS.jsonl (``run_pipeline_pass``); the
+trainops ops run in their own JVM, timed by ``measure``.
 
 ``--scaling`` additionally runs the same job at the two SCALING_LEVELS
 parallelism levels on the same (larger) input and writes BENCH.md with
@@ -148,30 +148,28 @@ def ensure_scaling_corpus(turns: int = 1_600_000) -> str:
 
 def run_pipeline_pass(spark, transcripts, workdir: str) -> dict:
     """One ``PipelineRun`` over ``transcripts`` into ``workdir``, under one
-    process-tree RSS sampler. Each stage's wall time is its lineage
-    ``wall_ms`` (plan build + write) and its rows are its summed
-    ``rows_out``: the run's own record, so no count and no extra Spark
-    job. Returns ``{"timings": {stage: s}, "rows": {stage: n}, "rss":
-    peak MiB}``, in stage order."""
-    import pyarrow.parquet as pq
-
+    process-tree RSS sampler. Each stage's wall time is its commit
+    record's ``wall_ms`` (plan build + write) and its rows are the
+    record's ``rows_written``: the run's own record, so no count and no
+    extra Spark job. Returns ``{"timings": {stage: s}, "rows": {stage:
+    n}, "rss": peak MiB}``, in stage order."""
     from transner_spark.plans.pipeline import STAGES, PipelineRun
+    from transner_spark.sources.catalog import read_records
 
     run = PipelineRun(spark, workdir)
     with RssSampler() as sampler:
         run.run(transcripts)
     spark.sql(f"DROP TABLE IF EXISTS {run.edges_table}")
-    lineage = pq.read_table(
-        run.catalog.path("_lineage"), columns=["run_id", "stage", "rows_out", "wall_ms"]
-    ).to_pylist()
+    records = {
+        r["stage"]: r for r in read_records(workdir) if r["run_id"] == run.run_id
+    }
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
     for stage in STAGES:
-        mine = [r for r in lineage if r["run_id"] == run.run_id and r["stage"] == stage]
         # the record keeps the key earlier BENCH records used
         key = "annotate" if stage == "annotated" else stage
-        timings[key] = mine[0]["wall_ms"] / 1000.0
-        rows[key] = sum(r["rows_out"] for r in mine)
+        timings[key] = records[stage]["wall_ms"] / 1000.0
+        rows[key] = records[stage]["rows_written"]
     return {"timings": timings, "rows": rows, "rss": sampler.peak}
 
 
@@ -1043,7 +1041,7 @@ def _write_bench_md(
         "",
         "Target ≥ 0.8 on the headline pair (BASELINE.json north rule).",
         "",
-        "Per-stage wall (s), from each leg's lineage `wall_ms`:",
+        "Per-stage wall (s), from each leg's commit-record `wall_ms`:",
         "",
         "| stage | " + " | ".join(f"local[{n}]" for n in SCALING_LEVELS) + " |",
         "| --- |" + " --- |" * len(SCALING_LEVELS),

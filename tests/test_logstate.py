@@ -179,6 +179,51 @@ def test_log_state_compaction_offline_and_inline(
     assert all("segment" in m for m in m2 if m["action"] == "append")
 
 
+def test_log_commits_count_rows_without_a_spark_job(
+    spark, tiny_pdf, tiny_df, log_dirs, monkeypatch
+):
+    """An append commit and an inline compaction take the rows they
+    wrote from the parquet footers: between a segment's write and its
+    commit no Spark job runs."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from transner_spark.streaming import logstate
+
+    d = log_dirs
+    canon = _canon(spark, tiny_df)
+    _write_batch(spark, tiny_pdf, d["in"], 0, 3, "b0")
+    _write_batch(spark, tiny_pdf, d["in"], 3, 5, "b1")
+
+    sc = spark.sparkContext
+    group = "log_commit_" + os.path.basename(os.path.dirname(d["state"]))
+    control = group + "_control"
+    stream_groups, actions = [], []
+    write, commit = DataFrameWriter.parquet, logstate._commit
+
+    def state_write(self, path, *a, **k):
+        write(self, path, *a, **k)
+        if str(path).startswith(d["state"]):
+            stream_groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+            if len(stream_groups) == 1:  # control: a job here is seen
+                sc.setJobGroup(control, control)
+                spark.range(3).count()
+            sc.setJobGroup(group, group)
+
+    def grouped_commit(*a, **k):
+        sc.setLocalProperty("spark.jobGroup.id", stream_groups[-1])
+        actions.append(k["metrics"]["action"])
+        return commit(*a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", state_write)
+    monkeypatch.setattr(logstate, "_commit", grouped_commit)
+    logstate.stream_edge_increments_log(
+        spark, d["in"] + "/*", d["state"], d["cp"], canon, compact_every=2
+    )
+    assert actions == ["append", "append", "compact"]
+    assert list(sc.statusTracker().getJobIdsForGroup(control))
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_writer_lock_blocks_compaction_and_tmp_orphans_are_pruned(
     spark, tiny_pdf, tiny_df, log_dirs
 ):

@@ -6,6 +6,9 @@ import os
 
 import pytest
 
+from pyspark.sql import SparkSession
+
+from transner_spark.functions import session
 from transner_spark.functions.session import (
     MAX_DRIVER_HEAP_GIB,
     default_cpus,
@@ -42,3 +45,45 @@ def test_default_cpus_follows_host_unless_set(monkeypatch):
     # the env override is a deployment setting and wins
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_cpus() == 3
+
+
+class _Builder:
+    """Records the conf ``get_spark`` asks for; starts no SparkContext."""
+
+    def __init__(self):
+        self.conf: dict[str, str] = {}
+
+    def master(self, m):
+        self.conf["spark.master"] = m
+        return self
+
+    def appName(self, _name):
+        return self
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+@pytest.mark.parametrize(
+    "master, want",
+    [
+        ("local[*]", len(os.sched_getaffinity(0))),
+        ("local", 1),
+        ("local[3]", 3),
+        ("local[5,2]", 5),
+    ],
+)
+def test_local_shuffle_partitions_follow_the_master(monkeypatch, master, want):
+    monkeypatch.setattr(SparkSession, "builder", _Builder())
+    conf = session.get_spark(master=master)
+    assert conf["spark.sql.shuffle.partitions"] == str(want)
+
+
+def test_external_master_leaves_shuffle_partitions_unset(monkeypatch):
+    monkeypatch.setattr(SparkSession, "builder", _Builder())
+    conf = session.get_spark(master="local-cluster[2,1,1024]")
+    assert "spark.sql.shuffle.partitions" not in conf

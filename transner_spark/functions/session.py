@@ -74,14 +74,17 @@ def get_spark(
         master == "local" or master.startswith("local[")
     ):
         # plain local mode only (NOT local-cluster[m,c,mem] — its bracket
-        # payload is not a core count): match the chosen core count. When
-        # the master is external (spark-submit / cluster), leave the
-        # config UNSET so the cluster default + AQE coalescing govern
-        # shuffle parallelism — hardcoding 32 here would silently cap a
-        # 1000-executor job.
+        # payload is not a core count): match the master's core count —
+        # local[*] runs on the cores this process may use, bare local on
+        # one. When the master is external (spark-submit / cluster),
+        # leave the config UNSET so the cluster default + AQE coalescing
+        # govern shuffle parallelism — hardcoding a count here would
+        # silently cap a 1000-executor job.
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
         n = inner.split(",")[0]  # local[N,maxFailures] is valid syntax
-        shuffle_partitions = 32 if n in ("*", "") else int(n)
+        shuffle_partitions = (
+            len(os.sched_getaffinity(0)) if n == "*" else 1 if n == "" else int(n)
+        )
 
     builder = SparkSession.builder
     if master is not None:

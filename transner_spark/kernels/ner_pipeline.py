@@ -39,6 +39,13 @@ def ner_batch(
     proc_strings = [p[0] for p in proc]
     offset_maps = [p[1] for p in proc]
 
+    # R2's religion gazetteer (cfg.religions_path overrides the fixture)
+    religions = (
+        load_religions_set(cfg.religions_path)
+        if cfg.religions_path
+        else load_religions_set()
+    )
+
     # P3 — token classification
     predictions, logits = classifier.predict(proc_strings)
     assert len(predictions) == len(input_strings), "Batch sizes do not match"
@@ -66,12 +73,7 @@ def ner_batch(
             e["source"] = "regex"
             entities.append(e)
 
-        # R2 — religion gazetteer (cfg.religions_path overrides the fixture)
-        religions = (
-            load_religions_set(cfg.religions_path)
-            if cfg.religions_path
-            else load_religions_set()
-        )
+        # R2 — religion gazetteer
         for e in rules.find_religions(s_orig, religions):
             e["source"] = "gazetteer"
             entities.append(e)

@@ -1,1 +1,1 @@
-"""Driver-side orchestration: staged pipeline with lineage + resume."""
+"""Driver-side orchestration: staged pipeline with commit records + resume."""

@@ -1,10 +1,10 @@
-"""Staged KG pipeline with per-stage commit, per-write-task lineage rows,
-and resume-from-last-committed-stage.
+"""Staged KG pipeline with per-stage commit, one commit record per
+stage, and resume-from-last-committed-stage.
 
 Stage graph (each stage consumes its inputs as read once from the
-catalog, writes its output table, then appends lineage rows — the Spark
-analogue of the reference's JSON-lines request log, upgraded to a
-checkpoint-table contract):
+catalog, writes its output table, then appends its commit record — one
+JSON line in ``<workdir>/METRICS.jsonl``, the Spark analogue of the
+reference's JSON-lines request log):
 
     transcripts ─→ annotated ─→ mentions
                         │  └──→ triples ─→ links ─→ canonical ─→ edges
@@ -16,30 +16,29 @@ joins/aggs read it shuffle-free and point lookups bucket-prune (BENCH.md
 bucketed section) — the KG is born co-located, as part of the resumable
 run rather than a separate job.
 
-Commits cost no Spark job beyond the write itself. Lineage is read from
-the parquet footers of the files the write just committed (one row per
-write task, keyed by the ``part-NNNNN`` task number) and appended on the
-driver as one small file; each committed table is read once per run, with
-the schema it was just written with (no schema-inference job), and that
-DataFrame feeds downstream stages and the returned dict alike.
+Commits cost no Spark job beyond the write itself. The record's row
+counts are read from the parquet footers of the files the write just
+committed (``sources/catalog.task_row_counts``), in the same record
+format the streaming log writes (``sources/catalog.append_record``);
+each committed table is read once per run, with the schema it was just
+written with (no schema-inference job), and that DataFrame feeds
+downstream stages and the returned dict alike.
 
 On rerun, any stage whose output is already committed (``_SUCCESS``
-present — the Parquet stand-in for an Iceberg snapshot) is skipped; a
-mid-run kill therefore resumes exactly after the last committed stage.
+present — the Parquet stand-in for an Iceberg snapshot) is skipped and
+appends no record; a mid-run kill therefore resumes exactly after the
+last committed stage.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import re
 import time
 import uuid
 from collections.abc import Callable
 from datetime import datetime, timezone
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from transner_spark.config import PipelineConfig
@@ -56,7 +55,7 @@ from transner_spark.operators.materialize import (
     materialize_edges,
     write_edges_bucketed,
 )
-from transner_spark.sources.catalog import Catalog
+from transner_spark.sources.catalog import Catalog, append_record, task_row_counts
 
 STAGES = (
     "annotated",
@@ -67,38 +66,6 @@ STAGES = (
     "canonical",
     "edges",
 )
-
-
-LINEAGE_SCHEMA = pa.schema(
-    [
-        ("run_id", pa.string()),
-        ("stage", pa.string()),
-        ("partition_id", pa.int32()),
-        ("rows_out", pa.int64()),
-        ("wall_ms", pa.float64()),
-        # UTC-adjusted micros: Spark reads it as TIMESTAMP, the same type
-        # as the INT96 column of lineage files Spark itself wrote
-        ("committed_at", pa.timestamp("us", tz="UTC")),
-    ]
-)
-_TASK_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
-
-
-def _task_row_counts(path: str) -> dict[int, int]:
-    """Rows per write task of the parquet files committed under ``path``,
-    from their footers. The task number is the ``part-NNNNN`` prefix of
-    Spark's file names, so bucket-suffixed files and ``bucket=``
-    directories sum into the task that wrote them."""
-    counts: dict[int, int] = {}
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            m = _TASK_FILE.match(f)
-            if m:
-                task = int(m[1])
-                rows = pq.read_metadata(os.path.join(root, f)).num_rows
-                counts[task] = counts.get(task, 0) + rows
-    return counts
 
 
 class PipelineRun:
@@ -122,34 +89,29 @@ class PipelineRun:
         self.stages_run: list[str] = []
         self.stages_skipped: list[str] = []
 
-    # -- lineage ---------------------------------------------------------
-    def _lineage(self, stage: str, wall_ms: float) -> None:
-        """One lineage row per write task of the stage's committed output:
-        its row count from the parquet footers, plus the stage's wall
-        time (plan build + write). Runs on the driver and launches no
-        Spark job; a stage that wrote no file gets a single zero row, so
-        every committed stage is on record."""
-        counts = _task_row_counts(self.catalog.path(stage)) or {0: 0}
-        tasks = sorted(counts)
-        n = len(tasks)
-        rows = pa.table(
-            {
-                "run_id": [self.run_id] * n,
-                "stage": [stage] * n,
-                "partition_id": tasks,
-                "rows_out": [counts[t] for t in tasks],
-                "wall_ms": [float(wall_ms)] * n,
-                "committed_at": [datetime.now(timezone.utc)] * n,
-            },
-            schema=LINEAGE_SCHEMA,
-        )
-        self.catalog.append_rows(rows, "_lineage")
-
+    # -- commit record -------------------------------------------------
     def _commit(self, stage: str, t0: float) -> None:
-        """Record ``stage`` as committed. Its wall runs from ``t0``, taken
-        before the stage's plan is built: building can checkpoint
-        eagerly (links, canonical), and that work belongs to the stage."""
-        self._lineage(stage, (time.monotonic() - t0) * 1000.0)
+        """Record ``stage`` as committed: append one line to the workdir's
+        METRICS.jsonl with its rows per write task (from the parquet
+        footers, so no Spark job) and its wall time. The wall runs from
+        ``t0``, taken before the stage's plan is built: building can
+        checkpoint eagerly (links, canonical), and that work belongs to
+        the stage. A stage that wrote no file records 0 rows, so every
+        committed stage is on record."""
+        wall_ms = (time.monotonic() - t0) * 1000.0
+        counts = task_row_counts(self.catalog.path(stage))
+        append_record(
+            self.catalog.root,
+            {
+                "action": "commit",
+                "stage": stage,
+                "run_id": self.run_id,
+                "rows_written": sum(counts.values()),
+                "task_rows": {str(t): n for t, n in sorted(counts.items())},
+                "wall_ms": wall_ms,
+                "committed_at": datetime.now(timezone.utc).isoformat(),
+            },
+        )
         self.stages_run.append(stage)
 
     def _done(self, stage: str) -> bool:

@@ -1,5 +1,6 @@
-"""Table catalog abstraction: Iceberg when the runtime jar is present,
-identical-layout Parquet directories otherwise.
+"""Table catalog abstraction (Iceberg when the runtime jar is present,
+identical-layout Parquet directories otherwise) and the one record of
+what each commit wrote.
 
 The sandbox's pyspark 4.1.2 ships no Iceberg jar, so the default backend
 is Parquet with the same table layout and a snapshot-style commit protocol:
@@ -8,17 +9,60 @@ a stage output is "committed" iff its directory contains Spark's
 orchestrator (plans/pipeline.py) resumes by skipping committed stages,
 which is exactly the "resume from the last committed snapshot" contract of
 the north rule, minus Iceberg's atomicity guarantees (documented).
+
+Commit records: every writer that commits data (a ``PipelineRun`` stage,
+a streaming log append or compaction) appends one JSON line to
+``<dir>/METRICS.jsonl`` through ``append_record`` — the reference's
+one-line-per-request log (``logger.py``) — and every reader goes through
+``read_records``. Row counts come from the parquet footers of the files
+the commit wrote (``task_row_counts``), so recording a commit launches no
+Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import uuid
+import re
 
-import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+METRICS = "METRICS.jsonl"
+_TASK_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+
+
+def task_row_counts(path: str) -> dict[int, int]:
+    """Rows per write task of the parquet files committed under ``path``,
+    from their footers. The task number is the ``part-NNNNN`` prefix of
+    Spark's file names, so bucket-suffixed files and ``bucket=``
+    directories sum into the task that wrote them."""
+    counts: dict[int, int] = {}
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            m = _TASK_FILE.match(f)
+            if m:
+                task = int(m[1])
+                rows = pq.read_metadata(os.path.join(root, f)).num_rows
+                counts[task] = counts.get(task, 0) + rows
+    return counts
+
+
+def append_record(directory: str, record: dict) -> None:
+    """Append ``record`` as one JSON line to ``<directory>/METRICS.jsonl``.
+    The file is append-only and never pruned: it is the audit trail of
+    what each commit did."""
+    with open(os.path.join(directory, METRICS), "a") as fh:
+        fh.write(json.dumps(record, sort_keys=True) + "\n")
+
+
+def read_records(directory: str) -> list[dict]:
+    """Every commit record under ``directory``, in commit order. Raises
+    FileNotFoundError when nothing there has committed a record."""
+    with open(os.path.join(directory, METRICS)) as fh:
+        return [json.loads(line) for line in fh]
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -65,19 +109,3 @@ class Catalog:
             writer.format("iceberg").save(self.path(table))
         else:
             writer.parquet(self.path(table))
-
-    def append_rows(self, rows: pa.Table, table: str) -> None:
-        """Append a small driver-side table. On the Parquet backend this
-        writes one file locally — no Spark job — renamed into place so a
-        concurrent reader never sees it half-written."""
-        if self.use_iceberg:  # pragma: no cover
-            df = self.spark.createDataFrame(rows.to_pandas())
-            df.write.mode("append").format("iceberg").save(self.path(table))
-            return
-        p = self.path(table)
-        os.makedirs(p, exist_ok=True)
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(p, f".{name}.tmp")
-        pq.write_table(rows, tmp)
-        os.replace(tmp, os.path.join(p, name))
-        open(os.path.join(p, "_SUCCESS"), "a").close()

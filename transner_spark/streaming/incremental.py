@@ -44,12 +44,36 @@ TRANSCRIPT_SCHEMA = StructType(
 )
 
 
-def read_transcripts_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+def read_transcripts_stream(
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int = 8
+) -> DataFrame:
     """Append-only parquet directory → streaming transcripts source."""
     return (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
+    )
+
+
+def _windowed_counts(
+    spark: SparkSession,
+    input_dir: str,
+    window: str,
+    watermark: str,
+    cfg: PipelineConfig | None,
+) -> DataFrame:
+    """Mentions per (event-time window, type) over the streaming
+    transcripts, with the watermark bounding the aggregation state:
+    columns ``start, end, type, n_mentions``."""
+    annotated = annotate_turns(read_transcripts_stream(spark, input_dir), cfg)
+    mentions = annotated.select(
+        "ts", F.explode("mentions").alias("m")
+    ).select("ts", F.col("m.type").alias("type"))
+    return (
+        mentions.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("w"), "type")
+        .agg(F.count(F.lit(1)).alias("n_mentions"))
+        .select("w.start", "w.end", "type", "n_mentions")
     )
 
 
@@ -100,19 +124,9 @@ def stream_windowed_mention_counts(
     GATE uses ``output_mode='complete'``: every window is in the final
     table, deterministically, while the streaming aggregation path is
     exercised identically."""
-    stream = read_transcripts_stream(spark, input_dir)
-    annotated = annotate_turns(stream, cfg)
-    mentions = annotated.select(
-        "ts", F.explode("mentions").alias("m")
-    ).select("ts", F.col("m.type").alias("type"))
-    counts = (
-        mentions.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "type")
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-        .select("w.start", "w.end", "type", "n_mentions")
-    )
     return (
-        counts.writeStream.format("memory")
+        _windowed_counts(spark, input_dir, window, watermark, cfg)
+        .writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
@@ -144,24 +158,9 @@ def stream_windowed_counts_append(
     batch. The append-mode GATE does exactly that, proving the
     production semantics the complete-mode gate can't
     (stream_windowed_mention_counts docstring)."""
-    stream = read_transcripts_stream(spark, input_dir)
-    annotated = annotate_turns(stream, cfg)
-    mentions = annotated.select(
-        "ts", F.explode("mentions").alias("m")
-    ).select("ts", F.col("m.type").alias("type"))
-    counts = (
-        mentions.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "type")
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-        .select(
-            F.col("w.start").alias("start"),
-            F.col("w.end").alias("end"),
-            "type",
-            "n_mentions",
-        )
-    )
     return (
-        counts.writeStream.format("parquet")
+        _windowed_counts(spark, input_dir, window, watermark, cfg)
+        .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

@@ -90,7 +90,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from transner_spark.config import PipelineConfig
 from transner_spark.operators.annotate import annotate_turns
-from transner_spark.streaming.incremental import TRANSCRIPT_SCHEMA
+from transner_spark.sources.catalog import append_record, read_records, task_row_counts
+from transner_spark.streaming.incremental import read_transcripts_stream
 
 SEGMENTS_DIR = "segments"
 MANIFEST_PREFIX = "MANIFEST."
@@ -258,26 +259,23 @@ def _resolve_asof(state_dir: str, batch_id: int) -> str:
     authoritative for the live snapshot). Fails loud when the resolved
     snapshot has been expired by the retention window instead of
     silently answering from a different snapshot."""
-    import json as _json
-
     cur_manifest, cur_bid, _ = _read_current(state_dir)
     if cur_manifest is None:
         raise RuntimeError(f"state dir {state_dir!r} has no committed snapshot")
     if batch_id >= cur_bid:
         return cur_manifest
-    metrics_path = os.path.join(state_dir, "METRICS.jsonl")
-    if not os.path.exists(metrics_path):
+    try:
+        records = read_records(state_dir)
+    except FileNotFoundError:
         raise RuntimeError(
             f"state dir {state_dir!r} predates snapshot history "
             "(no METRICS.jsonl) — time travel needs states written by "
             "this module version."
-        )
+        ) from None
     best: dict | None = None
-    with open(metrics_path) as fh:
-        for line in fh:
-            rec = _json.loads(line)
-            if "manifest" in rec and rec["batch_id"] <= batch_id:
-                best = rec  # commit order == file order; last wins
+    for rec in records:
+        if "manifest" in rec and rec["batch_id"] <= batch_id:
+            best = rec  # commit order == file order; last wins
     if best is None:
         raise RuntimeError(
             f"no snapshot at or before batch {batch_id} in {state_dir!r} "
@@ -350,8 +348,6 @@ def _changes_segments(
 
     Duplicate history lines from a crash-redelivered batch are harmless
     (same segment name, set-deduped)."""
-    import json as _json
-
     _, cur_bid, _ = _read_current(state_dir)
     if cur_bid < 0:
         raise RuntimeError(f"state dir {state_dir!r} has no committed snapshot")
@@ -366,28 +362,27 @@ def _changes_segments(
             f"changelog read needs since_batch <= until_batch "
             f"(got {since_batch} > {until})"
         )
-    metrics_path = os.path.join(state_dir, "METRICS.jsonl")
-    if not os.path.exists(metrics_path):
+    try:
+        records = read_records(state_dir)
+    except FileNotFoundError:
         raise RuntimeError(
             f"state dir {state_dir!r} predates snapshot history "
             "(no METRICS.jsonl) — changelog reads need states written "
             "by this module version."
-        )
+        ) from None
     by_bid: dict[int, str] = {}
-    with open(metrics_path) as fh:
-        for line in fh:
-            rec = _json.loads(line)
-            # 'append+compact' is the legacy FUSED action (pre
-            # two-commit folds): it still applied a batch, so it must
-            # not be silently skipped — its raw segment was orphaned by
-            # the fused fold, so the existence check below fails LOUD
-            # for it (the contract) instead of returning a partial delta
-            if rec.get("action") in ("append", "append+compact") and (
-                since_batch < rec["batch_id"] <= until
-            ):
-                by_bid[rec["batch_id"]] = rec.get(
-                    "segment", f"{SEGMENTS_DIR}/s{rec['batch_id']}"
-                )
+    for rec in records:
+        # 'append+compact' is the legacy FUSED action (pre two-commit
+        # folds): it still applied a batch, so it must not be silently
+        # skipped — its raw segment was orphaned by the fused fold, so
+        # the existence check below fails LOUD for it (the contract)
+        # instead of returning a partial delta
+        if rec.get("action") in ("append", "append+compact") and (
+            since_batch < rec["batch_id"] <= until
+        ):
+            by_bid[rec["batch_id"]] = rec.get(
+                "segment", f"{SEGMENTS_DIR}/s{rec['batch_id']}"
+            )
     missing = [
         (b, r)
         for b, r in sorted(by_bid.items())
@@ -451,34 +446,6 @@ def read_edge_log_changes(
     )
 
 
-def _append_metrics(state_dir: str, record: dict) -> None:
-    """Append one JSON line to the state dir's METRICS.jsonl — the
-    streaming twin of the batch pipeline's per-stage lineage table
-    (north rule: every stage writes lineage + count metrics to a
-    checkpoint table). Append-only and never pruned: it is the audit
-    trail of what each commit did (batch id, action, manifest, live
-    segments, rows appended/compacted/physically written). At warehouse
-    scale this is the table format's snapshot summary/history metadata —
-    and since each line names its manifest, it doubles as the snapshot
-    index ``_resolve_asof`` time-travels through.
-
-    ``_commit`` writes the line BETWEEN the manifest write and the
-    CURRENT swing, so every committed snapshot is guaranteed a history
-    line (a re-delivered batch skips before re-committing, so a
-    post-swing append could lose its line forever in a crash window and
-    leave as-of reads of that batch silently answering from the
-    previous snapshot). The converse crash — line written, swing never
-    happened — leaves a GHOST line for an uncommitted batch, which is
-    unreachable: ``_resolve_asof`` answers any ``batch_id >= CURRENT``'s
-    from CURRENT itself, and re-delivery rewrites the same manifest
-    name with identical content before appending a (harmless,
-    last-wins) duplicate line."""
-    import json as _json
-
-    with open(os.path.join(state_dir, "METRICS.jsonl"), "a") as fh:
-        fh.write(_json.dumps(record, sort_keys=True) + "\n")
-
-
 def _persist_retention(state_dir: str, retain: int) -> None:
     """Record the snapshot-retention window in the state dir itself
     (RETENTION, tmp + atomic replace) so the policy is a property of
@@ -515,9 +482,22 @@ def _commit(
     ``#batch=<bid> action=<...>`` header), append the
     snapshot-history/metrics line, then atomically swing CURRENT; prune
     via ``_prune`` after the commit. Caller holds ``_writer_lock``, so
-    no other commit's in-flight tmp can exist during the prune. The
-    history line goes in BEFORE the swing so a committed snapshot can
-    never lack one (see ``_append_metrics``).
+    no other commit's in-flight tmp can exist during the prune.
+
+    The history line is the commit record (``sources/catalog``'s
+    METRICS.jsonl, never pruned): batch id, action, manifest, live
+    segments, rows appended/compacted/physically written. Since each
+    line names its manifest, it doubles as the snapshot index
+    ``_resolve_asof`` time-travels through. It goes in BEFORE the swing
+    so every committed snapshot is guaranteed a line (a re-delivered
+    batch skips before re-committing, so a post-swing append could lose
+    its line forever in a crash window and leave as-of reads of that
+    batch silently answering from the previous snapshot). The converse
+    crash — line written, swing never happened — leaves a GHOST line
+    for an uncommitted batch, which is unreachable: ``_resolve_asof``
+    answers any ``batch_id >= CURRENT``'s from CURRENT itself, and
+    re-delivery rewrites the same manifest name with identical content
+    before appending a (harmless, last-wins) duplicate line.
 
     ``retain`` is the snapshot-retention window in BATCH units: the
     snapshots of the last ``retain`` DISTINCT applied batch ids survive
@@ -546,7 +526,7 @@ def _commit(
         fh.write("\n".join(segment_rels) + "\n")
     os.replace(tmp, os.path.join(state_dir, mname))
     if metrics is not None:
-        _append_metrics(
+        append_record(
             state_dir, {**metrics, "batch_id": batch_id, "manifest": mname}
         )
     tmp = os.path.join(state_dir, f"CURRENT.{os.getpid()}.tmp")
@@ -667,8 +647,7 @@ def _compact_log(
                 f"b{bid2}): a non-lock-honoring writer is active — "
                 "compaction aborted, no state was changed."
             )
-        # parquet footer count — metadata-only job
-        n_base = spark.read.parquet(_abs_seg(state_dir, base_rel)).count()
+        n_base = sum(task_row_counts(_abs_seg(state_dir, base_rel)).values())
         _commit(
             state_dir,
             [base_rel],
@@ -794,10 +773,10 @@ def _stream_log_maintenance(
             inc = make_increment(batch_df, batch_id)
             seg_rel = f"{SEGMENTS_DIR}/s{batch_id}"
             inc.write.mode("overwrite").parquet(_abs_seg(state_dir, seg_rel))
-            # parquet footer counts — metadata-only jobs; taken BEFORE
-            # _commit, whose prune may expire the raw segment once the
-            # retention window passes a compaction
-            n_inc = sess.read.parquet(_abs_seg(state_dir, seg_rel)).count()
+            # footer counts, no Spark job; taken BEFORE _commit, whose
+            # prune may expire the raw segment once the retention window
+            # passes a compaction
+            n_inc = sum(task_row_counts(_abs_seg(state_dir, seg_rel)).values())
             rels = (
                 _read_manifest(state_dir, manifest) if manifest else []
             ) + [seg_rel]
@@ -836,9 +815,9 @@ def _stream_log_maintenance(
                 merged.write.mode("overwrite").parquet(
                     _abs_seg(state_dir, base_rel)
                 )
-                n_base = sess.read.parquet(
-                    _abs_seg(state_dir, base_rel)
-                ).count()
+                n_base = sum(
+                    task_row_counts(_abs_seg(state_dir, base_rel)).values()
+                )
                 _commit(
                     state_dir,
                     [base_rel],
@@ -855,13 +834,10 @@ def _stream_log_maintenance(
                     },
                 )
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
     q = (
-        annotate_turns(stream, cfg)
+        annotate_turns(
+            read_transcripts_stream(spark, input_dir, max_files_per_trigger), cfg
+        )
         .writeStream.foreachBatch(append_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
