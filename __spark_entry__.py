@@ -1038,7 +1038,7 @@ def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitter profile of the edge-rollup shuffle key
     (subj_norm, pred, obj_norm) over the triples relation — the
     pre-flight pass that motivates PipelineConfig.salt_partitions
-    (operators/materialize.py:64-80 salts exactly this rollup).
+    (operators/materialize.materialize_edges salts exactly this rollup).
     rows_per_task is set low (64) so the salt_factor arithmetic is
     actually exercised at sf0.01 gate scale; production would pass
     ~1e6. The skewed hot-entity fixture (sources/transcripts.py:88)

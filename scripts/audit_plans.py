@@ -240,22 +240,6 @@ def main() -> None:
     )
     t = triples.join(cache.select("conv_id", "turn_idx", "ts"), ["conv_id", "turn_idx"])
     canon = canonicalize(link_surfaces(spark, node_surfaces(t)))
-    # the web-scale alias-dictionary path: hints off + auto-broadcast
-    # disabled (a dictionary over the threshold never auto-broadcasts),
-    # so the dim joins show their shuffled shape
-    from transner_spark.config import PipelineConfig as _PC
-
-    _abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        audit(
-            "linking_shuffled_dims",
-            link_surfaces(
-                spark, node_surfaces(t), _PC(link_broadcast_dims=False)
-            ),
-        )
-    finally:  # never leak '-1' into the remaining audits
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _abt)
     part = Fn.pmod(Fn.crc32(Fn.col("conv_id")), Fn.lit(2))
     audit(
         "merge_edge_increments",

@@ -5,13 +5,14 @@ Launch (the north rule's contract):
     make dist
     spark-submit --py-files dist/transner_spark.zip \\
         [--num-executors N --executor-cores C ...] \\
-        scripts/run_job.py --input <transcripts parquet/iceberg> \\
+        scripts/run_job.py --input <transcripts parquet dir> \\
         --workdir <output catalog dir> [--run-id RID]
 
 On a rerun with the same --workdir, stages whose output is already
 committed are skipped (resume-from-checkpoint; see plans/pipeline.py).
-Inside the sandbox there is no cluster manager — the same script runs
-under plain ``python`` with --master local[N].
+Without a cluster manager the same script runs under plain ``python``
+(scripts/submit.sh falls back to that); with no --master it runs on
+``get_spark``'s default, local[<host cores>].
 """
 
 from __future__ import annotations

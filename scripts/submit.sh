@@ -22,8 +22,8 @@ if command -v spark-submit >/dev/null 2>&1; then
     "${SUBMIT_ARGS[@]}" \
     scripts/run_job.py "${JOB_ARGS[@]}"
 else
-  # sandbox fallback: no cluster manager — same job, local master
-  echo "spark-submit not found; running local[\${SPARK_GRAFT_CPUS:-32}]" >&2
-  exec python scripts/run_job.py "${JOB_ARGS[@]}" \
-    --master "local[${SPARK_GRAFT_CPUS:-32}]"
+  # no cluster manager: same job under plain python, on get_spark's
+  # default master (local[<host cores>], SPARK_GRAFT_CPUS overrides)
+  echo "spark-submit not found; running on get_spark's local default" >&2
+  exec python scripts/run_job.py "${JOB_ARGS[@]}"
 fi

@@ -1,6 +1,7 @@
 """The committed edge table is the one bucketed layout: whatever the
-write's task count, each bucket is one file, and subj_id reads plan no
-shuffle — also once the catalog entry is lost and the run resumes."""
+write's task count, each bucket is one file holding only the six edge
+columns, and subj_id reads plan no shuffle — also once the catalog entry
+is lost and the run resumes."""
 
 from __future__ import annotations
 
@@ -10,11 +11,13 @@ from contextlib import contextmanager
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from transner_spark.plans.pipeline import PipelineRun
 
 # Spark's bucketed writer names files part-NNNNN-<uuid>_BBBBB.c000...
 _BUCKET_FILE = re.compile(r"part-\d+-.*_(\d{5})\.c\d+.*\.parquet$")
+EDGE_COLS = ["subj_id", "pred", "obj_id", "weight", "first_ts", "last_ts"]
 
 
 @contextmanager
@@ -47,7 +50,7 @@ def test_edges_commit_one_file_per_bucket(spark, tiny_df, tmp_path, tasks):
         out = run.run(tiny_df)
         try:
             path = run.catalog.path("edges")
-            buckets = []
+            buckets = {}
             for root, dirs, files in os.walk(path):
                 assert not [d for d in dirs if d.startswith("bucket=")], dirs
                 for f in files:
@@ -55,13 +58,27 @@ def test_edges_commit_one_file_per_bucket(spark, tiny_df, tmp_path, tasks):
                         continue
                     m = _BUCKET_FILE.match(f)
                     assert m, f"no bucket-id suffix: {f}"
-                    bucket = int(m[1])
-                    buckets.append(bucket)
-                    # the bucket column is Spark's own bucket id
-                    col = pq.read_table(os.path.join(root, f), columns=["bucket"])
-                    assert set(col["bucket"].to_pylist()) == {bucket}, f
+                    assert f not in buckets, f
+                    buckets[f] = int(m[1])
+                    assert pq.read_schema(os.path.join(root, f)).names == EDGE_COLS
             assert buckets, "no edge file written"
-            assert len(buckets) == len(set(buckets)), sorted(buckets)
+            assert len(buckets) == len(set(buckets.values())), sorted(buckets.values())
+            # each file holds exactly the subjects of the bucket its name
+            # records: Spark's bucket id is pmod(hash(subj_id), n)
+            n = run.cfg.edge_buckets
+            hashed = (
+                spark.read.parquet(path)
+                .select(
+                    F.input_file_name().alias("f"),
+                    F.pmod(F.hash("subj_id"), F.lit(n)).alias("b"),
+                )
+                .distinct()
+                .collect()
+            )
+            got: dict[str, set[int]] = {}
+            for r in hashed:
+                got.setdefault(os.path.basename(r["f"]), set()).add(r["b"])
+            assert got == {f: {b} for f, b in buckets.items()}
 
             pattern = "Exchange hashpartitioning"
             assert pattern not in _plan(out["edges"].groupBy("subj_id").count())

@@ -41,7 +41,7 @@ out = {out_dir!r}
 triples.drop("ts").toPandas().to_parquet(out + "/triples.parquet")
 links.toPandas().to_parquet(out + "/links.parquet")
 canon.toPandas().to_parquet(out + "/canonical.parquet")
-edges.drop("bucket").toPandas().to_parquet(out + "/edges.parquet")
+edges.toPandas().to_parquet(out + "/edges.parquet")
 spark.stop()
 """
 
@@ -68,7 +68,7 @@ def test_pipeline_invariant_under_parallelism(spark, tiny_pdf, tmp_path):
         "triples": triples.drop("ts").toPandas(),
         "links": links.toPandas(),
         "canonical": canon.toPandas(),
-        "edges": edges.drop("bucket").toPandas(),
+        "edges": edges.toPandas(),
     }
 
     pdf_path = str(tmp_path / "input.parquet")

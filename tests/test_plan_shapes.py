@@ -171,6 +171,34 @@ def test_link_surfaces_fuzzy_pass_runs_once_in_one_stage(spark):
     assert len(shuffles) == 1 and re.search(repartition, shuffles[0]), p
 
 
+def test_link_surfaces_broadcasts_both_dim_joins(spark, monkeypatch):
+    """Both alias-dim joins carry the broadcast hint: with
+    auto-broadcast off, the exact join (planned in the frame
+    link_surfaces checkpoints) and the gram join are still
+    broadcast-hash joins, so the mention side never shuffles for
+    either."""
+    from transner_spark.operators.linking import link_surfaces
+
+    surfaces = spark.createDataFrame(
+        [("mario rossi",), ("mario rosi",), ("zzqq xxvv",)], "norm_key string"
+    )
+    checkpointed = []
+    frame_cls = type(surfaces)
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(_plan(self))
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    with _no_broadcast(spark):
+        p = _plan(link_surfaces(spark, surfaces))
+    assert len(checkpointed) == 1, checkpointed
+    exact = r"BroadcastHashJoin \[norm_key#\d+\], \[norm_alias#\d+\], LeftOuter"
+    assert re.search(exact, checkpointed[0]), checkpointed[0]
+    assert p.count("BroadcastHashJoin [gram") == 1, p
+
+
 def test_neighbors_topk_window_is_partitioned(spark):
     from transner_spark.operators.graph import graph_neighbors_topk
 
@@ -227,11 +255,11 @@ def test_bucketed_reattach_after_catalog_loss(spark, tmp_path):
     ts0 = datetime.datetime(2024, 1, 1)
     edges = spark.createDataFrame(
         [
-            (f"e{i % 7}", "p", f"o{(i * 3) % 11}", i % 4 + 1, ts0, ts0, i % 8)
+            (f"e{i % 7}", "p", f"o{(i * 3) % 11}", i % 4 + 1, ts0, ts0)
             for i in range(100)
         ],
         "subj_id string, pred string, obj_id string, weight long, "
-        "first_ts timestamp, last_ts timestamp, bucket int",
+        "first_ts timestamp, last_ts timestamp",
     )
     path = str(tmp_path / "edges")
     spark.sql("DROP TABLE IF EXISTS edges_reattach_t")

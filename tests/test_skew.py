@@ -1,7 +1,7 @@
 """Skew profiler (operators/skew.py): heavy-hitter ordering, share /
-skew_x / salt_factor arithmetic, deterministic tie-breaking, and the
-single-row key_stats summary — all checked against a hand-computable
-fixture plus a pandas differential on the generated transcripts."""
+skew_x / salt_factor arithmetic and deterministic tie-breaking — all
+checked against a hand-computable fixture plus a pandas differential on
+the generated transcripts."""
 
 from __future__ import annotations
 
@@ -46,24 +46,11 @@ def test_profile_skew_tie_determinism(spark):
     assert [r["k"] for r in out.collect()] == ["v", "w", "x"]
 
 
-def test_key_stats_summary(skewed_df):
-    from transner_spark.operators.skew import key_stats
-
-    s = key_stats(skewed_df, ["k"]).collect()[0]
-    assert s["total_rows"] == 18
-    assert s["n_keys"] == 5
-    assert s["max_cnt"] == 10
-    assert s["avg_cnt"] == round(18 / 5, 6)
-    assert s["max_skew_x"] == round(10 * 5 / 18, 6)
-
-
 def test_profile_requires_keys(skewed_df):
-    from transner_spark.operators.skew import key_stats, profile_skew
+    from transner_spark.operators.skew import profile_skew
 
     with pytest.raises(ValueError):
         profile_skew(skewed_df, [])
-    with pytest.raises(ValueError):
-        key_stats(skewed_df, [])
 
 
 def test_profile_differential_vs_pandas(spark, tiny_df):
@@ -96,58 +83,3 @@ def test_profile_differential_vs_pandas(spark, tiny_df):
     assert got["share"].tolist() == pytest.approx(want["share"].tolist())
     assert got["skew_x"].tolist() == pytest.approx(want["skew_x"].tolist())
 
-
-def _triples_df(spark, rows):
-    # minimal triple shape materialize_edges consumes: types/norms + ts
-    from datetime import datetime
-
-    data = [
-        (s, "MISC", s, p, "MISC", o, o, datetime(2026, 1, 1, 0, 0, i % 60))
-        for i, (s, p, o) in enumerate(rows)
-    ]
-    return spark.createDataFrame(
-        data,
-        "subj_norm string, subj_type string, subj string, pred string, "
-        "obj_type string, obj string, obj_norm string, ts timestamp",
-    )
-
-
-def test_auto_salt_closes_the_loop(spark):
-    """materialize_edges_auto_salt: the profiler's recommendation drives
-    the rollup salt — a hot-key corpus picks a larger salt than a
-    uniform one, and both produce edges identical to the fixed-salt
-    rollup."""
-    from transner_spark.operators.materialize import (
-        materialize_edges,
-        materialize_edges_auto_salt,
-    )
-
-    canon = spark.createDataFrame(
-        [("surface:never", "never")], "node_id string, canon_id string"
-    )
-
-    hot = _triples_df(
-        spark, [("hub", "p", "spoke")] * 40 + [(f"s{i}", "p", f"o{i}") for i in range(5)]
-    )
-    uniform = _triples_df(spark, [(f"s{i}", "p", f"o{i}") for i in range(30)])
-
-    def snap(df):
-        return sorted(
-            map(
-                tuple,
-                df.select(
-                    "subj_id", "pred", "obj_id", "weight", "first_ts", "last_ts"
-                ).collect(),
-            )
-        )
-
-    hot_edges, hot_salt = materialize_edges_auto_salt(
-        hot, canon, rows_per_task=8
-    )
-    uni_edges, uni_salt = materialize_edges_auto_salt(
-        uniform, canon, rows_per_task=8
-    )
-    assert hot_salt == 5  # ceil(40 / 8): the histogram chose it
-    assert uni_salt == 1  # uniform corpus: salting overhead removed
-    assert snap(hot_edges) == snap(materialize_edges(hot, canon))
-    assert snap(uni_edges) == snap(materialize_edges(uniform, canon))

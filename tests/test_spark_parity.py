@@ -57,18 +57,9 @@ def test_edges_parity(spark, annotated, oracle_results):
     t = explode_triples(annotated)
     links = link_surfaces(spark, node_surfaces(t))
     canon = canonicalize(links)
-    edges = materialize_edges(t, canon).drop("bucket")
+    edges = materialize_edges(t, canon)
     assert_pdf_equal(edges.toPandas(), oracle_results["edges"],
                      ["subj_id", "pred", "obj_id"])
-
-
-def test_edges_salted_equals_unsalted(spark, annotated):
-    t = explode_triples(annotated)
-    links = link_surfaces(spark, node_surfaces(t))
-    canon = canonicalize(links)
-    salted = materialize_edges(t, canon, salted=True).drop("bucket").toPandas()
-    plain = materialize_edges(t, canon, salted=False).drop("bucket").toPandas()
-    assert_pdf_equal(salted, plain, ["subj_id", "pred", "obj_id"])
 
 
 def test_per_turn_text_equality(annotated, tiny_pdf):

@@ -71,9 +71,9 @@ def test_stream_windowed_counts(spark, tiny_pdf, stream_dirs):
         assert (pd.to_datetime(out["end"]) > pd.to_datetime(out["start"])).all()
 
 
-def test_stateful_conversation_assembly(spark, tiny_pdf, tmp_path):
-    """applyInPandasWithState: conversations close via idle timeout and
-    the emitted aggregates match a batch groupBy over the same turns."""
+def _assemble(spark, pdf, tmp_path, name: str) -> pd.DataFrame:
+    """Run ``assemble_conversations`` over ``pdf`` until every
+    conversation has closed by idle timeout; returns the emitted rows."""
     import time
 
     from transner_spark.streaming.incremental import (
@@ -81,14 +81,13 @@ def test_stateful_conversation_assembly(spark, tiny_pdf, tmp_path):
     )
 
     in_dir = str(tmp_path / "in"); cp = str(tmp_path / "cp")
-    part = tiny_pdf[tiny_pdf["conv_id"].isin(tiny_pdf["conv_id"].unique()[:5])]
-    _to_sdf(spark, part).coalesce(1).write.parquet(in_dir + "/b0")
+    _to_sdf(spark, pdf).coalesce(1).write.parquet(in_dir + "/b0")
 
     stream = read_transcripts_stream(spark, in_dir + "/*")
     q = (
         assemble_conversations(stream, idle_timeout_ms=2000)
         .writeStream.format("memory")
-        .queryName("conv_assembly")
+        .queryName(name)
         .outputMode("append")
         .option("checkpointLocation", cp)
         .trigger(processingTime="1 second")
@@ -98,12 +97,20 @@ def test_stateful_conversation_assembly(spark, tiny_pdf, tmp_path):
         out = None
         for _ in range(60):
             time.sleep(1)
-            out = spark.sql("select * from conv_assembly").toPandas()
-            if len(out) >= part["conv_id"].nunique():
+            out = spark.sql(f"select * from {name}").toPandas()
+            if len(out) >= pdf["conv_id"].nunique():
                 break
-        assert out is not None and len(out) == part["conv_id"].nunique()
+        assert out is not None and len(out) == pdf["conv_id"].nunique()
     finally:
         q.stop()
+    return out
+
+
+def test_stateful_conversation_assembly(spark, tiny_pdf, tmp_path):
+    """applyInPandasWithState: conversations close via idle timeout and
+    the emitted aggregates match a batch groupBy over the same turns."""
+    part = tiny_pdf[tiny_pdf["conv_id"].isin(tiny_pdf["conv_id"].unique()[:5])]
+    out = _assemble(spark, part, tmp_path, "conv_assembly")
 
     expect = part.groupby("conv_id").agg(
         n_turns=("turn_idx", "size"),
@@ -117,6 +124,25 @@ def test_stateful_conversation_assembly(spark, tiny_pdf, tmp_path):
         assert r["n_roles"] == e["n_roles"]
         assert r["first_ts"] == e["first_ts"] and r["last_ts"] == e["last_ts"]
         assert r["closed_by"] == "timeout"
+
+
+def test_assembly_role_with_comma_is_one_role(spark, tmp_path):
+    """A role value may contain ','; the packed role-set state must read
+    it back as the one role it is."""
+    ts = pd.Timestamp("2026-01-01 00:00:00")
+    pdf = pd.DataFrame(
+        {
+            "conv_id": ["c0", "c0"],
+            "turn_idx": [0, 1],
+            "role": ["a,b", "a,b"],
+            "text": ["hello", "again"],
+            "tool": [None, None],
+            "ts": [ts, ts + pd.Timedelta(seconds=1)],
+        }
+    )
+    out = _assemble(spark, pdf, tmp_path, "conv_assembly_comma")
+    assert out["closed_by"].tolist() == ["timeout"]
+    assert out["n_roles"].tolist() == [1]
 
 
 def test_append_mode_windowed_counts_flush(spark, tmp_path):

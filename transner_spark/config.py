@@ -70,13 +70,6 @@ class PipelineConfig:
     # Linking
     link_jaccard_threshold: float = 0.5
     link_ngram: int = 3
-    # False = drop the broadcast hints on the alias-dim joins and let
-    # Catalyst/AQE pick a shuffled join (+ runtime skew splitting) — the
-    # path a web-scale alias dictionary too large to broadcast actually
-    # executes. Results are bit-identical to the broadcast path
-    # (tests/test_linking_shuffle_path.py pins both values and plan
-    # shape); only the physical join strategy changes.
-    link_broadcast_dims: bool = True
 
     # Scale knobs
     edge_buckets: int = 64          # subject-hash partition buckets for edges

@@ -271,7 +271,7 @@ def dedup_minhash_incremental(
     against the full band table, so the per-batch cost scales with
     |new| × collision fan-in, never |corpus|² nor even |corpus| shingle
     hashing. This is the trainops twin of merge_edge_increments
-    (operators/materialize.py:93): same commutative-merge shape, same
+    (operators/materialize.py): same commutative-merge shape, same
     full-recompute oracle.
 
     Caller contract: old/new doc_id sets are disjoint (an ingest batch

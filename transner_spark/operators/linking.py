@@ -20,12 +20,9 @@ Scale design:
 - normalization of alias surfaces (accent strip etc.) happens driver-side
   with the SAME kernel function mentions were normalized with
   (kernels/triples.normalize_surface), so keys agree bit-for-bit;
-- for alias dictionaries too large to broadcast, set
-  ``PipelineConfig(link_broadcast_dims=False)``: the hints drop away and
-  Catalyst/AQE pick a shuffled join with runtime skew splitting
-  (value-identical output, pinned by tests/test_linking_shuffle_path.py);
-  the gram inverted index itself is the LSH-free blocking structure and
-  scales linearly.
+- both broadcast hints are unconditional (tests/test_plan_shapes.py pins
+  them); the gram inverted index itself is the LSH-free blocking
+  structure and scales linearly.
 
 Tie-breaks replicate kernels/linking.py exactly: score desc, entity_key
 asc, alias asc; duplicate normalized aliases resolve to min entity_key.
@@ -177,18 +174,9 @@ def link_surfaces(
     (``relink_for_alias_delta``) uses to link against a base/updated
     dictionary."""
     cfg = cfg or PipelineConfig()
-
-    # cfg.link_broadcast_dims=False drops the hints: a web-scale alias
-    # dictionary that can't broadcast runs the SAME logical plan as a
-    # shuffled join, with AQE's runtime skew splitting covering the hot
-    # gram keys the broadcast path never shuffles at all. Value-identity
-    # of the two paths is pinned by tests/test_linking_shuffle_path.py.
-    def _dim_hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if cfg.link_broadcast_dims else df
-
     exact_dim = exact_alias_dim(spark, alias_dim)
     exact = surfaces.join(
-        _dim_hint(exact_dim),
+        F.broadcast(exact_dim),
         surfaces["norm_key"] == exact_dim["norm_alias"],
         "left",
     ).select(
@@ -239,7 +227,7 @@ def link_surfaces(
     # Exchange has one consumer.
     pair_scores = (
         mention_grams.join(
-            _dim_hint(gram_dim),
+            F.broadcast(gram_dim),
             (F.col("gram") == F.col("a_gram"))
             & (F.col("a_n") >= t * F.col("m_n") - 1e-9)
             & (F.col("m_n") >= t * F.col("a_n") - 1e-9),

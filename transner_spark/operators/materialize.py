@@ -8,17 +8,17 @@ Skew strategy (north rule: "partitioned by subject-hash with salting"):
 - the aggregation is an explicit two-phase salted aggregate: partial
   (subj, pred, obj, salt) groups first — bounding any single reducer's
   share of a hot edge to 1/salt — then the tiny partial set
-  re-aggregates (salting is a flag, default on);
+  re-aggregates;
 - the final phase is hash-partitioned on
-  ``bucket = pmod(hash(subj_id), edge_buckets)`` — Spark's own bucket id
-  for ``bucketBy(edge_buckets, subj_id)`` — so each bucket lands in one
+  ``pmod(hash(subj_id), edge_buckets)`` — Spark's own bucket id for
+  ``bucketBy(edge_buckets, subj_id)`` — so each bucket lands in one
   task and ``write_edges_bucketed`` writes one file per bucket with no
-  Exchange of its own. Readers that filter on subject read one bucket.
+  Exchange of its own. The bucket id is not a column: the table's bucket
+  spec and each file's name record it. Readers that filter on subject
+  read one bucket.
 """
 
 from __future__ import annotations
-
-from dataclasses import replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,102 +44,42 @@ def _resolve(triples: DataFrame, canon: DataFrame, side: str) -> DataFrame:
     ).drop(f"{side}_node", f"{side}_canon")
 
 
-def _resolved_for_rollup(triples: DataFrame, canon: DataFrame) -> DataFrame:
-    """Both triple sides resolved through the canon map, projected to
-    the edge-rollup columns — shared by the one-shot rollup and the
-    auto-salt path (which profiles this exact frame first)."""
-    resolved = _resolve(triples, canon, "subj")
-    resolved = _resolve(resolved, canon, "obj")
-    return resolved.select("subj_id", "pred", "obj_id", "ts")
-
-
-def _edge_rollup(
-    resolved: DataFrame, cfg: PipelineConfig, salted: bool
-) -> DataFrame:
-    """The edge aggregate over a resolved frame: two-phase salted (hot
-    edges bounded per task) or plain one-shuffle (the resolved rows
-    shuffle uncombined). The final phase's shuffle is on ``bucket`` alone
-    with no partition count, so AQE may still coalesce: it satisfies the
-    (bucket, edge key) grouping, and every bucket lands in exactly one
-    task for any task count."""
-    rollup = (
-        F.count(F.lit(1)).alias("weight"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-    )
-    rows, aggs = resolved, rollup
-    if salted:
-        salt = F.pmod(F.hash("subj_id", "obj_id", "ts"), F.lit(cfg.salt_partitions))
-        rows = (
-            resolved.withColumn("salt", salt)
-            .groupBy("subj_id", "pred", "obj_id", "salt")
-            .agg(*rollup)
-        )
-        aggs = (
-            F.sum("weight").alias("weight"),
-            F.min("first_ts").alias("first_ts"),
-            F.max("last_ts").alias("last_ts"),
-        )
-    return (
-        rows.withColumn("bucket", F.pmod(F.hash("subj_id"), F.lit(cfg.edge_buckets)))
-        .repartition("bucket")
-        .groupBy("bucket", "subj_id", "pred", "obj_id")
-        .agg(*aggs)
-        .select("subj_id", "pred", "obj_id", "weight", "first_ts", "last_ts", "bucket")
-    )
-
-
 def materialize_edges(
     triples: DataFrame,
     canon: DataFrame,
     cfg: PipelineConfig | None = None,
-    salted: bool = True,
 ) -> DataFrame:
     """triples + canon → edges(subj_id, pred, obj_id, weight, first_ts,
-    last_ts, bucket)."""
+    last_ts). The final phase shuffles on the bucket id alone with no
+    partition count, so AQE may still coalesce: grouping on (bucket,
+    edge key) needs no second Exchange, and every bucket lands in
+    exactly one task for any task count."""
     cfg = cfg or PipelineConfig()
-    return _edge_rollup(_resolved_for_rollup(triples, canon), cfg, salted)
+    resolved = _resolve(triples, canon, "subj")
+    resolved = _resolve(resolved, canon, "obj")
+    salt = F.pmod(F.hash("subj_id", "obj_id", "ts"), F.lit(cfg.salt_partitions))
+    bucket = F.pmod(F.hash("subj_id"), F.lit(cfg.edge_buckets))
+    return (
+        resolved.withColumn("salt", salt)
+        .groupBy("subj_id", "pred", "obj_id", "salt")
+        .agg(
+            F.count(F.lit(1)).alias("weight"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
+        )
+        .withColumn("_bucket", bucket)
+        .repartition("_bucket")
+        .groupBy("_bucket", "subj_id", "pred", "obj_id")
+        .agg(
+            F.sum("weight").alias("weight"),
+            F.min("first_ts").alias("first_ts"),
+            F.max("last_ts").alias("last_ts"),
+        )
+        .drop("_bucket")
+    )
 
 
-def materialize_edges_auto_salt(
-    triples: DataFrame,
-    canon: DataFrame,
-    cfg: PipelineConfig | None = None,
-    rows_per_task: int = 1_000_000,
-) -> tuple[DataFrame, int]:
-    """Self-tuning edge rollup — the skew loop closed: profile the
-    ACTUAL rollup key (operators/skew.key_stats over the resolved
-    frame), derive the minimum salt fan-out that caps the hottest edge
-    at ``rows_per_task`` rows per task, and materialize with exactly
-    that salt. Returns ``(edges, chosen_salt)`` so callers can record
-    the decision; a uniform corpus gets salt 1 (the two-phase overhead
-    removed entirely), a hot-key corpus gets whatever its histogram
-    demands — never a hand-set constant that was tuned on last month's
-    distribution.
-
-    The profile is one count-rollup shuffle on the same key the real
-    aggregate uses, reduced to a SINGLE driver row (a scalar planning
-    decision, same class as AQE's runtime stats — not a data collect);
-    the resolved frame is localCheckpoint-pinned so the canon joins run
-    once, shared by the profile and the rollup. Output is value-
-    identical to ``materialize_edges`` under ANY salt
-    (tests/test_skew.py pins a hot-key corpus choosing a larger salt
-    with identical edges)."""
-    import math
-
-    from transner_spark.operators.skew import key_stats
-
-    cfg = cfg or PipelineConfig()
-    resolved = _resolved_for_rollup(triples, canon).localCheckpoint()
-    row = key_stats(resolved, ["subj_id", "pred", "obj_id"]).collect()[0]
-    salt = max(1, math.ceil((row["max_cnt"] or 0) / rows_per_task))
-    tuned = replace(cfg, salt_partitions=salt)
-    return _edge_rollup(resolved, tuned, salted=salt > 1), salt
-
-
-def merge_edge_increments(
-    *edge_batches: DataFrame, cfg: PipelineConfig | None = None
-) -> DataFrame:
+def merge_edge_increments(*edge_batches: DataFrame) -> DataFrame:
     """Associative merge of edge-table increments — the 100 TB
     maintenance pattern: a production KG ingests per-batch (daily /
     per-micro-batch) edge increments instead of recomputing the corpus,
@@ -155,26 +95,17 @@ def merge_edge_increments(
     One shuffle: union of increments → hash aggregate on the edge key.
     Map-side partial aggregation bounds hot edges; increments are
     already aggregated, so input cardinality is edges, not mentions."""
-    cfg = cfg or PipelineConfig()
     merged = edge_batches[0]
     for b in edge_batches[1:]:
         merged = merged.unionByName(b, allowMissingColumns=True)
-    return (
-        merged.groupBy("subj_id", "pred", "obj_id")
-        .agg(
-            F.sum("weight").alias("weight"),
-            F.min("first_ts").alias("first_ts"),
-            F.max("last_ts").alias("last_ts"),
-        )
-        .withColumn("bucket", F.pmod(F.hash("subj_id"), F.lit(cfg.edge_buckets)))
+    return merged.groupBy("subj_id", "pred", "obj_id").agg(
+        F.sum("weight").alias("weight"),
+        F.min("first_ts").alias("first_ts"),
+        F.max("last_ts").alias("last_ts"),
     )
 
 
-def reresolve_edges(
-    edges: DataFrame,
-    canon_new: DataFrame,
-    cfg: PipelineConfig | None = None,
-) -> DataFrame:
+def reresolve_edges(edges: DataFrame, canon_new: DataFrame) -> DataFrame:
     """Canon-refresh re-merge — the second speed of the two-speed
     maintenance design (merge_edge_increments docstring): edge
     increments accumulate under whatever canonical map was live when
@@ -199,7 +130,6 @@ def reresolve_edges(
     EDGE table (orders of magnitude smaller than the mention stream) —
     vs a full recompute's NER + linking over the whole corpus.
     """
-    cfg = cfg or PipelineConfig()
     out = edges
     for side in ("subj", "obj"):
         c = canon_new.select(
@@ -214,7 +144,7 @@ def reresolve_edges(
             )
             .drop(f"_{side}_new")
         )
-    return merge_edge_increments(out, cfg=cfg)
+    return merge_edge_increments(out)
 
 
 def edges_asof(
@@ -342,8 +272,7 @@ def ensure_edges_bucketed_table(
         f"""
         CREATE TABLE IF NOT EXISTS {table} (
           subj_id STRING, pred STRING, obj_id STRING,
-          weight BIGINT, first_ts TIMESTAMP, last_ts TIMESTAMP,
-          bucket INT
+          weight BIGINT, first_ts TIMESTAMP, last_ts TIMESTAMP
         )
         USING PARQUET
         CLUSTERED BY (subj_id) SORTED BY (subj_id)

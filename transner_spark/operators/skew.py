@@ -4,7 +4,8 @@ The reference has no counterpart (it is a single-node service); this is
 the pre-flight tooling a 100 TB KG build runs BEFORE committing to a
 salt factor. Every expensive shuffle in this repo keys on Zipfian data
 — the edge rollup groups by ``(subj_id, pred, obj_id)``
-(operators/materialize.py:69, salted with ``cfg.salt_partitions``), the
+(operators/materialize.materialize_edges, salted with
+``cfg.salt_partitions``), the
 linking join keys on normalized surfaces, and ``graph_two_hop`` guards
 hub middles with ``max_mid_degree``. All three guards take a numeric
 knob whose right value depends on the actual key histogram; this module
@@ -80,26 +81,3 @@ def profile_skew(
         top_k
     )
 
-
-def key_stats(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
-    """Single-row key-distribution summary: total rows, distinct keys,
-    the heaviest key's count, mean rows/key, and the max skew multiple.
-    The one-glance answer to "does this shuffle need salting at all"
-    (max_skew_x near 1.0 = uniform; large = salt or guard)."""
-    if not key_cols:
-        raise ValueError("key_stats needs at least one key column")
-    keyed = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("cnt"))
-    return keyed.agg(
-        F.sum("cnt").cast("long").alias("total_rows"),
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.max("cnt").cast("long").alias("max_cnt"),
-        F.round(F.round(F.sum("cnt") / F.count(F.lit(1)), 9), 6).alias(
-            "avg_cnt"
-        ),
-        F.round(
-            F.round(
-                (F.max("cnt") * F.count(F.lit(1))) / F.sum("cnt"), 9
-            ),
-            6,
-        ).alias("max_skew_x"),
-    )

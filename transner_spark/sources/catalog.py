@@ -1,14 +1,11 @@
-"""Table catalog abstraction (Iceberg when the runtime jar is present,
-identical-layout Parquet directories otherwise) and the one record of
-what each commit wrote.
+"""Table catalog: named Parquet tables under one root directory, and the
+one record of what each commit wrote.
 
-The sandbox's pyspark 4.1.2 ships no Iceberg jar, so the default backend
-is Parquet with the same table layout and a snapshot-style commit protocol:
-a stage output is "committed" iff its directory contains Spark's
-``_SUCCESS`` marker — the Parquet stand-in for an Iceberg snapshot. The
-orchestrator (plans/pipeline.py) resumes by skipping committed stages,
-which is exactly the "resume from the last committed snapshot" contract of
-the north rule, minus Iceberg's atomicity guarantees (documented).
+A stage output is "committed" iff its directory contains Spark's
+``_SUCCESS`` marker, the Parquet writer's commit point. The orchestrator
+(plans/pipeline.py) resumes by skipping committed stages — the "resume
+from the last committed snapshot" contract of the north rule, without a
+table format's atomic multi-file snapshots.
 
 Commit records: every writer that commits data (a ``PipelineRun`` stage,
 a streaming log append or compaction) appends one JSON line to
@@ -65,23 +62,12 @@ def read_records(directory: str) -> list[dict]:
         return [json.loads(line) for line in fh]
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
 class Catalog:
     """Minimal warehouse: named tables under a root directory."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.use_iceberg = iceberg_available(spark)
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -93,8 +79,6 @@ class Catalog:
     def read(self, table: str, schema: StructType | None = None) -> DataFrame:
         """Read ``table``; a known ``schema`` skips the Spark job that
         infers it from the files."""
-        if self.use_iceberg:  # pragma: no cover - no jar in sandbox
-            return self.spark.read.format("iceberg").load(self.path(table))
         # a rerun may have replaced files under this path within the same
         # session — drop any cached file listing before reading
         self.spark.catalog.refreshByPath(self.path(table))
@@ -105,7 +89,4 @@ class Catalog:
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        if self.use_iceberg:  # pragma: no cover
-            writer.format("iceberg").save(self.path(table))
-        else:
-            writer.parquet(self.path(table))
+        writer.parquet(self.path(table))

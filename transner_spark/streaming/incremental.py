@@ -258,13 +258,7 @@ def assemble_conversations(
     sep = "\x1f"
 
     def _unpack_roles(packed: str) -> set:
-        # state written before the \x1f change packed roles with ','
-        # (review r4: a checkpoint that spans the upgrade would otherwise
-        # misparse 'agent,user' as ONE role). Legacy strings contain no
-        # \x1f, so: split on \x1f when present, else on the legacy ','
-        # — faithful to what the old code meant by that state.
-        s = packed.split(sep) if sep in packed else packed.split(",")
-        return set(s) - {""}
+        return set(packed.split(sep)) - {""}
 
     def assemble(key, pdfs, state: GroupState):
         import pandas as pd  # worker-side: closure globals aren't shipped

@@ -180,27 +180,25 @@ def _read_manifest(state_dir: str, manifest_name: str) -> list[str]:
         ]
 
 
-def _manifest_meta(
-    state_dir: str, manifest_name: str
-) -> tuple[int | None, str | None]:
+def _manifest_meta(state_dir: str, manifest_name: str) -> tuple[int, str]:
     """(batch_id, action) from the manifest's header line
-    (``#batch=<bid> action=<append|compact>``), or (None, None) for a
-    manifest written before headers existed. The header makes each
+    (``#batch=<bid> action=<append|compact>``). The header makes each
     snapshot self-describing so the prune can count retention in BATCH
     units without consulting (and re-scanning) the unbounded
-    METRICS.jsonl on every commit."""
+    METRICS.jsonl on every commit. A manifest without one was not
+    written by ``_commit``: fail loud rather than guess its batch."""
     with open(os.path.join(state_dir, manifest_name)) as fh:
         first = fh.readline().strip()
-    if not first.startswith("#batch="):
-        return None, None
     fields = dict(
         kv.split("=", 1) for kv in first.lstrip("#").split() if "=" in kv
     )
     try:
-        bid = int(fields["batch"])
+        return int(fields["batch"]), fields["action"]
     except (KeyError, ValueError):
-        return None, None
-    return bid, fields.get("action")
+        raise RuntimeError(
+            f"manifest {manifest_name!r} in {state_dir!r} has no "
+            "'#batch=<bid> action=<...>' header"
+        ) from None
 
 
 def log_segments(state_dir: str) -> tuple[list[str], int]:
@@ -226,17 +224,13 @@ def _read_log(spark: SparkSession, state_dir: str, rollup) -> DataFrame | None:
     return rollup(spark.read.parquet(*segs))
 
 
-def read_edge_log(
-    spark: SparkSession, state_dir: str, cfg: PipelineConfig | None = None
-) -> DataFrame | None:
+def read_edge_log(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Merge-on-read over an edge-state dir via the edge monoid. The
     result is the whole maintained edge table — the stream_edges_log_eq
     gate checks it against the whole-corpus SQL derivation."""
     from transner_spark.operators.materialize import merge_edge_increments
 
-    return _read_log(
-        spark, state_dir, lambda df: merge_edge_increments(df, cfg=cfg)
-    )
+    return _read_log(spark, state_dir, merge_edge_increments)
 
 
 def read_profile_partials_log(
@@ -312,10 +306,7 @@ def _read_log_asof(
 
 
 def read_edge_log_asof(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    cfg: PipelineConfig | None = None,
+    spark: SparkSession, state_dir: str, batch_id: int
 ) -> DataFrame:
     """Time-travel read of a maintained edge state: the edge table as of
     the snapshot committed for ``batch_id`` (or the newest one before
@@ -324,9 +315,7 @@ def read_edge_log_asof(
     micro-batches."""
     from transner_spark.operators.materialize import merge_edge_increments
 
-    return _read_log_asof(
-        spark, state_dir, lambda df: merge_edge_increments(df, cfg=cfg), batch_id
-    )
+    return _read_log_asof(spark, state_dir, merge_edge_increments, batch_id)
 
 
 def _changes_segments(
@@ -372,12 +361,7 @@ def _changes_segments(
         ) from None
     by_bid: dict[int, str] = {}
     for rec in records:
-        # 'append+compact' is the legacy FUSED action (pre two-commit
-        # folds): it still applied a batch, so it must not be silently
-        # skipped — its raw segment was orphaned by the fused fold, so
-        # the existence check below fails LOUD for it (the contract)
-        # instead of returning a partial delta
-        if rec.get("action") in ("append", "append+compact") and (
+        if rec.get("action") == "append" and (
             since_batch < rec["batch_id"] <= until
         ):
             by_bid[rec["batch_id"]] = rec.get(
@@ -427,7 +411,6 @@ def read_edge_log_changes(
     state_dir: str,
     since_batch: int,
     until_batch: int | None = None,
-    cfg: PipelineConfig | None = None,
 ) -> DataFrame | None:
     """Changelog read of a maintained edge state: the edge-increment
     delta contributed by batches in ``(since_batch, until_batch]`` —
@@ -438,11 +421,7 @@ def read_edge_log_changes(
     from transner_spark.operators.materialize import merge_edge_increments
 
     return _read_log_changes(
-        spark,
-        state_dir,
-        lambda df: merge_edge_increments(df, cfg=cfg),
-        since_batch,
-        until_batch,
+        spark, state_dir, merge_edge_increments, since_batch, until_batch
     )
 
 
@@ -545,10 +524,7 @@ def _prune(state_dir: str, retain: int, supersede: bool = False) -> int:
     its batch id is among the first ``retain`` distinct batch ids
     encountered — so an inline fold's append+compact pair costs one slot
     and ``retain=k`` always means "the last k applied batches stay
-    time-travelable". Manifests from before self-describing headers
-    existed have no recoverable batch id; each counts as its own slot
-    (the old manifest-count semantics, so legacy states degrade to
-    exactly their old behavior).
+    time-travelable".
 
     ``supersede=True`` (offline compaction / ``expire_snapshots``)
     additionally drops append manifests shadowed by a NEWER compact
@@ -563,32 +539,31 @@ def _prune(state_dir: str, retain: int, supersede: bool = False) -> int:
     removed. Caller holds ``_writer_lock``."""
     entries = sorted(
         (
-            (_manifest_seq(f), f)
+            f
             for f in os.listdir(state_dir)
             if f.startswith(MANIFEST_PREFIX) and not f.endswith(".tmp")
         ),
+        key=_manifest_seq,
         reverse=True,
     )
     retain = max(1, retain)
-    seen_keys: list[tuple] = []
-    compacted_keys: set[tuple] = set()
+    seen_bids: list[int] = []
+    compacted_bids: set[int] = set()
     keep: list[str] = []
     drop: list[str] = []
-    for seq, f in entries:
+    for f in entries:
         bid, action = _manifest_meta(state_dir, f)
-        # legacy manifests (no header): unique key -> one slot each
-        key = ("b", bid) if bid is not None else ("m", seq)
-        is_compact = action is not None and "compact" in action
-        if key not in seen_keys:
-            if len(seen_keys) >= retain:
+        is_compact = action == "compact"
+        if bid not in seen_bids:
+            if len(seen_bids) >= retain:
                 drop.append(f)
                 continue
-            seen_keys.append(key)
-        if supersede and not is_compact and key in compacted_keys:
+            seen_bids.append(bid)
+        if supersede and not is_compact and bid in compacted_bids:
             drop.append(f)
             continue
         if is_compact:
-            compacted_keys.add(key)
+            compacted_bids.add(bid)
         keep.append(f)
     live: set[str] = set()
     for f in keep:
@@ -695,10 +670,7 @@ def expire_snapshots(state_dir: str, keep: int) -> int:
 
 
 def compact_edge_log(
-    spark: SparkSession,
-    state_dir: str,
-    cfg: PipelineConfig | None = None,
-    retain_snapshots: int | None = None,
+    spark: SparkSession, state_dir: str, retain_snapshots: int | None = None
 ) -> int:
     """Offline compaction of an edge-state dir (see ``_compact_log``).
     ``retain_snapshots=None`` (the default) honors the retention window
@@ -709,10 +681,7 @@ def compact_edge_log(
     from transner_spark.operators.materialize import merge_edge_increments
 
     return _compact_log(
-        spark,
-        state_dir,
-        lambda df: merge_edge_increments(df, cfg=cfg),
-        retain=retain_snapshots,
+        spark, state_dir, merge_edge_increments, retain=retain_snapshots
     )
 
 
@@ -889,7 +858,7 @@ def stream_edge_increments_log(
         make_increment=lambda b, _bid: materialize_edges(
             explode_triples(b), canon, cfg
         ),
-        rollup=lambda df: merge_edge_increments(df, cfg=cfg),
+        rollup=merge_edge_increments,
         cfg=cfg,
         max_files_per_trigger=max_files_per_trigger,
         await_termination=await_termination,
@@ -992,9 +961,7 @@ def read_pipeline_links(spark: SparkSession, state_dir: str) -> DataFrame:
     return spark.read.parquet(_links_version_path(state_dir, last_applied))
 
 
-def read_pipeline_edges(
-    spark: SparkSession, state_dir: str, cfg: PipelineConfig | None = None
-) -> DataFrame:
+def read_pipeline_edges(spark: SparkSession, state_dir: str) -> DataFrame:
     """Serve the full-chain pipeline state: merge-on-read over the edge
     log, then ``reresolve_edges`` through the canonical map refreshed
     from the maintained link table — the slow speed of the two-speed
@@ -1008,9 +975,9 @@ def read_pipeline_edges(
     from transner_spark.operators.canonicalize import canonicalize
     from transner_spark.operators.materialize import reresolve_edges
 
-    edges = read_edge_log(spark, state_dir, cfg)
+    edges = read_edge_log(spark, state_dir)
     canon = canonicalize(read_pipeline_links(spark, state_dir))
-    return reresolve_edges(edges, canon, cfg)
+    return reresolve_edges(edges, canon)
 
 
 def read_pipeline_links_asof(
@@ -1037,10 +1004,7 @@ def read_pipeline_links_asof(
 
 
 def read_pipeline_edges_asof(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    cfg: PipelineConfig | None = None,
+    spark: SparkSession, state_dir: str, batch_id: int
 ) -> DataFrame:
     """Time travel over the FULL pipeline state: the edge log AS OF
     ``batch_id`` re-resolved through the canon map refreshed from the
@@ -1052,9 +1016,9 @@ def read_pipeline_edges_asof(
     from transner_spark.operators.canonicalize import canonicalize
     from transner_spark.operators.materialize import reresolve_edges
 
-    edges = read_edge_log_asof(spark, state_dir, batch_id, cfg)
+    edges = read_edge_log_asof(spark, state_dir, batch_id)
     canon = canonicalize(read_pipeline_links_asof(spark, state_dir, batch_id))
-    return reresolve_edges(edges, canon, cfg)
+    return reresolve_edges(edges, canon)
 
 
 def stream_pipeline_log(
@@ -1157,7 +1121,7 @@ def stream_pipeline_log(
         state_dir,
         checkpoint_dir,
         make_increment=make_increment,
-        rollup=lambda df: merge_edge_increments(df, cfg=cfg),
+        rollup=merge_edge_increments,
         cfg=cfg,
         max_files_per_trigger=max_files_per_trigger,
         await_termination=await_termination,
