@@ -1,13 +1,17 @@
 .PHONY: dist test bench clean
 
+# `make dist [DIST=<dir>]` writes <dir>/transner_spark.zip: the package's
+# .py files plus the gazetteer fixtures its workers read
+DIST ?= dist
+
 dist:
-	@mkdir -p dist
-	@cd . && python -c "\
+	@mkdir -p $(DIST)
+	@python -c "\
 import zipfile, os; \
-zf = zipfile.ZipFile('dist/transner_spark.zip', 'w', zipfile.ZIP_DEFLATED); \
+zf = zipfile.ZipFile('$(DIST)/transner_spark.zip', 'w', zipfile.ZIP_DEFLATED); \
 [zf.write(os.path.join(r, f)) for r, _d, fs in os.walk('transner_spark') \
- for f in fs if f.endswith('.py')]; \
-zf.close(); print('dist/transner_spark.zip')"
+ for f in fs if f.endswith(('.py', '.csv', '.txt'))]; \
+zf.close(); print('$(DIST)/transner_spark.zip')"
 
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \

@@ -148,35 +148,11 @@ def test_bucketed_edges_point_lookup_prunes_buckets(spark, bucketed_edges):
     assert "SelectedBucketsCount" not in pp  # plain layout cannot prune
 
 
-def test_link_surfaces_fuzzy_pass_runs_once_in_one_stage(spark):
-    """link_surfaces' fuzzy pass: the gram-index join appears ONCE (the
-    matched and unmatched residual are resolved from one evaluation),
-    and the only shuffle is ONE norm_key repartition of the residual
-    into defaultParallelism partitions — explode, gram join, pair
-    count, rank and resolve follow it with no further Exchange, and no
-    second consumer re-shuffles the residual."""
-    from transner_spark.operators.linking import link_surfaces
-
-    surfaces = spark.createDataFrame(
-        [("mario rossi",), ("mario rosi",), ("zzqq xxvv",)], "norm_key string"
-    )
-    p = _plan(link_surfaces(spark, surfaces))
-    assert p.count("BroadcastHashJoin [gram") == 1, p
-    shuffles = [
-        line for line in p.splitlines()
-        if "Exchange" in line and "BroadcastExchange" not in line
-    ]
-    dp = spark.sparkContext.defaultParallelism
-    repartition = rf"hashpartitioning\(norm_key#\d+, {dp}\), REPARTITION_BY_NUM"
-    assert len(shuffles) == 1 and re.search(repartition, shuffles[0]), p
-
-
-def test_link_surfaces_broadcasts_both_dim_joins(spark, monkeypatch):
-    """Both alias-dim joins carry the broadcast hint: with
-    auto-broadcast off, the exact join (planned in the frame
-    link_surfaces checkpoints) and the gram join are still
-    broadcast-hash joins, so the mention side never shuffles for
-    either."""
+def test_link_surfaces_is_one_arrow_pass(spark, monkeypatch):
+    """link_surfaces is one mapInArrow pass over the surfaces, spread
+    round-robin over defaultParallelism tasks: no join (the alias dims
+    are an in-memory index in the closure), no window, no checkpoint,
+    and one shuffle."""
     from transner_spark.operators.linking import link_surfaces
 
     surfaces = spark.createDataFrame(
@@ -193,10 +169,17 @@ def test_link_surfaces_broadcasts_both_dim_joins(spark, monkeypatch):
     monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
     with _no_broadcast(spark):
         p = _plan(link_surfaces(spark, surfaces))
-    assert len(checkpointed) == 1, checkpointed
-    exact = r"BroadcastHashJoin \[norm_key#\d+\], \[norm_alias#\d+\], LeftOuter"
-    assert re.search(exact, checkpointed[0]), checkpointed[0]
-    assert p.count("BroadcastHashJoin [gram") == 1, p
+    assert checkpointed == []
+    assert p.count("MapInArrow") == 1, p
+    for op in ("BroadcastHashJoin", "SortMergeJoin", "Window"):
+        assert op not in p, p
+    shuffles = [
+        line for line in p.splitlines()
+        if "Exchange" in line and "BroadcastExchange" not in line
+    ]
+    dp = spark.sparkContext.defaultParallelism
+    repartition = rf"RoundRobinPartitioning\({dp}\), REPARTITION_BY_NUM"
+    assert len(shuffles) == 1 and re.search(repartition, shuffles[0]), p
 
 
 def test_neighbors_topk_window_is_partitioned(spark):

@@ -86,9 +86,7 @@ def test_full_ner_batch_with_real_gazetteers():
     ]
     # prove the REAL file (not the fixture) was loaded: an entry only
     # the real religions.txt contains must also hit end-to-end
-    from transner_spark.data.gazetteers import RELIGIONS_TXT
-
-    assert "amish" not in load_religions_set(RELIGIONS_TXT)
+    assert "amish" not in load_religions_set()  # the packaged fixture
     out2 = ner_batch(["the Amish community settled here"], cfg=cfg)
     assert any(
         e["type"] == "RELIGION" and e["value"] == "Amish"

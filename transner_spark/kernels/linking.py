@@ -1,24 +1,29 @@
-"""Entity-linking kernel: normalization, char n-grams, Jaccard scoring.
+"""Entity-linking kernel: char n-grams, the alias index, and the one
+linking pass every engine runs.
 
 North-rule stage: blocking + candidate generation + similarity scoring
-against the alias dictionary. The *deterministic* algorithm (used by both
-the oracle and the default Spark operator) is:
+against the alias dictionary. ``link_norms`` is the one implementation:
 
-1. exact match on the normalized surface (a broadcast equi-join in Spark);
-2. for the residual, candidates = aliases sharing ≥1 character 3-gram with
-   the mention (an inverted-index join in Spark — explode n-grams, equi-join
-   on the gram, dedupe pairs), scored by exact Jaccard over the 3-gram sets;
-3. keep score ≥ threshold; pick the best per mention with a total
-   deterministic order (score desc, entity_key asc, alias asc).
+1. exact match on the normalized surface → (min entity_key, 1.0, exact);
+2. otherwise, candidates = aliases sharing ≥1 character n-gram with the
+   surface (the index's gram postings also count the shared grams),
+   scored by exact Jaccard over the distinct gram sets;
+3. keep score ≥ threshold; pick the best by score desc, entity_key asc,
+   alias asc → fuzzy, else (None, 0.0, none).
 
-The Spark operator (operators/linking.link_surfaces) runs this same
-deterministic algorithm and has no probabilistic (MinHash-LSH) variant;
-its Jaccard size filter is exact, so ``link_one`` is its reference.
+The Spark operator (operators/linking.link_surfaces) calls it in one
+``mapInArrow`` pass over an index collected from the cached alias dims;
+``link_one`` and the single-node oracle (kernels/oracle.oracle_links)
+over the index built here. The DuckDB ``oracles.kg_links_sql``
+re-derives the same rules independently.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from collections.abc import Collection, Iterable, Iterator
 from functools import lru_cache
+from typing import NamedTuple
 
 from transner_spark.data.aliases import build_alias_rows
 from transner_spark.kernels.triples import normalize_surface
@@ -33,57 +38,84 @@ def char_ngrams(s: str, n: int = 3) -> frozenset[str]:
     return frozenset(padded[i : i + n] for i in range(len(padded) - n + 1))
 
 
-def jaccard(a: frozenset[str], b: frozenset[str]) -> float:
-    if not a and not b:
-        return 0.0
-    inter = len(a & b)
-    return inter / (len(a) + len(b) - inter)
+class AliasIndex(NamedTuple):
+    """The alias dictionary as ``link_norms`` reads it. ``exact`` maps a
+    normalized alias to its min entity_key; ``postings`` maps a gram to
+    the positions of the aliases holding it; alias ``i`` has
+    ``n_grams[i]`` distinct grams and is ``names[i]`` = (entity_key,
+    alias)."""
+
+    ngram: int
+    exact: dict[str, str]
+    postings: dict[str, list[int]]
+    n_grams: list[int]
+    names: list[tuple[str, str]]
+
+
+def build_index(
+    exact: dict[str, str],
+    alias_grams: Iterable[tuple[str, str, Collection[str]]],
+    ngram: int,
+) -> AliasIndex:
+    """Index ``(entity_key, alias, distinct grams)`` per alias, next to
+    the given exact map."""
+    postings: dict[str, list[int]] = {}
+    n_grams: list[int] = []
+    names: list[tuple[str, str]] = []
+    for i, (entity_key, alias, grams) in enumerate(alias_grams):
+        names.append((entity_key, alias))
+        n_grams.append(len(grams))
+        for gram in grams:
+            postings.setdefault(gram, []).append(i)
+    return AliasIndex(ngram, exact, postings, n_grams, names)
 
 
 @lru_cache(maxsize=None)
-def alias_index(ngram: int = 3):
-    """(exact_map, gram_index, alias_grams) over the alias dictionary —
-    the oracle's in-memory analogue of the broadcast dim table."""
-    exact: dict[str, tuple[str, str]] = {}
-    gram_index: dict[str, set[int]] = {}
-    alias_rows = build_alias_rows()
-    grams_list = []
-    for idx, (entity_key, alias, _type) in enumerate(alias_rows):
-        norm = normalize_surface(alias)
-        if norm not in exact or (exact[norm][0] > entity_key):
-            # deterministic winner on duplicate normalized aliases
-            exact[norm] = (entity_key, alias)
-        g = char_ngrams(norm, ngram)
-        grams_list.append(g)
-        for gram in g:
-            gram_index.setdefault(gram, set()).add(idx)
-    return exact, gram_index, grams_list, alias_rows
+def alias_index(ngram: int = 3) -> AliasIndex:
+    """The index over the built-in alias dictionary (data/aliases)."""
+    rows = [(k, a, normalize_surface(a)) for k, a, _type in build_alias_rows()]
+    exact: dict[str, str] = {}
+    for entity_key, _alias, norm in rows:
+        # duplicate normalized aliases resolve to the min entity_key
+        if norm not in exact or exact[norm] > entity_key:
+            exact[norm] = entity_key
+    return build_index(
+        exact, ((k, a, char_ngrams(norm, ngram)) for k, a, norm in rows), ngram
+    )
+
+
+def link_norms(
+    norms: Iterable[str], index: AliasIndex, threshold: float
+) -> Iterator[tuple[str | None, float, str]]:
+    """(entity_key | None, score, method) for each normalized surface."""
+    postings, n_grams, names = index.postings, index.n_grams, index.names
+    for norm in norms:
+        key = index.exact.get(norm)
+        if key is not None:
+            yield key, 1.0, "exact"
+            continue
+        best: tuple[float, str, str] | None = None  # (-score, entity_key, alias)
+        if norm:
+            grams = char_ngrams(norm, index.ngram)
+            shared: Counter[int] = Counter()
+            for gram in grams:
+                shared.update(postings.get(gram, ()))
+            m = len(grams)
+            for i, inter in shared.items():
+                score = inter / (m + n_grams[i] - inter)
+                cand = (-score, *names[i])
+                if score >= threshold and (best is None or cand < best):
+                    best = cand
+        if best is None:
+            yield None, 0.0, "none"
+        else:
+            yield best[1], -best[0], "fuzzy"
 
 
 def link_one(
     value: str, threshold: float = 0.5, ngram: int = 3
 ) -> tuple[str | None, float, str]:
     """Link one mention surface → (entity_key | None, score, method)."""
-    norm = normalize_surface(value)
-    exact, gram_index, grams_list, alias_rows = alias_index(ngram)
-    hit = exact.get(norm)
-    if hit is not None:
-        return hit[0], 1.0, "exact"
-    if not norm:
-        return None, 0.0, "none"
-    g = char_ngrams(norm, ngram)
-    cand_ids: set[int] = set()
-    for gram in g:
-        cand_ids |= gram_index.get(gram, set())
-    best: tuple[float, str, str] | None = None  # (-score, entity_key, alias)
-    for idx in cand_ids:
-        score = jaccard(g, grams_list[idx])
-        if score < threshold:
-            continue
-        entity_key, alias, _ = alias_rows[idx]
-        cand = (-score, entity_key, alias)
-        if best is None or cand < best:
-            best = cand
-    if best is None:
-        return None, 0.0, "none"
-    return best[1], -best[0], "fuzzy"
+    return next(
+        link_norms([normalize_surface(value)], alias_index(ngram), threshold)
+    )

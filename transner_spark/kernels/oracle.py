@@ -91,13 +91,12 @@ def _node_surfaces(triples: pd.DataFrame) -> pd.DataFrame:
 def oracle_links(triples: pd.DataFrame, cfg: PipelineConfig | None = None) -> pd.DataFrame:
     """Distinct node surfaces → alias-dictionary links."""
     cfg = cfg or PipelineConfig()
-    rows = []
-    for norm in _node_surfaces(triples)["norm_key"]:
-        entity_key, score, method = linking.link_one(
-            norm, threshold=cfg.link_jaccard_threshold, ngram=cfg.link_ngram
-        )
-        rows.append((norm, entity_key, score, method))
-    out = pd.DataFrame(rows, columns=LINK_COLUMNS)
+    norms = _node_surfaces(triples)["norm_key"].tolist()
+    index = linking.alias_index(cfg.link_ngram)
+    links = linking.link_norms(norms, index, cfg.link_jaccard_threshold)
+    out = pd.DataFrame(
+        [(norm, *link) for norm, link in zip(norms, links)], columns=LINK_COLUMNS
+    )
     if out.empty:
         out = pd.DataFrame({c: pd.Series(dtype="object") for c in LINK_COLUMNS})
     return out.astype({"score": "float64"})

@@ -181,9 +181,9 @@ def entity_cooccurrence(
         op="entity_cooccurrence",
         twin="a per-conversation node cap upstream",
     )
-    # four consumers (N, marginals, both self-join sides): barrier so
-    # the membership derivation + guard run once, not up to 4x per
-    # action (the link_surfaces exact-residual localCheckpoint pattern)
+    # four consumers (N, marginals, both self-join sides): a
+    # localCheckpoint barrier, so the membership derivation + guard run
+    # once, not up to 4x per action
     ents = ents.localCheckpoint()
     n_convs = ents.select(
         F.countDistinct("conv_id").cast("double").alias("n_convs")

@@ -1,40 +1,43 @@
-"""Entity linking on Spark: broadcast exact match + inverted-index n-gram
-Jaccard fuzzy match against the alias dictionary.
+"""Entity linking on Spark: exact match + n-gram Jaccard fuzzy match
+against the alias dictionary, in one ``mapInArrow`` pass.
 
 Scale design:
-- the alias dictionary is a dimension table → both the exact join and the
-  gram-index join are ``broadcast()`` hash joins: the (potentially
-  enormous) mention side never shuffles for the join itself;
 - linking operates on DISTINCT normalized surfaces, not raw mentions —
   the distinct is the pipeline's first shuffle and collapses the Zipfian
   mention distribution (the hot "mario rossi" key becomes ONE row), which
   is itself the skew mitigation for this stage;
-- mention-side n-gram generation is pure Catalyst (``sequence`` +
-  ``substr`` inside ``transform``) — no Python in this stage;
-- the residual (surfaces with no exact match) is dim-sized, yet each
-  row still expands ×(grams × postings) in the gram join, so its width
-  is set before the expansion: hash-partitioned on norm_key into
-  defaultParallelism partitions, and the whole fuzzy pass (gram join,
-  pair count, top-1, resolve) runs once, in that one stage; a Jaccard
-  size filter on the gram counts prunes pairs before the count;
+- the alias dictionary is a dimension table small enough for every
+  Python worker: the driver collects the two cached alias dims with
+  ``toArrow`` once per session into a ``kernels/linking.AliasIndex``,
+  which travels in the task closure (PySpark broadcasts a command over
+  1 MB by itself);
+- the surfaces are spread round-robin over defaultParallelism tasks,
+  each linking its Arrow batches with ``kernels/linking.link_norms``,
+  the one implementation of the rules (``link_one`` and the oracle call
+  it too): no join, no window, no checkpoint;
 - normalization of alias surfaces (accent strip etc.) happens driver-side
   with the SAME kernel function mentions were normalized with
   (kernels/triples.normalize_surface), so keys agree bit-for-bit;
-- both broadcast hints are unconditional (tests/test_plan_shapes.py pins
-  them); the gram inverted index itself is the LSH-free blocking
-  structure and scales linearly.
-
-Tie-breaks replicate kernels/linking.py exactly: score desc, entity_key
-asc, alias asc; duplicate normalized aliases resolve to min entity_key.
+- alias grams come from ``with_grams``, the Catalyst twin of
+  ``kernels/linking.char_ngrams``, which ``_affected_surfaces`` also uses.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Iterator
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transner_spark.config import PipelineConfig
-from transner_spark.kernels.oracle import STRUCTURAL_TYPES
+from transner_spark.kernels.linking import AliasIndex, build_index, link_norms
+from transner_spark.kernels.oracle import LINK_COLUMNS, STRUCTURAL_TYPES
+
+_LINK_SCHEMA = "norm_key string, entity_key string, score double, method string"
+_LINK_TYPE = pa.struct(
+    [("entity_key", pa.string()), ("score", pa.float64()), ("method", pa.string())]
+)
 
 
 def node_surfaces(triples: DataFrame) -> DataFrame:
@@ -61,24 +64,20 @@ def node_surfaces(triples: DataFrame) -> DataFrame:
     return triples.select(F.explode(keys).alias("norm_key")).distinct()
 
 
-# single-session dimension cache: the alias dictionary is static, so
-# build each dim DataFrame once per SparkSession (pandas → Arrow path,
-# not the slow py4j row pickling). Scoped to the CURRENT session only —
-# entries for a different session are dropped so stopped sessions (and
-# their JVM state) are never pinned alive.
+# single-session cache: the alias dictionary is static, so build each
+# dim DataFrame (persisted) and the linker's index once per
+# SparkSession. Scoped to the CURRENT session only — entries for a
+# different session are dropped so stopped sessions (and their JVM
+# state) are never pinned alive.
 _DIM_CACHE: dict = {"session": None, "dims": {}}
 
 
-def _dim_cached(spark: SparkSession, name: str, build) -> DataFrame:
+def _session_cached(spark: SparkSession, name: str, build):
     if _DIM_CACHE["session"] is not spark:
         _DIM_CACHE["session"] = spark
         _DIM_CACHE["dims"] = {}
     if name not in _DIM_CACHE["dims"]:
-        # persist: a createDataFrame dim is a LocalTableScan that gets
-        # re-serialized driver→executor on every job touching it; the
-        # persist pins the Arrow-decoded blocks once per session (at
-        # cluster scale this is the broadcast-side dim table cache)
-        _DIM_CACHE["dims"][name] = build().persist()
+        _DIM_CACHE["dims"][name] = build()
     return _DIM_CACHE["dims"][name]
 
 
@@ -114,30 +113,31 @@ def exact_alias_dim(
 
     if alias_dim is not None:
         return build(alias_dim)
-    return _dim_cached(spark, "exact", lambda: build(_alias_dim_source(spark)))
+    return _session_cached(
+        spark, "exact", lambda: build(_alias_dim_source(spark)).persist()
+    )
 
 
 def alias_gram_dim(
     spark: SparkSession, n: int, alias_dim: DataFrame | None = None
 ) -> DataFrame:
-    """Inverted gram index over the alias dictionary (exploded,
-    broadcast). Grams come from with_grams — the Catalyst twin of
-    kernels/linking.char_ngrams (identical distinct gram sets, pinned by
-    the parity tests). ``alias_dim`` as in exact_alias_dim."""
+    """Inverted gram index over the alias dictionary: one row per alias
+    and gram, collected into the linker's index. Grams come from
+    with_grams — the Catalyst twin of kernels/linking.char_ngrams
+    (identical distinct gram sets). ``alias_dim`` as in exact_alias_dim."""
 
     def build(src: DataFrame) -> DataFrame:
         return with_grams(src, "norm", n).select(
             "alias_id",
             "entity_key",
             "alias",
-            F.col("n_grams").cast("int").alias("a_n"),
             F.explode("grams").alias("gram"),
         )
 
     if alias_dim is not None:
         return build(alias_dim)
-    return _dim_cached(
-        spark, f"gram{n}", lambda: build(_alias_dim_source(spark))
+    return _session_cached(
+        spark, f"gram{n}", lambda: build(_alias_dim_source(spark)).persist()
     )
 
 
@@ -162,6 +162,29 @@ def with_grams(df: DataFrame, src_col: str, n: int) -> DataFrame:
     )
 
 
+def _alias_index(
+    spark: SparkSession, n: int, alias_dim: DataFrame | None = None
+) -> AliasIndex:
+    """The linker's in-memory index, collected on the driver from the
+    two alias dims with ``toArrow`` — once per session for the canonical
+    dictionary, on every call for an ``alias_dim`` override."""
+
+    def build() -> AliasIndex:
+        exact = exact_alias_dim(spark, alias_dim).toArrow().to_pydict()
+        grams = alias_gram_dim(spark, n, alias_dim).toArrow().to_pydict()
+        by_alias: dict[int, tuple[str, str, list[str]]] = {}
+        for alias_id, key, alias, gram in zip(
+            grams["alias_id"], grams["entity_key"], grams["alias"], grams["gram"]
+        ):
+            by_alias.setdefault(alias_id, (key, alias, []))[2].append(gram)
+        exact_map = dict(zip(exact["norm_alias"], exact["entity_key"]))
+        return build_index(exact_map, by_alias.values(), n)
+
+    if alias_dim is not None:
+        return build()
+    return _session_cached(spark, f"index{n}", build)
+
+
 def link_surfaces(
     spark: SparkSession,
     surfaces: DataFrame,
@@ -174,97 +197,26 @@ def link_surfaces(
     (``relink_for_alias_delta``) uses to link against a base/updated
     dictionary."""
     cfg = cfg or PipelineConfig()
-    exact_dim = exact_alias_dim(spark, alias_dim)
-    exact = surfaces.join(
-        F.broadcast(exact_dim),
-        surfaces["norm_key"] == exact_dim["norm_alias"],
-        "left",
-    ).select(
-        "norm_key",
-        "entity_key",
-        F.when(F.col("entity_key").isNotNull(), F.lit(1.0))
-        .otherwise(F.lit(0.0))
-        .alias("score"),
-        F.when(F.col("entity_key").isNotNull(), F.lit("exact"))
-        .otherwise(F.lit("none"))
-        .alias("method"),
-    )
+    index = _alias_index(spark, cfg.link_ngram, alias_dim)
+    threshold = cfg.link_jaccard_threshold
 
-    # Materialization barrier: the residual (fuzzy input) AND the final
-    # union both read `exact` — without it the whole upstream plan
-    # (triples → distinct surfaces → broadcast join) executes twice
-    # (VERDICT r1 "What's wrong"). localCheckpoint rather than persist:
-    # checkpoint blocks are ContextCleaner-collected when the frame goes
-    # out of scope, while a persist with no owner to unpersist it would
-    # pin CacheManager entries for the session's lifetime (one per
-    # link_surfaces call). At warehouse scale this is the exact-links
-    # staging table write between the two linking passes.
-    exact = exact.localCheckpoint()
+    def link(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            norms = batch.column(0)
+            links = link_norms(norms.to_pylist(), index, threshold)
+            yield pa.RecordBatch.from_arrays(
+                [norms, *pa.array(list(links), _LINK_TYPE).flatten()],
+                names=LINK_COLUMNS,
+            )
 
-    # Width is set BEFORE the ×(grams × postings) expansion: hash on
-    # norm_key into defaultParallelism partitions (fan_out's rule), so
-    # explode, gram join, pair count, rank and resolve run as one stage
-    # with no further Exchange. The repartition follows the checkpoint:
-    # a localCheckpoint does not keep hash partitioning.
-    residual = (
-        exact.where(F.col("method") == "none")
-        .select("norm_key")
-        .repartition(spark.sparkContext.defaultParallelism, "norm_key")
+    # round-robin, not on norm_key: a same-key repartition after
+    # node_surfaces' distinct is dropped as redundant, and AQE then
+    # coalesces that small shuffle into one task
+    return (
+        surfaces.select("norm_key")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .mapInArrow(link, _LINK_SCHEMA)
     )
-    n, t = cfg.link_ngram, cfg.link_jaccard_threshold
-
-    mention_grams = with_grams(residual, "norm_key", n).select(
-        "norm_key",
-        F.col("n_grams").alias("m_n"),
-        F.explode("grams").alias("gram"),
-    )
-    gram_dim = alias_gram_dim(spark, n, alias_dim).withColumnRenamed("gram", "a_gram")
-    # Size filter, in the join condition: inter <= min(m_n, a_n), so
-    # J >= t implies a_n >= t*m_n and m_n >= t*a_n. The slack lets it
-    # keep extra pairs only, never drop one the score filter keeps. The
-    # join is a LEFT join so that every residual surface keeps a row:
-    # the fuzzy pass resolves from this one branch, and the residual's
-    # Exchange has one consumer.
-    pair_scores = (
-        mention_grams.join(
-            F.broadcast(gram_dim),
-            (F.col("gram") == F.col("a_gram"))
-            & (F.col("a_n") >= t * F.col("m_n") - 1e-9)
-            & (F.col("m_n") >= t * F.col("a_n") - 1e-9),
-            "left",
-        )
-        .groupBy("norm_key", "alias_id", "entity_key", "alias", "m_n", "a_n")
-        .agg(F.count(F.lit(1)).alias("inter"))
-        .withColumn(
-            "score",
-            F.col("inter") / (F.col("m_n") + F.col("a_n") - F.col("inter")),
-        )
-    )
-    # Pairs below the threshold, and a surface's grams with no pair,
-    # collapse into one (NULL, NULL, NULL) row per surface; it ranks
-    # last, so a surface with no pair at the threshold resolves to
-    # (NULL, 0.0, none).
-    hit = F.col("score") >= t
-    candidates = pair_scores.select(
-        "norm_key",
-        *[F.when(hit, F.col(c)).alias(c) for c in ("entity_key", "alias", "score")],
-    ).distinct()
-    w = Window.partitionBy("norm_key").orderBy(
-        F.col("score").desc(), F.col("entity_key").asc(), F.col("alias").asc()
-    )
-    fuzzy = (
-        candidates.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "norm_key",
-            "entity_key",
-            F.coalesce("score", F.lit(0.0)).alias("score"),
-            F.when(F.col("score").isNotNull(), F.lit("fuzzy"))
-            .otherwise(F.lit("none"))
-            .alias("method"),
-        )
-    )
-    return exact.where(F.col("method") == "exact").unionByName(fuzzy)
 
 
 def link_surfaces_incremental(
@@ -377,9 +329,9 @@ def relink_for_alias_delta(
     CHANGED row's replacement winner only through that row itself, so
     removals need alias-provenance on the link table (store the winning
     alias_id) — out of scope here, fail-safe is a full re-link."""
-    # two consumers (the re-link pass and the kept anti-join): barrier
-    # so the corpus-vocabulary gram pass runs once, not per action
-    # (the link_surfaces exact-residual localCheckpoint pattern)
+    # two consumers (the re-link pass and the kept anti-join): a
+    # localCheckpoint barrier, so the corpus-vocabulary gram pass runs
+    # once, not once per consumer
     affected = _affected_surfaces(known_links, alias_delta, cfg).localCheckpoint()
     relinked = link_surfaces(spark, affected, cfg, alias_dim=alias_dim)
     kept = known_links.join(affected, "norm_key", "left_anti")
