@@ -148,11 +148,34 @@ def test_bucketed_edges_point_lookup_prunes_buckets(spark, bucketed_edges):
     assert "SelectedBucketsCount" not in pp  # plain layout cannot prune
 
 
-def test_link_surfaces_is_one_arrow_pass(spark, monkeypatch):
-    """link_surfaces is one mapInArrow pass over the surfaces, spread
-    round-robin over defaultParallelism tasks: no join (the alias dims
-    are an in-memory index in the closure), no window, no checkpoint,
-    and one shuffle."""
+def test_link_surfaces_fuzzy_pass_runs_once_in_one_stage(spark):
+    """link_surfaces' fuzzy pass runs ONCE, in one stage: a single
+    mapInArrow over the surfaces resolves exact and fuzzy links
+    together, and the only shuffle is ONE round-robin repartition into
+    defaultParallelism partitions — no window, and no second consumer
+    re-shuffles the surfaces."""
+    from transner_spark.operators.linking import link_surfaces
+
+    surfaces = spark.createDataFrame(
+        [("mario rossi",), ("mario rosi",), ("zzqq xxvv",)], "norm_key string"
+    )
+    p = _plan(link_surfaces(spark, surfaces))
+    assert p.count("MapInArrow") == 1, p
+    assert "Window" not in p, p
+    shuffles = [
+        line for line in p.splitlines()
+        if "Exchange" in line and "BroadcastExchange" not in line
+    ]
+    dp = spark.sparkContext.defaultParallelism
+    repartition = rf"RoundRobinPartitioning\({dp}\), REPARTITION_BY_NUM"
+    assert len(shuffles) == 1 and re.search(repartition, shuffles[0]), p
+
+
+def test_link_surfaces_broadcasts_both_dim_joins(spark, monkeypatch):
+    """Both alias dims (exact and gram) reach every task as the
+    in-memory index in the task closure, so the mention side never
+    shuffles for either lookup: with auto-broadcast off the plan holds
+    no join of any kind, and nothing is checkpointed."""
     from transner_spark.operators.linking import link_surfaces
 
     surfaces = spark.createDataFrame(
@@ -170,16 +193,8 @@ def test_link_surfaces_is_one_arrow_pass(spark, monkeypatch):
     with _no_broadcast(spark):
         p = _plan(link_surfaces(spark, surfaces))
     assert checkpointed == []
-    assert p.count("MapInArrow") == 1, p
-    for op in ("BroadcastHashJoin", "SortMergeJoin", "Window"):
+    for op in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"):
         assert op not in p, p
-    shuffles = [
-        line for line in p.splitlines()
-        if "Exchange" in line and "BroadcastExchange" not in line
-    ]
-    dp = spark.sparkContext.defaultParallelism
-    repartition = rf"RoundRobinPartitioning\({dp}\), REPARTITION_BY_NUM"
-    assert len(shuffles) == 1 and re.search(repartition, shuffles[0]), p
 
 
 def test_neighbors_topk_window_is_partitioned(spark):
