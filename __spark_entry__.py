@@ -117,15 +117,15 @@ def q_kg_links_alias_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     — must equal the whole-corpus kg_links derivation verbatim (the
     same SQL oracle). Closes the dictionary side of the two-speed
     refresh story (canon side: kg_edges_canon_refresh)."""
+    from transner_spark.data.aliases import ensure_alias_dim_parquet
     from transner_spark.operators.linking import (
-        _alias_dim_source,
         link_surfaces,
         node_surfaces,
         relink_for_alias_delta,
     )
 
     surfaces = node_surfaces(_triples(spark, sf_dir))
-    full_dim = _alias_dim_source(spark)
+    full_dim = spark.read.parquet(ensure_alias_dim_parquet(REPO))
     is_delta = F.pmod(F.abs(F.xxhash64("alias")), F.lit(5)) == F.lit(0)
     base = link_surfaces(spark, surfaces, alias_dim=full_dim.where(~is_delta))
     return relink_for_alias_delta(
@@ -1037,7 +1037,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitter profile of the edge-rollup shuffle key
     (subj_norm, pred, obj_norm) over the triples relation — the
-    pre-flight pass that motivates PipelineConfig.salt_partitions
+    pre-flight pass that motivates materialize.SALT_PARTITIONS
     (operators/materialize.materialize_edges salts exactly this rollup).
     rows_per_task is set low (64) so the salt_factor arithmetic is
     actually exercised at sf0.01 gate scale; production would pass

@@ -5,16 +5,20 @@ result equals a full recompute against the updated dictionary."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from tests.conftest import assert_pdf_equal
+from transner_spark.data.aliases import ensure_alias_dim_parquet
 from transner_spark.operators.annotate import explode_triples
 from transner_spark.operators.linking import (
-    _alias_dim_source,
     link_surfaces,
     node_surfaces,
     relink_for_alias_delta,
 )
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_alias_delta_relink_equals_full(spark, annotated):
@@ -24,7 +28,7 @@ def test_alias_delta_relink_equals_full(spark, annotated):
     against the full dictionary (which the kg_links gate already pins
     against SQL)."""
     surfaces = node_surfaces(explode_triples(annotated))
-    full_dim = _alias_dim_source(spark)
+    full_dim = spark.read.parquet(ensure_alias_dim_parquet(REPO))
     is_delta = F.pmod(F.abs(F.xxhash64("alias")), F.lit(5)) == F.lit(0)
     base_dim = full_dim.where(~is_delta)
     delta = full_dim.where(is_delta)
@@ -45,7 +49,7 @@ def test_alias_delta_relink_bounds_work(spark, annotated):
     empty), and a real delta re-links strictly fewer surfaces than a
     full recompute would."""
     surfaces = node_surfaces(explode_triples(annotated))
-    full_dim = _alias_dim_source(spark)
+    full_dim = spark.read.parquet(ensure_alias_dim_parquet(REPO))
     links = link_surfaces(spark, surfaces)
 
     # a delta alias over an alphabet no surface uses: zero affected

@@ -1,30 +1,36 @@
-"""Exactness of the fuzzy linker's Jaccard size filter.
+"""The linker's threshold boundary, checked against the independent
+DuckDB derivation (``oracles.kg_links_sql``).
 
-``link_surfaces`` prunes gram-join pairs with ``a_n >= t*m_n`` and
-``m_n >= t*a_n`` (minus a small slack) before the pair count. The
-filter must never drop a pair the ``score >= t`` filter keeps, so the
-Spark operator stays value-identical to the in-memory Python linker
-``kernels/linking.link_one`` at any threshold — including one whose
-products ``t*n`` are not exactly representable, and at pairs whose
-Jaccard equals the threshold exactly, where the size bound is tight."""
+``link_surfaces`` keeps a fuzzy pair when its Jaccard score is
+``>= threshold``. Each ``BOUNDARY`` surface's best alias scores the
+threshold exactly, so a linker that dropped pairs AT the threshold (a
+``>`` for the ``>=``) leaves that surface unlinked while the SQL links
+it. The Spark side links against the built-in dictionary
+(``kernels/linking.alias_index``); the SQL reads the committed
+dictionary parquet, the same rows."""
 
 from __future__ import annotations
 
+import os
 import random
 
+import duckdb
+import pandas as pd
 import pytest
 
 from transner_spark.config import PipelineConfig
-from transner_spark.data.aliases import build_alias_rows
-from transner_spark.kernels.linking import char_ngrams, link_one
+from transner_spark.data.aliases import build_alias_rows, ensure_alias_dim_parquet
+from transner_spark.kernels.linking import char_ngrams
 from transner_spark.kernels.triples import normalize_surface
-from transner_spark.operators.linking import link_surfaces
+from transner_spark.operators.linking import link_surfaces, node_surfaces
+from transner_spark.oracles import kg_links_sql
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TRIPLE_COLUMNS = ["subj_type", "subj_norm", "obj_type", "obj_norm"]
 
 # surface, alias, threshold: the alias's grams are a subset of the
 # surface's, and |alias grams| / |surface grams| == threshold exactly
-# (6/12, 14/25, 7/10), so the winning pair sits on the size bound; at
-# 0.56 the float product 0.56*25 rounds ABOVE 14, so the pair survives
-# only through the filter's slack
+# (6/12, 14/25, 7/10); 0.56 is not exactly representable as a double
 BOUNDARY = {
     0.5: ("a smit de a smit", "a smit"),
     0.56: ("abn amro s p a algiers abn amro s p a", "abn amro s p a"),
@@ -49,24 +55,30 @@ def _surfaces() -> list[str]:
 
 
 @pytest.mark.parametrize("threshold", sorted(BOUNDARY))
-def test_size_filter_matches_python_linker(spark, threshold):
-    surfaces = _surfaces()
+def test_boundary_links_match_sql_oracle(spark, threshold):
     surface, alias = BOUNDARY[threshold]
     m, a = char_ngrams(surface), char_ngrams(alias)
     assert a <= m and len(a) / len(m) == threshold
-    # on the size bound in float arithmetic (past it at 0.56)
-    assert threshold * len(m) >= len(a)
-    assert link_one(surface, threshold)[1:] == (threshold, "fuzzy")
 
-    df = spark.createDataFrame([(s,) for s in surfaces], "norm_key string")
+    tri = pd.DataFrame(
+        [("MISCELLANEOUS", s, "AGENT", "agent:user") for s in _surfaces()],
+        columns=TRIPLE_COLUMNS,
+    )
     got = sorted(
         tuple(r)
         for r in link_surfaces(
-            spark, df, PipelineConfig(link_jaccard_threshold=threshold)
+            spark,
+            node_surfaces(spark.createDataFrame(tri)),
+            PipelineConfig(link_jaccard_threshold=threshold),
         ).collect()
     )
-    want = sorted((s, *link_one(s, threshold)) for s in surfaces)
+    con = duckdb.connect()
+    con.register("tri", tri)
+    sql = kg_links_sql("tri", ensure_alias_dim_parquet(REPO), threshold)
+    want = sorted(tuple(r) for r in con.execute(sql).fetchall())
     assert got == want
+    # the boundary pair links in the oracle, at exactly the threshold
+    [row] = [r for r in want if r[0] == surface]
+    assert row[2:] == (threshold, "fuzzy")
     # the surface set is not vacuous at this threshold
-    methods = {r[3] for r in got}
-    assert methods == {"exact", "fuzzy", "none"}
+    assert {r[3] for r in want} == {"exact", "fuzzy", "none"}

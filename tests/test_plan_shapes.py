@@ -16,6 +16,19 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _spy(monkeypatch, frame_cls, method: str) -> list[str]:
+    """Record the plan of every frame ``method`` is called on."""
+    calls = []
+    original = getattr(frame_cls, method)
+
+    def spy(self, *args, **kwargs):
+        calls.append(_plan(self))
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, method, spy)
+    return calls
+
+
 def test_skew_profile_topk_not_global_sort(spark, tiny_df):
     from transner_spark.operators.skew import profile_skew
 
@@ -172,7 +185,7 @@ def test_link_surfaces_fuzzy_pass_runs_once_in_one_stage(spark):
 
 
 def test_link_surfaces_broadcasts_both_dim_joins(spark, monkeypatch):
-    """Both alias dims (exact and gram) reach every task as the
+    """Both alias lookups (exact and gram) reach every task as the
     in-memory index in the task closure, so the mention side never
     shuffles for either lookup: with auto-broadcast off the plan holds
     no join of any kind, and nothing is checkpointed."""
@@ -181,20 +194,35 @@ def test_link_surfaces_broadcasts_both_dim_joins(spark, monkeypatch):
     surfaces = spark.createDataFrame(
         [("mario rossi",), ("mario rosi",), ("zzqq xxvv",)], "norm_key string"
     )
-    checkpointed = []
-    frame_cls = type(surfaces)
-    local_checkpoint = frame_cls.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        checkpointed.append(_plan(self))
-        return local_checkpoint(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    checkpointed = _spy(monkeypatch, type(surfaces), "localCheckpoint")
     with _no_broadcast(spark):
         p = _plan(link_surfaces(spark, surfaces))
     assert checkpointed == []
     for op in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"):
         assert op not in p, p
+
+
+def test_link_plan_builds_without_a_spark_job(spark):
+    """Over the canonical dictionary, building the link plan runs no
+    Spark job and persists nothing: the index is built in Python from
+    the dictionary rows, not collected from Spark dims."""
+    from transner_spark.kernels.linking import alias_index
+    from transner_spark.operators.linking import link_surfaces
+
+    sc = spark.sparkContext
+    surfaces = spark.createDataFrame(
+        [("mario rossi",), ("mario rosi",)], "norm_key string"
+    )
+    persisted = sc._jsc.getPersistentRDDs().size()
+    alias_index.cache_clear()
+    group = "link_plan_builds_without_a_spark_job"
+    sc.setJobGroup(group, group)
+    try:
+        _plan(link_surfaces(spark, surfaces))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_neighbors_topk_window_is_partitioned(spark):
@@ -330,3 +358,110 @@ def test_walks_step_join_is_composite_key(spark):
     p = _plan(random_walks(edges, n_walks=1, n_steps=1))
     assert "CartesianProduct" not in p
     assert "collect_list" not in p  # no neighbor arrays anywhere
+
+
+def test_text_stats_scan_reads_only_doc_id_and_text(spark, tmp_path):
+    """Invariant 1: a per-document operator prunes the scan to
+    ``(doc_id, text)`` whatever else the corpus holds."""
+    import pandas as pd
+
+    from transner_spark.operators.textops import text_stats
+
+    path = str(tmp_path / "docs.parquet")
+    pd.DataFrame(
+        {"doc_id": [1, 2], "text": ["a b", "c d"], "lang": ["en", "it"], "n": [1, 2]}
+    ).to_parquet(path)
+    p = _plan(text_stats(spark.read.parquet(path)))
+    assert re.findall(r"ReadSchema: (\S+)", p) == ["struct<doc_id:bigint,text:string>"], p
+
+
+def test_quarantine_guard_runs_before_the_ner_udf(spark, tiny_df, tmp_path):
+    """Invariant 3: the 150-word guard is a Filter below the
+    ``mapInPandas`` NER pass (Catalyst cannot push a filter through the
+    opaque UDF, so annotate_turns places it there itself)."""
+    from transner_spark.operators.annotate import annotate_turns
+
+    path = str(tmp_path / "turns")
+    tiny_df.write.parquet(path)
+    lines = _plan(annotate_turns(spark.read.parquet(path))).splitlines()
+    udf = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+    guard = next(
+        i for i, line in enumerate(lines)
+        if "Filter" in line and "split(trim(text" in line
+    )
+    assert udf < guard, "\n".join(lines)
+
+
+def test_inline_annotation_folds_are_single_aggregates(spark):
+    """Invariant 4: the T10 replace fold and the CoNLL '$'-state machine
+    are each ONE ``aggregate`` expression over the entity / word array,
+    and the entity dictionary reaches the documents as the intended
+    1-row broadcast cross join."""
+    from transner_spark.operators.inline_annotation import inline_annotate, inline_conll
+
+    docs = spark.createDataFrame(
+        [(1, "x alpha beta y"), (2, "q beta z")], "doc_id long, text string"
+    )
+    ents = spark.createDataFrame(
+        [("alpha", "PER"), ("beta", "LOC")], "key string, ty string"
+    )
+    annotated = inline_annotate(docs, ents)
+    p = _plan(annotated)
+    assert p.count("aggregate(") == 1, p
+    assert "BroadcastNestedLoopJoin BuildRight, Cross" in p, p
+    assert _plan(inline_conll(annotated)).count("aggregate(") == 2
+
+
+def test_wikiner_windows_are_per_file(spark, tmp_path):
+    """Invariant 5: WikiNER's blank-line grouping runs as windows
+    partitioned by file (and article), never one global window."""
+    from transner_spark.operators.wikiner import read_wikiner_lines, wikiner_scan
+
+    path = tmp_path / "wikiner.txt"
+    path.write_text("a|B|O b|C|I-PER\n\nc|D|O\n")
+    p = _plan(wikiner_scan(read_wikiner_lines(spark, str(path))))
+    assert "Exchange hashpartitioning(file" in p, p
+    assert "SinglePartition" not in p and "No Partition Defined" not in p, p
+
+
+def test_barriers_materialize_reused_frames(spark, monkeypatch):
+    """Invariant 7: minhash dedup persists its signatures before the
+    band joins reuse them, and canonicalize localCheckpoints its map."""
+    from transner_spark.operators.canonicalize import canonicalize
+    from transner_spark.operators.dedup import dedup_minhash_lsh
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma epsilon")],
+        ["doc_id", "text"],
+    )
+    frame_cls = type(docs)
+    persisted = _spy(monkeypatch, frame_cls, "persist")
+    checkpointed = _spy(monkeypatch, frame_cls, "localCheckpoint")
+    dedup_minhash_lsh(docs)
+    # the per-shingle base hashes (read by all 16 affine transforms)
+    # and the signatures (read by every band join)
+    assert len(persisted) == 2 and checkpointed == []
+    links = spark.createDataFrame(
+        [("mario rosi", "person:mario_rossi", 0.6, "fuzzy")],
+        "norm_key string, entity_key string, score double, method string",
+    )
+    canonicalize(links)
+    assert len(persisted) == 2 and len(checkpointed) == 1
+
+
+def test_session_turns_on_aqe_skew_join(spark):
+    """Invariant 9: AQE and its skew-join split are on session-wide."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
+
+
+def test_fan_out_repartitions_only_under_parallelized_input(spark):
+    """Invariant 8: fan_out round-robins a frame with fewer partitions
+    than the default parallelism and leaves a wide-enough one alone."""
+    from transner_spark.functions.partitioning import fan_out
+
+    dp = spark.sparkContext.defaultParallelism
+    narrow = spark.range(10, numPartitions=1)
+    assert f"RoundRobinPartitioning({dp})" in _plan(fan_out(narrow))
+    wide = spark.range(10, numPartitions=dp)
+    assert fan_out(wide) is wide

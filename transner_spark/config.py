@@ -2,9 +2,10 @@
 
 Mirrors the reference service's confidence threshold (reference
 api.py:121) plus the options a caller of this pipeline sets: the optional
-date rule, the gazetteer file, the linking parameters and the Spark-scale
-knobs (salting, bucketing, batch sizes) that have no reference
-counterpart.
+date rule, the gazetteer file, the linking parameters and the edge
+bucket count, which has no reference counterpart. The salt factor
+(operators/materialize.SALT_PARTITIONS) and the Arrow batch size
+(functions/session.ARROW_BATCH_ROWS) are constants.
 """
 
 from __future__ import annotations
@@ -73,10 +74,3 @@ class PipelineConfig:
 
     # Scale knobs
     edge_buckets: int = 64          # subject-hash partition buckets for edges
-    salt_partitions: int = 16       # salting factor for hot-key joins
-    # maxRecordsPerBatch for UDF stages (session-wide). 4096 measures
-    # ~8% faster than 1024 on the text-only NER pass (amortized Arrow
-    # framing); pipelines carrying large binary media columns through
-    # mapInPandas should LOWER this — batch bytes scale with row size
-    # and this knob is Spark-session-global, not per-operator.
-    arrow_batch_rows: int = 4096

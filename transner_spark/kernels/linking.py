@@ -11,17 +11,18 @@ against the alias dictionary. ``link_norms`` is the one implementation:
 3. keep score ≥ threshold; pick the best by score desc, entity_key asc,
    alias asc → fuzzy, else (None, 0.0, none).
 
-The Spark operator (operators/linking.link_surfaces) calls it in one
-``mapInArrow`` pass over an index collected from the cached alias dims;
-``link_one`` and the single-node oracle (kernels/oracle.oracle_links)
-over the index built here. The DuckDB ``oracles.kg_links_sql``
-re-derives the same rules independently.
+``build_index`` is the one index builder: the Spark operator
+(operators/linking.link_surfaces) calls ``link_norms`` in one
+``mapInArrow`` pass over ``alias_index`` (or over an index built from
+an ``alias_dim`` override's rows), and ``link_one`` and the single-node
+oracle (kernels/oracle.oracle_links) over ``alias_index`` too. The
+DuckDB ``oracles.kg_links_sql`` re-derives the same rules independently.
 """
 
 from __future__ import annotations
 
 from collections import Counter
-from collections.abc import Collection, Iterable, Iterator
+from collections.abc import Iterable, Iterator
 from functools import lru_cache
 from typing import NamedTuple
 
@@ -52,17 +53,18 @@ class AliasIndex(NamedTuple):
     names: list[tuple[str, str]]
 
 
-def build_index(
-    exact: dict[str, str],
-    alias_grams: Iterable[tuple[str, str, Collection[str]]],
-    ngram: int,
-) -> AliasIndex:
-    """Index ``(entity_key, alias, distinct grams)`` per alias, next to
-    the given exact map."""
+def build_index(rows: Iterable[tuple[str, str, str]], ngram: int) -> AliasIndex:
+    """Index dictionary rows ``(entity_key, alias, norm)``: the exact
+    map keeps the min entity_key for each norm (duplicate normalized
+    aliases resolve to it), and each alias posts its ``char_ngrams``."""
+    exact: dict[str, str] = {}
     postings: dict[str, list[int]] = {}
     n_grams: list[int] = []
     names: list[tuple[str, str]] = []
-    for i, (entity_key, alias, grams) in enumerate(alias_grams):
+    for i, (entity_key, alias, norm) in enumerate(rows):
+        if norm not in exact or exact[norm] > entity_key:
+            exact[norm] = entity_key
+        grams = char_ngrams(norm, ngram)
         names.append((entity_key, alias))
         n_grams.append(len(grams))
         for gram in grams:
@@ -73,14 +75,8 @@ def build_index(
 @lru_cache(maxsize=None)
 def alias_index(ngram: int = 3) -> AliasIndex:
     """The index over the built-in alias dictionary (data/aliases)."""
-    rows = [(k, a, normalize_surface(a)) for k, a, _type in build_alias_rows()]
-    exact: dict[str, str] = {}
-    for entity_key, _alias, norm in rows:
-        # duplicate normalized aliases resolve to the min entity_key
-        if norm not in exact or exact[norm] > entity_key:
-            exact[norm] = entity_key
     return build_index(
-        exact, ((k, a, char_ngrams(norm, ngram)) for k, a, norm in rows), ngram
+        ((k, a, normalize_surface(a)) for k, a, _type in build_alias_rows()), ngram
     )
 
 

@@ -4,8 +4,9 @@ Every node is labeled with the lexicographically smallest member of its
 component, matching kernels/canonical.connected_components.
 
 - ``canonicalize``: the pipeline's path. The link graph is a star forest
-  BY CONSTRUCTION — ``link_surfaces`` keeps exactly one top-1 entity per
-  distinct surface (operators/linking.py row_number() == 1), so every
+  BY CONSTRUCTION — ``link_surfaces`` emits exactly one link row per
+  distinct surface (``kernels/linking.link_norms`` yields one top-1
+  result per norm), so every
   component is one entity plus its linked surfaces (or a singleton
   surface). The closed form is ``canon_id = min(entity_key, min linked
   surface)``: ONE tiny groupBy on entity_key plus one join back — no

@@ -10,7 +10,7 @@ describe), rebalance over-represented groups deterministically
 (`sample_quota` — data mixing), and score pathological self-repetition
 (`doc_repetition` — the Gopher duplicate-n-gram heuristics).
 
-Scale postures (each has a PLANS.md audit row):
+Scale postures:
 
 - `decontaminate`: the eval set is benchmark-sized (a dim), so its
   distinct gram vocabulary BROADCASTS; the 100 TB train side pays one

@@ -6,11 +6,12 @@ Scale design:
   the distinct is the pipeline's first shuffle and collapses the Zipfian
   mention distribution (the hot "mario rossi" key becomes ONE row), which
   is itself the skew mitigation for this stage;
-- the alias dictionary is a dimension table small enough for every
-  Python worker: the driver collects the two cached alias dims with
-  ``toArrow`` once per session into a ``kernels/linking.AliasIndex``,
-  which travels in the task closure (PySpark broadcasts a command over
-  1 MB by itself);
+- the alias dictionary is small enough for every Python worker: the
+  linker reads ``kernels/linking.alias_index``, built on the driver from
+  the dictionary rows with no Spark job (an ``alias_dim`` override is
+  collected once with ``toArrow`` into ``build_index``), and the index
+  travels in the task closure (PySpark broadcasts a command over 1 MB
+  by itself);
 - the surfaces are spread round-robin over defaultParallelism tasks,
   each linking its Arrow batches with ``kernels/linking.link_norms``,
   the one implementation of the rules (``link_one`` and the oracle call
@@ -18,12 +19,14 @@ Scale design:
 - normalization of alias surfaces (accent strip etc.) happens driver-side
   with the SAME kernel function mentions were normalized with
   (kernels/triples.normalize_surface), so keys agree bit-for-bit;
-- alias grams come from ``with_grams``, the Catalyst twin of
-  ``kernels/linking.char_ngrams``, which ``_affected_surfaces`` also uses.
+- mention grams and alias grams both come from
+  ``kernels/linking.char_ngrams``; ``with_grams``, its Catalyst twin,
+  serves ``_affected_surfaces``.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -31,7 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transner_spark.config import PipelineConfig
-from transner_spark.kernels.linking import AliasIndex, build_index, link_norms
+from transner_spark.data.aliases import ensure_alias_dim_parquet
+from transner_spark.kernels.linking import alias_index, build_index, link_norms
 from transner_spark.kernels.oracle import LINK_COLUMNS, STRUCTURAL_TYPES
 
 _LINK_SCHEMA = "norm_key string, entity_key string, score double, method string"
@@ -64,81 +68,26 @@ def node_surfaces(triples: DataFrame) -> DataFrame:
     return triples.select(F.explode(keys).alias("norm_key")).distinct()
 
 
-# single-session cache: the alias dictionary is static, so build each
-# dim DataFrame (persisted) and the linker's index once per
-# SparkSession. Scoped to the CURRENT session only — entries for a
-# different session are dropped so stopped sessions (and their JVM
-# state) are never pinned alive.
-_DIM_CACHE: dict = {"session": None, "dims": {}}
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _session_cached(spark: SparkSession, name: str, build):
-    if _DIM_CACHE["session"] is not spark:
-        _DIM_CACHE["session"] = spark
-        _DIM_CACHE["dims"] = {}
-    if name not in _DIM_CACHE["dims"]:
-        _DIM_CACHE["dims"][name] = build()
-    return _DIM_CACHE["dims"][name]
-
-
-def _alias_dim_source(spark: SparkSession) -> DataFrame:
-    """The alias-dictionary parquet (alias_id, entity_key, alias, type,
-    norm) — materialized once by ensure_alias_dim_parquet; the SAME file
-    the DuckDB kg_links oracle reads. Reading it beats re-running the
-    python normalize loop + createDataFrame on every fresh session
-    (measured ~1.1s → ~0.2s of per-session dim-build cost at sf0.1)."""
-    import os
-
-    from transner_spark.data.aliases import ensure_alias_dim_parquet
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    return spark.read.parquet(ensure_alias_dim_parquet(repo))
-
-
-def exact_alias_dim(
-    spark: SparkSession, alias_dim: DataFrame | None = None
-) -> DataFrame:
-    """norm_alias → min entity_key (duplicate normalized aliases resolve
-    to the lexicographically smallest entity_key, as kernels/linking).
-    ``alias_dim`` overrides the canonical dictionary parquet (the
-    dictionary is PLUGGABLE — e.g. a pre-refresh base for the alias-delta
-    maintenance path); overrides bypass the per-session dim cache."""
-
-    def build(src: DataFrame) -> DataFrame:
-        return src.groupBy(F.col("norm").alias("norm_alias")).agg(
-            F.min("entity_key").alias("entity_key")
-        )
-
-    if alias_dim is not None:
-        return build(alias_dim)
-    return _session_cached(
-        spark, "exact", lambda: build(_alias_dim_source(spark)).persist()
+def exact_alias_dim(spark: SparkSession) -> DataFrame:
+    """norm_alias → min entity_key over the canonical dictionary parquet
+    (the rule ``kernels/linking.build_index`` applies). A plain builder:
+    the linker does not read it; ``perfbench/run.setup`` counts it."""
+    return (
+        spark.read.parquet(ensure_alias_dim_parquet(_REPO))
+        .groupBy(F.col("norm").alias("norm_alias"))
+        .agg(F.min("entity_key").alias("entity_key"))
     )
 
 
-def alias_gram_dim(
-    spark: SparkSession, n: int, alias_dim: DataFrame | None = None
-) -> DataFrame:
-    """Inverted gram index over the alias dictionary: one row per alias
-    and gram, collected into the linker's index. Grams come from
-    with_grams — the Catalyst twin of kernels/linking.char_ngrams
-    (identical distinct gram sets). ``alias_dim`` as in exact_alias_dim."""
-
-    def build(src: DataFrame) -> DataFrame:
-        return with_grams(src, "norm", n).select(
-            "alias_id",
-            "entity_key",
-            "alias",
-            F.explode("grams").alias("gram"),
-        )
-
-    if alias_dim is not None:
-        return build(alias_dim)
-    return _session_cached(
-        spark, f"gram{n}", lambda: build(_alias_dim_source(spark)).persist()
-    )
+def alias_gram_dim(spark: SparkSession, n: int) -> DataFrame:
+    """One row per canonical alias and gram (``with_grams``). A plain
+    builder: the linker does not read it; ``perfbench/run.setup`` counts it."""
+    return with_grams(
+        spark.read.parquet(ensure_alias_dim_parquet(_REPO)), "norm", n
+    ).select("alias_id", "entity_key", "alias", F.explode("grams").alias("gram"))
 
 
 def with_grams(df: DataFrame, src_col: str, n: int) -> DataFrame:
@@ -162,29 +111,6 @@ def with_grams(df: DataFrame, src_col: str, n: int) -> DataFrame:
     )
 
 
-def _alias_index(
-    spark: SparkSession, n: int, alias_dim: DataFrame | None = None
-) -> AliasIndex:
-    """The linker's in-memory index, collected on the driver from the
-    two alias dims with ``toArrow`` — once per session for the canonical
-    dictionary, on every call for an ``alias_dim`` override."""
-
-    def build() -> AliasIndex:
-        exact = exact_alias_dim(spark, alias_dim).toArrow().to_pydict()
-        grams = alias_gram_dim(spark, n, alias_dim).toArrow().to_pydict()
-        by_alias: dict[int, tuple[str, str, list[str]]] = {}
-        for alias_id, key, alias, gram in zip(
-            grams["alias_id"], grams["entity_key"], grams["alias"], grams["gram"]
-        ):
-            by_alias.setdefault(alias_id, (key, alias, []))[2].append(gram)
-        exact_map = dict(zip(exact["norm_alias"], exact["entity_key"]))
-        return build_index(exact_map, by_alias.values(), n)
-
-    if alias_dim is not None:
-        return build()
-    return _session_cached(spark, f"index{n}", build)
-
-
 def link_surfaces(
     spark: SparkSession,
     surfaces: DataFrame,
@@ -192,12 +118,18 @@ def link_surfaces(
     alias_dim: DataFrame | None = None,
 ) -> DataFrame:
     """surfaces(norm_key) → links(norm_key, entity_key, score, method).
-    ``alias_dim`` overrides the canonical dictionary (see
-    exact_alias_dim) — the plug point the alias-delta maintenance path
-    (``relink_for_alias_delta``) uses to link against a base/updated
-    dictionary."""
+    ``alias_dim`` (alias_id, entity_key, alias, type, norm) overrides
+    the canonical dictionary — the plug point the alias-delta
+    maintenance path (``relink_for_alias_delta``) uses to link against
+    a base/updated dictionary; its rows are collected once per call."""
     cfg = cfg or PipelineConfig()
-    index = _alias_index(spark, cfg.link_ngram, alias_dim)
+    if alias_dim is None:
+        index = alias_index(cfg.link_ngram)
+    else:
+        rows = alias_dim.select("entity_key", "alias", "norm").toArrow().to_pydict()
+        index = build_index(
+            zip(rows["entity_key"], rows["alias"], rows["norm"]), cfg.link_ngram
+        )
     threshold = cfg.link_jaccard_threshold
 
     def link(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

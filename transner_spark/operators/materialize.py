@@ -26,6 +26,10 @@ from pyspark.sql import functions as F
 from transner_spark.config import PipelineConfig
 from transner_spark.kernels.oracle import STRUCTURAL_TYPES
 
+# salting factor of the rollup's partial phase: a hot edge spreads over
+# this many reducers (size it with operators/skew.profile_skew)
+SALT_PARTITIONS = 16
+
 
 def _resolve(triples: DataFrame, canon: DataFrame, side: str) -> DataFrame:
     """Resolve one side (subj/obj) through the canon map. Structural nodes
@@ -57,7 +61,7 @@ def materialize_edges(
     cfg = cfg or PipelineConfig()
     resolved = _resolve(triples, canon, "subj")
     resolved = _resolve(resolved, canon, "obj")
-    salt = F.pmod(F.hash("subj_id", "obj_id", "ts"), F.lit(cfg.salt_partitions))
+    salt = F.pmod(F.hash("subj_id", "obj_id", "ts"), F.lit(SALT_PARTITIONS))
     bucket = F.pmod(F.hash("subj_id"), F.lit(cfg.edge_buckets))
     return (
         resolved.withColumn("salt", salt)

@@ -5,7 +5,7 @@ the pre-flight tooling a 100 TB KG build runs BEFORE committing to a
 salt factor. Every expensive shuffle in this repo keys on Zipfian data
 — the edge rollup groups by ``(subj_id, pred, obj_id)``
 (operators/materialize.materialize_edges, salted with
-``cfg.salt_partitions``), the
+``SALT_PARTITIONS``), the
 linking join keys on normalized surfaces, and ``graph_two_hop`` guards
 hub middles with ``max_mid_degree``. All three guards take a numeric
 knob whose right value depends on the actual key histogram; this module
@@ -23,7 +23,7 @@ Output semantics
 - ``salt_factor`` — ceil(cnt / rows_per_task): the minimum salt fan-out
                     that caps this key's per-task rows at the target —
                     feed max(salt_factor) straight into
-                    ``PipelineConfig.salt_partitions``
+                    ``operators/materialize.SALT_PARTITIONS``
 
 Scale shape (the 100 TB contract)
 ---------------------------------
