@@ -1,4 +1,4 @@
-.PHONY: dist test bench clean
+.PHONY: dist test bench clean loc
 
 # `make dist [DIST=<dir>]` writes <dir>/transner_spark.zip: the package's
 # .py files plus the gazetteer fixtures its workers read
@@ -20,6 +20,10 @@ test:
 
 bench:
 	python bench.py
+
+# non-test lines of code: the package, the scripts and the two entry files
+loc:
+	@cat $$(find transner_spark -name '*.py') scripts/*.py bench.py __spark_entry__.py | wc -l
 
 clean:
 	rm -rf dist

@@ -613,12 +613,14 @@ row). Provenance ranks citations inside (edge, salt) frames first, so
 the hot edge never materializes an edge-sized window frame."""
 
 
-def _bucketed_section(spark, kg: dict, edges_path: str, timed, intro: str) -> str:
+def _bucketed_section(spark, kg: dict, run, timed, intro: str) -> str:
     import re
 
     from pyspark.sql import functions as F
 
     edges = kg["edges"]
+    edges_path = run.catalog.path("edges")
+    n = run.recorded_buckets()
     # hot subject for the point-lookup workload
     hot = (
         edges.groupBy("subj_id")
@@ -664,7 +666,8 @@ def _bucketed_section(spark, kg: dict, edges_path: str, timed, intro: str) -> st
 
 Both sides read the same files: the committed `edges` stage, a
 Spark-native bucketed table (`write_edges_bucketed`:
-`bucketBy(64, subj_id) + sortBy`, session catalog). The plain side reads
+`bucketBy({n}, subj_id) + sortBy`, session catalog; {n} is the bucket
+count in the run's `edges` commit record). The plain side reads
 the directory by path, so it carries no bucket spec; the bucketed side
 reads the catalog table. Workloads: self-equi-join, groupBy rollup,
 and hot-subject point lookup on `subj_id` — the access patterns two-hop,
@@ -679,16 +682,15 @@ filter-only lookup keeps the prunable bucketed scan.
 
 The bucketed layout runs the join and agg workloads with **zero**
 shuffle Exchanges — the write-time shuffle is amortized across every
-read — and the point lookup reads **one bucket of 64** (bucket pruning;
+read — and the point lookup reads **one bucket of {n}** (bucket pruning;
 the plain read scans every file). Plan pins:
-tests/test_plan_shapes.py::test_bucketed_edges_*. At sf0.1 the edge
-table is dim-sized: a bucketed read runs one task per bucket (64 on a
-few cores), so its wall is higher than the AQE-coalesced plain reads.
-The Exchange and SelectedBucketsCount figures are the scale-relevant
-facts — each
-eliminated Exchange is a full table shuffle, and a pruned point lookup
-touches 1/64th of the KG's files, at 10^12-turn scale the difference
-between a serving query and a table scan."""
+tests/test_plan_shapes.py::test_bucketed_edges_*. The bucket count is
+the writing session's core count, so a bucketed read runs one task per
+bucket, {n} here. The Exchange and SelectedBucketsCount figures are the
+scale-relevant facts — each eliminated Exchange is a full table
+shuffle, and a pruned point lookup touches 1/{n} of the KG's files, at
+10^12-turn scale the difference between a serving query and a table
+scan."""
 
 
 def _skew_join_section(spark, cpus: int, timed, proto: str) -> str:
@@ -836,9 +838,7 @@ def run_sections(sf_dir: str, cpus: int) -> None:
             "TWO_HOP_GUARD": lambda: _two_hop_section(kg, timed, intro),
             "GRAPH_ANALYTICS": lambda: _graph_section(kg, timed, intro),
             "WALKS_PROVENANCE": lambda: _walks_section(kg, timed, intro),
-            "BUCKETED_EDGES": lambda: _bucketed_section(
-                spark, kg, run.catalog.path("edges"), timed, intro
-            ),
+            "BUCKETED_EDGES": lambda: _bucketed_section(spark, kg, run, timed, intro),
             "SKEW_JOIN": lambda: _skew_join_section(spark, cpus, timed, proto),
         }
         for name, build in sections.items():

@@ -1,10 +1,12 @@
-"""The committed edge table is the one bucketed layout: whatever the
-write's task count, each bucket is one file holding only the six edge
-columns, and subj_id reads plan no shuffle — also once the catalog entry
-is lost and the run resumes."""
+"""The committed edge table is the one bucketed layout: one bucket per
+core of the session, its count kept in the ``edges`` commit record;
+whatever the shuffle width, each bucket is one file holding only the six
+edge columns, and subj_id reads plan no shuffle — also once the catalog
+entry is lost and the run resumes with the recorded count."""
 
 from __future__ import annotations
 
+import json
 import os
 import re
 from contextlib import contextmanager
@@ -14,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from transner_spark.plans.pipeline import PipelineRun
+from transner_spark.sources.catalog import METRICS, read_records
 
 # Spark's bucketed writer names files part-NNNNN-<uuid>_BBBBB.c000...
 _BUCKET_FILE = re.compile(r"part-\d+-.*_(\d{5})\.c\d+.*\.parquet$")
@@ -34,6 +37,10 @@ def _confs(spark, confs: dict[str, str]):
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _edges_record(workdir: str) -> dict:
+    return [r for r in read_records(workdir) if r["stage"] == "edges"][-1]
 
 
 @pytest.mark.parametrize("tasks", [4, 6, 16])
@@ -63,9 +70,12 @@ def test_edges_commit_one_file_per_bucket(spark, tiny_df, tmp_path, tasks):
                     assert pq.read_schema(os.path.join(root, f)).names == EDGE_COLS
             assert buckets, "no edge file written"
             assert len(buckets) == len(set(buckets.values())), sorted(buckets.values())
+            # the record keeps the count the write chose: one per core
+            n = _edges_record(workdir)["buckets"]
+            assert n == spark.sparkContext.defaultParallelism
+            assert all(b < n for b in buckets.values()), buckets
             # each file holds exactly the subjects of the bucket its name
             # records: Spark's bucket id is pmod(hash(subj_id), n)
-            n = run.cfg.edge_buckets
             hashed = (
                 spark.read.parquet(path)
                 .select(
@@ -93,3 +103,41 @@ def test_edges_commit_one_file_per_bucket(spark, tiny_df, tmp_path, tasks):
             assert again["edges"].count() == n_edges
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {run.edges_table}")
+
+
+def test_resume_reattaches_under_a_quoted_workdir(spark, tiny_df, tmp_path):
+    """A workdir whose path holds a quote resumes its edges stage: the
+    re-attach escapes the path it splices into the table's LOCATION."""
+    workdir = str(tmp_path / "o'brien" / "kg")
+    run = PipelineRun(spark, workdir)
+    try:
+        n_edges = run.run(tiny_df)["edges"].count()
+        spark.sql(f"DROP TABLE {run.edges_table}")
+        rerun = PipelineRun(spark, workdir)
+        again = rerun.run(tiny_df)
+        assert rerun.stages_run == []
+        assert again["edges"].count() == n_edges
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {run.edges_table}")
+
+
+def test_resume_without_a_recorded_count_fails_loud(spark, tiny_df, tmp_path):
+    """An edges directory whose commit record carries no bucket count
+    (written before counts were recorded) is not re-attached with a
+    guessed count: resume raises and names the directory to delete."""
+    workdir = str(tmp_path / "kg")
+    run = PipelineRun(spark, workdir)
+    try:
+        run.run(tiny_df)
+        metrics = os.path.join(workdir, METRICS)
+        records = read_records(workdir)
+        with open(metrics, "w") as fh:
+            for r in records:
+                r.pop("buckets", None)
+                fh.write(json.dumps(r, sort_keys=True) + "\n")
+        spark.sql(f"DROP TABLE {run.edges_table}")
+        with pytest.raises(RuntimeError, match="delete that directory") as err:
+            PipelineRun(spark, workdir).run(tiny_df)
+        assert run.catalog.path("edges") in str(err.value)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {run.edges_table}")

@@ -82,11 +82,11 @@ def test_stage_commit_launches_no_bookkeeping_job(spark, tiny_df, tmp_path, monk
     calls = []
     commit = PipelineRun._commit
 
-    def in_group(self, stage, t0):
+    def in_group(self, stage, t0, **layout):
         calls.append(stage)
         sc.setJobGroup(group, "commit")
         try:
-            return commit(self, stage, t0)
+            return commit(self, stage, t0, **layout)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
 

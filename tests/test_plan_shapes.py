@@ -57,7 +57,9 @@ def test_dedup_incremental_no_cartesian(spark):
 def test_edges_rollup_is_salted_two_phase(spark, tiny_df):
     """materialize_edges' salted path: the pre-aggregate must include
     the salt column so the hot-key rollup happens in two phases, and the
-    bucket clustering of the final phase must add no third shuffle."""
+    final phase is one subj_id repartition into defaultParallelism
+    buckets (a width AQE does not coalesce) that adds no third
+    shuffle."""
     from transner_spark.operators.annotate import annotate_turns, explode_triples
     from transner_spark.operators.canonicalize import canonicalize
     from transner_spark.operators.linking import link_surfaces, node_surfaces
@@ -69,13 +71,16 @@ def test_edges_rollup_is_salted_two_phase(spark, tiny_df):
     assert "salt" in p
     assert "CartesianProduct" not in p
     assert p.count("Exchange hashpartitioning") == 2, p
+    dp = spark.sparkContext.defaultParallelism
+    final = rf"Exchange hashpartitioning\(subj_id#\d+, {dp}\), REPARTITION_BY_NUM"
+    assert re.search(final, p), p
 
 
 @pytest.fixture()
 def bucketed_edges(spark, tmp_path_factory):
     """A small edge table written twice: as a plain parquet directory
-    (negative control) and as a catalog-registered bucketed table."""
-    from transner_spark.config import PipelineConfig
+    (negative control) and as a catalog-registered bucketed table, with
+    the bucket count the write chose."""
     from transner_spark.operators.materialize import write_edges_bucketed
 
     root = tmp_path_factory.mktemp("bucketed_edges")
@@ -85,10 +90,10 @@ def bucketed_edges(spark, tmp_path_factory):
     )
     plain = str(root / "plain")
     edges.write.mode("overwrite").parquet(plain)
-    cfg = PipelineConfig(edge_buckets=8)
     spark.sql("DROP TABLE IF EXISTS edges_bucketed_t")
-    write_edges_bucketed(edges, "edges_bucketed_t", str(root / "bucketed"), cfg)
-    yield plain, "edges_bucketed_t"
+    n = write_edges_bucketed(edges, "edges_bucketed_t", str(root / "bucketed"))
+    assert n == spark.sparkContext.defaultParallelism
+    yield plain, "edges_bucketed_t", n
     spark.sql("DROP TABLE IF EXISTS edges_bucketed_t")
 
 
@@ -115,7 +120,7 @@ def test_bucketed_edges_self_join_skips_shuffle(spark, bucketed_edges):
     shuffle Exchanges — while the identical plain-parquet join shuffles
     both sides. (two-hop / edge-diff / incremental-merge all join on
     this key.)"""
-    plain, table = bucketed_edges
+    plain, table, _n = bucketed_edges
     with _no_broadcast(spark):
         b = spark.table(table)
         pb = _plan(b.alias("a").join(b.alias("b"), "subj_id"))
@@ -130,7 +135,7 @@ def test_bucketed_edges_agg_skips_shuffle(spark, bucketed_edges):
     """groupBy(subj_id) over the bucketed table satisfies the aggregate's
     required distribution from the scan — no Exchange (entity rollups /
     degree counts read for free)."""
-    plain, table = bucketed_edges
+    plain, table, _n = bucketed_edges
     agg = spark.table(table).groupBy("subj_id").agg(F.sum("weight"))
     pb = _plan(agg)
     assert "Exchange hashpartitioning" not in pb, pb
@@ -147,7 +152,7 @@ def test_bucketed_edges_point_lookup_prunes_buckets(spark, bucketed_edges):
     it on, Spark may drop the bucketed layout for filter-only scans to
     regain split parallelism, which forfeits pruning; a serving-side
     point-lookup path wants the pruned scan."""
-    plain, table = bucketed_edges
+    plain, table, n = bucketed_edges
     old = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try:
@@ -157,7 +162,7 @@ def test_bucketed_edges_point_lookup_prunes_buckets(spark, bucketed_edges):
         spark.conf.set(
             "spark.sql.sources.bucketing.autoBucketedScan.enabled", old
         )
-    assert "SelectedBucketsCount: 1 out of 8" in pb, pb
+    assert f"SelectedBucketsCount: 1 out of {n}" in pb, pb
     assert "SelectedBucketsCount" not in pp  # plain layout cannot prune
 
 
@@ -271,13 +276,11 @@ def test_bucketed_reattach_after_catalog_loss(spark, tmp_path):
     and the call is idempotent."""
     import datetime
 
-    from transner_spark.config import PipelineConfig
     from transner_spark.operators.materialize import (
         ensure_edges_bucketed_table,
         write_edges_bucketed,
     )
 
-    cfg = PipelineConfig(edge_buckets=8)
     ts0 = datetime.datetime(2024, 1, 1)
     edges = spark.createDataFrame(
         [
@@ -289,20 +292,20 @@ def test_bucketed_reattach_after_catalog_loss(spark, tmp_path):
     )
     path = str(tmp_path / "edges")
     spark.sql("DROP TABLE IF EXISTS edges_reattach_t")
-    write_edges_bucketed(edges, "edges_reattach_t", path, cfg)
+    n = write_edges_bucketed(edges, "edges_reattach_t", path)
     vals = sorted(map(tuple, spark.table("edges_reattach_t").collect()))
 
     # simulate the fresh session: catalog entry gone, files remain
     # (saveAsTable with an explicit path is EXTERNAL — drop keeps files)
     spark.sql("DROP TABLE edges_reattach_t")
-    ensure_edges_bucketed_table(spark, "edges_reattach_t", path, cfg)
+    ensure_edges_bucketed_table(spark, "edges_reattach_t", path, n)
     t = spark.table("edges_reattach_t")
     assert sorted(map(tuple, t.collect())) == vals
     with _no_broadcast(spark):
         pb = _plan(t.alias("a").join(t.alias("b"), "subj_id"))
     assert "Exchange hashpartitioning" not in pb, pb
 
-    ensure_edges_bucketed_table(spark, "edges_reattach_t", path, cfg)
+    ensure_edges_bucketed_table(spark, "edges_reattach_t", path, n)
     assert sorted(
         map(tuple, spark.table("edges_reattach_t").collect())
     ) == vals

@@ -2,10 +2,11 @@
 
 Mirrors the reference service's confidence threshold (reference
 api.py:121) plus the options a caller of this pipeline sets: the optional
-date rule, the gazetteer file, the linking parameters and the edge
-bucket count, which has no reference counterpart. The salt factor
-(operators/materialize.SALT_PARTITIONS) and the Arrow batch size
-(functions/session.ARROW_BATCH_ROWS) are constants.
+date rule, the gazetteer file and the linking parameters. The salt
+factor (operators/materialize.SALT_PARTITIONS) and the Arrow batch size
+(functions/session.ARROW_BATCH_ROWS) are constants; the edge table's
+bucket count is the session's default parallelism
+(operators/materialize.bucket_count), recorded in its commit record.
 """
 
 from __future__ import annotations
@@ -71,6 +72,3 @@ class PipelineConfig:
     # Linking
     link_jaccard_threshold: float = 0.5
     link_ngram: int = 3
-
-    # Scale knobs
-    edge_buckets: int = 64          # subject-hash partition buckets for edges

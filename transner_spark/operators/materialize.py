@@ -9,13 +9,15 @@ Skew strategy (north rule: "partitioned by subject-hash with salting"):
   (subj, pred, obj, salt) groups first — bounding any single reducer's
   share of a hot edge to 1/salt — then the tiny partial set
   re-aggregates;
-- the final phase is hash-partitioned on
-  ``pmod(hash(subj_id), edge_buckets)`` — Spark's own bucket id for
-  ``bucketBy(edge_buckets, subj_id)`` — so each bucket lands in one
-  task and ``write_edges_bucketed`` writes one file per bucket with no
-  Exchange of its own. The bucket id is not a column: the table's bucket
-  spec and each file's name record it. Readers that filter on subject
-  read one bucket.
+- the final phase is ``repartition(n, subj_id)``, n =
+  ``bucket_count(spark)``, the session's ``defaultParallelism``. Spark
+  computes that partition id as ``pmod(hash(subj_id), n)``, the same
+  value as the bucket id of ``bucketBy(n, subj_id)``, so task i holds
+  exactly bucket i, every core writes, and ``write_edges_bucketed``
+  writes one file per bucket with no Exchange of its own. The bucket id
+  is not a column: the table's bucket spec, each file's name and the
+  ``edges`` commit record hold it. Readers that filter on subject read
+  one bucket.
 """
 
 from __future__ import annotations
@@ -23,12 +25,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from transner_spark.config import PipelineConfig
 from transner_spark.kernels.oracle import STRUCTURAL_TYPES
 
 # salting factor of the rollup's partial phase: a hot edge spreads over
 # this many reducers (size it with operators/skew.profile_skew)
 SALT_PARTITIONS = 16
+
+
+def bucket_count(spark) -> int:
+    """The edge layout's bucket count: the session's
+    ``defaultParallelism``, so the bucketed write runs one task per core
+    and a bucketed read one task per core (``link_surfaces`` uses the
+    same width)."""
+    return spark.sparkContext.defaultParallelism
 
 
 def _resolve(triples: DataFrame, canon: DataFrame, side: str) -> DataFrame:
@@ -48,21 +57,15 @@ def _resolve(triples: DataFrame, canon: DataFrame, side: str) -> DataFrame:
     ).drop(f"{side}_node", f"{side}_canon")
 
 
-def materialize_edges(
-    triples: DataFrame,
-    canon: DataFrame,
-    cfg: PipelineConfig | None = None,
-) -> DataFrame:
+def materialize_edges(triples: DataFrame, canon: DataFrame) -> DataFrame:
     """triples + canon → edges(subj_id, pred, obj_id, weight, first_ts,
-    last_ts). The final phase shuffles on the bucket id alone with no
-    partition count, so AQE may still coalesce: grouping on (bucket,
-    edge key) needs no second Exchange, and every bucket lands in
-    exactly one task for any task count."""
-    cfg = cfg or PipelineConfig()
+    last_ts). The final phase is ``repartition(bucket_count, subj_id)``:
+    a width set by count, which AQE does not coalesce, so task i holds
+    exactly bucket i, and grouping on the edge key needs no second
+    Exchange."""
     resolved = _resolve(triples, canon, "subj")
     resolved = _resolve(resolved, canon, "obj")
     salt = F.pmod(F.hash("subj_id", "obj_id", "ts"), F.lit(SALT_PARTITIONS))
-    bucket = F.pmod(F.hash("subj_id"), F.lit(cfg.edge_buckets))
     return (
         resolved.withColumn("salt", salt)
         .groupBy("subj_id", "pred", "obj_id", "salt")
@@ -71,15 +74,13 @@ def materialize_edges(
             F.min("ts").alias("first_ts"),
             F.max("ts").alias("last_ts"),
         )
-        .withColumn("_bucket", bucket)
-        .repartition("_bucket")
-        .groupBy("_bucket", "subj_id", "pred", "obj_id")
+        .repartition(bucket_count(triples.sparkSession), "subj_id")
+        .groupBy("subj_id", "pred", "obj_id")
         .agg(
             F.sum("weight").alias("weight"),
             F.min("first_ts").alias("first_ts"),
             F.max("last_ts").alias("last_ts"),
         )
-        .drop("_bucket")
     )
 
 
@@ -155,7 +156,6 @@ def edges_asof(
     triples: DataFrame,
     canon: DataFrame,
     asof_epoch: int | None = None,
-    cfg: PipelineConfig | None = None,
 ) -> DataFrame:
     """Temporal KG snapshot: the edge table as it stood at ``asof_epoch``
     (unix seconds) — triples with ``ts`` past the cutoff never enter the
@@ -182,7 +182,7 @@ def edges_asof(
         )
     else:
         filtered = triples.where(ts_epoch <= F.lit(int(asof_epoch)))
-    return materialize_edges(filtered, canon, cfg=cfg)
+    return materialize_edges(filtered, canon)
 
 
 def edges_diff(edges_old: DataFrame, edges_new: DataFrame) -> DataFrame:
@@ -223,15 +223,11 @@ def edges_diff(edges_old: DataFrame, edges_new: DataFrame) -> DataFrame:
     )
 
 
-def write_edges_bucketed(
-    edges: DataFrame,
-    table: str,
-    path: str,
-    cfg: PipelineConfig | None = None,
-) -> None:
+def write_edges_bucketed(edges: DataFrame, table: str, path: str) -> int:
     """Write the one edge layout: a Spark-native BUCKETED table
-    (``bucketBy(edge_buckets, subj_id)`` + ``sortBy``) registered in the
-    session catalog at ``path``.
+    (``bucketBy(n, subj_id)`` + ``sortBy``, n = ``bucket_count``)
+    registered in the session catalog at ``path``. Returns n, which the
+    caller records so a resumed run can re-attach the table.
 
     A plain parquet directory carries no partitioning metadata, so every
     consumer that joins or aggregates on ``subj_id`` (two-hop self-joins,
@@ -241,37 +237,33 @@ def write_edges_bucketed(
     point lookup reads one bucket (tests/test_plan_shapes.py pins both).
     On Iceberg the same layout is the ``bucket(N, subj_id)`` partition
     transform (SURVEY.md §1.2). ``materialize_edges`` already partitions
-    its final phase on the bucket id, so the write adds no shuffle and
+    its final phase into the n buckets, so the write adds no shuffle and
     produces one file per bucket. ``sortBy(subj_id)`` lets single-file
     buckets skip the join's Sort."""
-    cfg = cfg or PipelineConfig()
+    n = bucket_count(edges.sparkSession)
     (
         edges.write.mode("overwrite")
         .format("parquet")
-        .bucketBy(cfg.edge_buckets, "subj_id")
+        .bucketBy(n, "subj_id")
         .sortBy("subj_id")
         .option("path", path)
         .saveAsTable(table)
     )
+    return n
 
 
-def ensure_edges_bucketed_table(
-    spark,
-    table: str,
-    path: str,
-    cfg: PipelineConfig | None = None,
-) -> None:
+def ensure_edges_bucketed_table(spark, table: str, path: str, buckets: int) -> None:
     """Idempotently (re)register the bucketed edge table over an
-    ALREADY-WRITTEN edge path. The bucket spec is catalog METADATA
-    while the files are durable: a resumed run or a fresh session that
-    skips the edge write would otherwise read the path as plain
-    parquet and silently lose the zero-Exchange property the layout
-    exists for. Spark's bucketed writer encodes each file's bucket id
-    in its name, so an external ``CLUSTERED BY`` table declared over
-    the same directory re-binds the distribution exactly (the same
-    re-attach a real warehouse gets for free from a persistent
+    ALREADY-WRITTEN edge path with its recorded bucket count. The bucket
+    spec is catalog METADATA while the files are durable: a resumed run
+    or a fresh session that skips the edge write would otherwise read
+    the path as plain parquet and silently lose the zero-Exchange
+    property the layout exists for. Spark's bucketed writer encodes each
+    file's bucket id in its name, so an external ``CLUSTERED BY`` table
+    declared over the same directory re-binds the distribution exactly
+    (the same re-attach a real warehouse gets for free from a persistent
     metastore / Iceberg metadata)."""
-    cfg = cfg or PipelineConfig()
+    location = path.replace("\\", "\\\\").replace("'", "\\'")
     spark.sql(
         f"""
         CREATE TABLE IF NOT EXISTS {table} (
@@ -280,8 +272,8 @@ def ensure_edges_bucketed_table(
         )
         USING PARQUET
         CLUSTERED BY (subj_id) SORTED BY (subj_id)
-        INTO {cfg.edge_buckets} BUCKETS
-        LOCATION '{path}'
+        INTO {buckets} BUCKETS
+        LOCATION '{location}'
         """
     )
 
@@ -292,67 +284,10 @@ def entity_profiles(triples: DataFrame, canon: DataFrame) -> DataFrame:
     object), across how many distinct predicates, over what time span,
     and what is its most common surface form.
 
-    Shape at scale: resolve through the broadcast canon map (as in
-    materialize_edges), then two key-partitioned aggregations — one
-    groupBy entity for the counts/bounds (count-distinct via a two-phase
-    (entity, pred) pre-aggregate, never a distinct-in-agg state
-    explosion), and one (entity, surface) count topped by a rank window
-    PARTITIONED by entity (per-entity frames). Deterministic surface
-    tiebreak (count desc, surface asc) so the gate hash is stable."""
-    from pyspark.sql import Window
-
-    sides = _profile_sides(triples, canon)
-    per_pred = sides.groupBy("entity_id", "pred").agg(
-        F.sum("is_subj").alias("n_subj"),
-        F.sum(1 - F.col("is_subj")).alias("n_obj"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-    )
-    stats = per_pred.groupBy("entity_id").agg(
-        F.sum("n_subj").cast("long").alias("n_subj"),
-        F.sum("n_obj").cast("long").alias("n_obj"),
-        F.count(F.lit(1)).cast("long").alias("n_preds"),
-        F.min("first_ts").alias("first_ts"),
-        F.max("last_ts").alias("last_ts"),
-    )
-    top = (
-        sides.groupBy("entity_id", "surface")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("entity_id").orderBy(
-                    F.col("n").desc(), F.col("surface")
-                )
-            ),
-        )
-        .where(F.col("rk") == 1)
-        .select("entity_id", F.col("surface").alias("top_surface"))
-    )
-    return stats.join(top, "entity_id")
-
-
-def _profile_sides(triples: DataFrame, canon: DataFrame) -> DataFrame:
-    """Both triple sides resolved and unioned into (entity_id, surface,
-    pred, ts, is_subj) rows — shared by the one-shot serving view and
-    the incremental partials."""
-    resolved = _resolve(triples, canon, "subj")
-    resolved = _resolve(resolved, canon, "obj")
-    return resolved.select(
-        F.col("subj_id").alias("entity_id"),
-        F.col("subj_value").alias("surface"),
-        "pred",
-        "ts",
-        F.lit(1).alias("is_subj"),
-    ).unionByName(
-        resolved.select(
-            F.col("obj_id").alias("entity_id"),
-            F.col("obj_value").alias("surface"),
-            "pred",
-            "ts",
-            F.lit(0).alias("is_subj"),
-        )
-    )
+    The one-shot view is the incremental path run over one batch:
+    ``profiles_from_partials(entity_profile_partials(...))``, so the two
+    cannot drift."""
+    return profiles_from_partials(entity_profile_partials(triples, canon))
 
 
 def entity_profile_partials(triples: DataFrame, canon: DataFrame) -> DataFrame:
@@ -370,11 +305,29 @@ def entity_profile_partials(triples: DataFrame, canon: DataFrame) -> DataFrame:
     of state keyed by (entity, pred, surface) — bounded by the observed
     vocabulary, not the corpus.
 
-    Shape at scale: broadcast canon resolve + ONE hash aggregate on the
-    partial key (map-side partials bound hot entities)."""
+    Shape at scale: broadcast canon resolve of both triple sides, unioned
+    into (entity_id, surface, pred, ts, is_subj) rows, + ONE hash
+    aggregate on the partial key (map-side partials bound hot
+    entities)."""
+    resolved = _resolve(triples, canon, "subj")
+    resolved = _resolve(resolved, canon, "obj")
+    sides = resolved.select(
+        F.col("subj_id").alias("entity_id"),
+        F.col("subj_value").alias("surface"),
+        "pred",
+        "ts",
+        F.lit(1).alias("is_subj"),
+    ).unionByName(
+        resolved.select(
+            F.col("obj_id").alias("entity_id"),
+            F.col("obj_value").alias("surface"),
+            "pred",
+            "ts",
+            F.lit(0).alias("is_subj"),
+        )
+    )
     return (
-        _profile_sides(triples, canon)
-        .groupBy("entity_id", "pred", "surface")
+        sides.groupBy("entity_id", "pred", "surface")
         .agg(
             F.sum("is_subj").cast("long").alias("n_subj"),
             F.sum(1 - F.col("is_subj")).cast("long").alias("n_obj"),
@@ -407,9 +360,10 @@ def profiles_from_partials(partials: DataFrame) -> DataFrame:
     maintained partials: per-(entity,pred) rollup → entity stats with
     pred-distinct as a plain count, and the modal surface from the
     per-(entity,surface) counts with the same deterministic
-    (count desc, surface asc) tiebreak. Two key-partitioned aggregates +
-    one entity-partitioned rank window — identical plan shape to the
-    one-shot view, but over vocabulary-sized state."""
+    (count desc, surface asc) tiebreak, so the gate hash is stable. Two
+    key-partitioned aggregates (pred-distinct never becomes a
+    distinct-in-agg state) + one entity-partitioned rank window, over
+    vocabulary-sized state."""
     from pyspark.sql import Window
 
     per_pred = partials.groupBy("entity_id", "pred").agg(

@@ -11,10 +11,13 @@ reference's JSON-lines request log):
                         └─────→ quarantine
 
 The ``edges`` stage commits the one edge table as the bucketed layout
-(operators/materialize.write_edges_bucketed): downstream subj_id
-joins/aggs read it shuffle-free and point lookups bucket-prune (BENCH.md
-bucketed section) — the KG is born co-located, as part of the resumable
-run rather than a separate job.
+(operators/materialize.write_edges_bucketed), one bucket per core of
+the session, written one task per bucket: downstream subj_id joins/aggs
+read it shuffle-free and point lookups bucket-prune (BENCH.md bucketed
+section) — the KG is born co-located, as part of the resumable run
+rather than a separate job. Its commit record carries the bucket count,
+so a resumed run re-attaches the table with the count it was written
+with, whatever the resuming session's width.
 
 Commits cost no Spark job beyond the write itself. The record's row
 counts are read from the parquet footers of the files the write just
@@ -55,7 +58,12 @@ from transner_spark.operators.materialize import (
     materialize_edges,
     write_edges_bucketed,
 )
-from transner_spark.sources.catalog import Catalog, append_record, task_row_counts
+from transner_spark.sources.catalog import (
+    Catalog,
+    append_record,
+    read_records,
+    task_row_counts,
+)
 
 STAGES = (
     "annotated",
@@ -90,10 +98,11 @@ class PipelineRun:
         self.stages_skipped: list[str] = []
 
     # -- commit record -------------------------------------------------
-    def _commit(self, stage: str, t0: float) -> None:
+    def _commit(self, stage: str, t0: float, **layout: int) -> None:
         """Record ``stage`` as committed: append one line to the workdir's
         METRICS.jsonl with its rows per write task (from the parquet
-        footers, so no Spark job) and its wall time. The wall runs from
+        footers, so no Spark job), its wall time and any ``layout`` facts
+        a reader needs (the ``edges`` bucket count). The wall runs from
         ``t0``, taken before the stage's plan is built: building can
         checkpoint eagerly (links, canonical), and that work belongs to
         the stage. A stage that wrote no file records 0 rows, so every
@@ -110,9 +119,28 @@ class PipelineRun:
                 "task_rows": {str(t): n for t, n in sorted(counts.items())},
                 "wall_ms": wall_ms,
                 "committed_at": datetime.now(timezone.utc).isoformat(),
+                **layout,
             },
         )
         self.stages_run.append(stage)
+
+    def recorded_buckets(self) -> int:
+        """The committed ``edges`` table's bucket count, from the newest
+        ``edges`` commit record. Raises when no record carries one: the
+        table was written before counts were recorded, and guessing a
+        count would bind the files to the wrong buckets."""
+        try:
+            records = read_records(self.catalog.root)
+        except FileNotFoundError:
+            records = []
+        edges = [r for r in records if r.get("stage") == "edges"]
+        if not edges or "buckets" not in edges[-1]:
+            raise RuntimeError(
+                f"{self.catalog.path('edges')} is committed, but no commit "
+                "record gives its bucket count (it predates recorded counts); "
+                "delete that directory and rerun to rebuild the edges stage"
+            )
+        return edges[-1]["buckets"]
 
     def _done(self, stage: str) -> bool:
         if self.catalog.exists(stage):
@@ -161,13 +189,15 @@ class PipelineRun:
         edges_path = self.catalog.path("edges")
         if not self._done("edges"):
             t0 = time.monotonic()
-            edges = materialize_edges(out["triples"], out["canonical"], cfg)
-            write_edges_bucketed(edges, self.edges_table, edges_path, cfg)
-            self._commit("edges", t0)
+            edges = materialize_edges(out["triples"], out["canonical"])
+            buckets = write_edges_bucketed(edges, self.edges_table, edges_path)
+            self._commit("edges", t0, buckets=buckets)
         else:
-            # resumed run / fresh session: re-attach the bucket spec so
-            # downstream reads keep the zero-Exchange property
-            ensure_edges_bucketed_table(self.spark, self.edges_table, edges_path, cfg)
+            # resumed run / fresh session: re-attach the recorded bucket
+            # spec so downstream reads keep the zero-Exchange property
+            ensure_edges_bucketed_table(
+                self.spark, self.edges_table, edges_path, self.recorded_buckets()
+            )
         # read through the catalog entry, never the bare path
         out["edges"] = self.spark.table(self.edges_table)
         return out

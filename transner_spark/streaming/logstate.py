@@ -855,9 +855,7 @@ def stream_edge_increments_log(
         input_dir,
         state_dir,
         checkpoint_dir,
-        make_increment=lambda b, _bid: materialize_edges(
-            explode_triples(b), canon, cfg
-        ),
+        make_increment=lambda b, _bid: materialize_edges(explode_triples(b), canon),
         rollup=merge_edge_increments,
         cfg=cfg,
         max_files_per_trigger=max_files_per_trigger,
@@ -1113,7 +1111,7 @@ def stream_pipeline_log(
             if d.startswith("v") and d not in keep:
                 shutil.rmtree(os.path.join(links_dir, d), ignore_errors=True)
         canon = canonicalize(sess.read.parquet(links_path))
-        return materialize_edges(triples, canon, cfg)
+        return materialize_edges(triples, canon)
 
     return _stream_log_maintenance(
         spark,
